@@ -6,7 +6,7 @@ Runs the benchmark once per seed (sequentially, from the current
 directory) and prints, for each end-to-end metric, the median of the
 runs and the distance between their first and third quartiles as a
 share of the median -- the figure BENCHMARK.json's `bound` must
-exceed.  Results are appended as JSON lines to `--out` when given.
+exceed.  Each run measures BENCHMARK.json's `run_seconds`.
 """
 
 from __future__ import annotations
@@ -26,19 +26,16 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", default="1-10", help="first-last, inclusive")
-    ap.add_argument("--seconds", type=int)
-    ap.add_argument("--out")
     args = ap.parse_args()
     with open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")) as f:
         bench = json.load(f)
-    seconds = args.seconds or bench["run_seconds"]
     first, last = map(int, args.seeds.split("-"))
     values: dict[str, list[float]] = {}
     for seed in range(first, last + 1):
         t0 = time.perf_counter()
         proc = subprocess.run(
             [*bench["command"], "--workload", args.workload, "--seed", str(seed),
-             "--seconds", str(seconds), "--trace", "0"],
+             "--seconds", str(bench["run_seconds"]), "--trace", "0"],
             capture_output=True, text=True,
         )
         wall = time.perf_counter() - t0
@@ -49,10 +46,6 @@ def main() -> int:
         row = {k: v["value"] for k, v in result["metrics"].items()}
         print(f"seed {seed} ({wall:.0f} s): "
               + ", ".join(f"{k}={v:.4g}" for k, v in row.items()), flush=True)
-        if args.out:
-            with open(args.out, "a") as f:
-                f.write(json.dumps({"workload": args.workload, "seed": seed,
-                                    "wall_s": wall, **row}) + "\n")
         for k, v in row.items():
             values.setdefault(k, []).append(v)
     bounds = {m["name"]: m["bound"] for m in bench["end_to_end"]}

@@ -99,10 +99,11 @@ class Tracer:
 
     def summary(self, n_ops: int) -> dict[str, float]:
         """Per-layer metrics over the traced operations: `<name>.s` is
-        the mean inclusive seconds per operation, `<name>.self_s` the
-        mean self time (duration minus the union of its children), and
-        `trace.self_sum_frac` checks that self times add up to the
-        operations' wall time."""
+        the mean inclusive seconds per operation and `<name>.self_s`
+        the mean self time (duration minus the union of its children).
+        The spans of an operation nest under its root `op` span, so
+        their self times add up to the operation's wall time, and
+        `op.self_s` is the part no layer span covers."""
         children: dict[int, list[Span]] = defaultdict(list)
         for s in self.spans:
             if s.parent is not None:
@@ -110,21 +111,17 @@ class Tracer:
         total: dict[str, float] = defaultdict(float)
         self_total: dict[str, float] = defaultdict(float)
         calls: dict[str, int] = defaultdict(int)
-        op_wall = 0.0
         for s in self.spans:
             dur = s.end - s.start
             total[s.name] += dur
             self_total[s.name] += dur - _covered(children[s.span_id])
             calls[s.name] += 1
-            if s.parent is None:
-                op_wall += dur
         n = max(n_ops, 1)
         out: dict[str, float] = {}
         for name in total:
             out[f"{name}.s"] = total[name] / n
             out[f"{name}.self_s"] = self_total[name] / n
             out[f"{name}.calls_per_op"] = calls[name] / n
-        out["trace.self_sum_frac"] = sum(self_total.values()) / op_wall if op_wall else 0.0
         return out
 
 
@@ -152,6 +149,7 @@ class SparkCounters:
         self.store = self.sc._jsc.sc().statusStore()
         self.totals: dict[str, float] = defaultdict(float)
         self.n_ops = 0
+        self.lock = threading.Lock()  # client threads record concurrently
 
     def group(self, op_id: int) -> str:
         name = f"bench-op-{op_id}"
@@ -170,11 +168,12 @@ class SparkCounters:
                 for attempt in _stage_attempts(self.store, stage_id):
                     stages += 1
                     shuffle += attempt.shuffleReadBytes() + attempt.shuffleWriteBytes()
-        self.totals["spark.jobs_per_op"] += len(job_ids)
-        self.totals["spark.stages_per_op"] += stages
-        self.totals["spark.tasks_per_op"] += tasks
-        self.totals["spark.shuffle_bytes_per_op"] += shuffle
-        self.n_ops += 1
+        with self.lock:
+            self.totals["spark.jobs_per_op"] += len(job_ids)
+            self.totals["spark.stages_per_op"] += stages
+            self.totals["spark.tasks_per_op"] += tasks
+            self.totals["spark.shuffle_bytes_per_op"] += shuffle
+            self.n_ops += 1
 
     def summary(self) -> dict[str, float]:
         n = max(self.n_ops, 1)

@@ -194,10 +194,12 @@ class _Endpoint(BaseHTTPRequestHandler):
 class ManifestIngest(Workload):
     items_per_op = gen.MANIFEST_METRICS - gen.MANIFEST_MALFORMED
 
-    # ingest time keeps falling over the first few manifests of a
-    # session (JIT, Python worker start-up: measured 4.5, 3.6, 3.7, 3.1,
-    # then ~2.8 s), so set-up ingests several before timing starts
-    WARMUP_MANIFESTS = 3
+    # the first ingest of a session takes ~3x a later one (JIT, Python
+    # worker start-up, code generation: measured 18.0 s, then 6.1, 5.7,
+    # 6.2, 5.7, 5.7, 5.0 s on a 4-core VM), so set-up ingests one
+    # manifest before timing starts; more warm-up manifests would buy
+    # little and cost ~5 s of every run
+    WARMUP_MANIFESTS = 1
 
     def make_inputs(self) -> None:
         self.warmup = []
@@ -281,8 +283,8 @@ def _tree_stats(path: str) -> tuple[int, int]:
 
 class CorpusIngest(Workload):
     """One operation = one arriving batch: quality filter, dedup against
-    the MinHash index, append to both stores, then serve query batches
-    from the IVF-PQ store."""
+    the MinHash index, append to both stores, then serve one query
+    batch from the IVF-PQ store."""
 
     items_per_op = gen.BATCH_DOCS
 
@@ -327,15 +329,12 @@ class CorpusIngest(Workload):
             f.write(self.batch.jsonl)
         pq.write_table(gen.embeddings_table(self.batch.ids, self.batch.embeddings), self.emb_path)
         self.input_bytes += os.path.getsize(self.jsonl) + os.path.getsize(self.emb_path)
-        self.query_paths = []
-        for q in range(gen.QUERY_BATCHES):
-            path = os.path.join(self.batch_dir, f"queries_{i}_{q}.parquet")
-            vecs = self.corpus.queries(gen.QUERIES_PER_BATCH)
-            table = gen.embeddings_table(list(range(len(vecs))), vecs).rename_columns(
-                ["query_id", "embedding"]
-            )
-            pq.write_table(table, path)
-            self.query_paths.append(path)
+        self.query_path = os.path.join(self.batch_dir, f"queries_{i}.parquet")
+        vecs = self.corpus.queries(gen.QUERIES_PER_BATCH)
+        table = gen.embeddings_table(list(range(len(vecs))), vecs).rename_columns(
+            ["query_id", "embedding"]
+        )
+        pq.write_table(table, self.query_path)
 
     def op(self, i: int):
         spark, span = self.spark, self.tracer.span
@@ -358,19 +357,18 @@ class CorpusIngest(Workload):
             ids = survivors.select(F.col("doc_id").alias("vec_id"))
             emb = spark.read.parquet(self.emb_path).join(ids, "vec_id", "left_semi")
             similarity.ivf_pq_index_upsert(emb, self.store_dir)
-        self.ingest_s.append(time.perf_counter() - t0)
-        served = []
-        for path in self.query_paths:
-            t0 = time.perf_counter()
-            with span("operators.similarity.read_ivf_pq_index"):
-                parts = similarity.read_ivf_pq_index(spark, self.store_dir)
-            with span("operators.similarity.ivf_pq_batch_serve"):
-                df = similarity.ivf_pq_batch_serve(
-                    parts["assignments"], parts["centroids"], parts["codes"],
-                    parts["codebooks"], spark.read.parquet(path),
-                )
-                served.append((path, self.action(df.collect)))
-            self.ann_query_s.append(time.perf_counter() - t0)
+        t1 = time.perf_counter()
+        with span("operators.similarity.read_ivf_pq_index"):
+            parts = similarity.read_ivf_pq_index(spark, self.store_dir)
+        with span("operators.similarity.ivf_pq_batch_serve"):
+            df = similarity.ivf_pq_batch_serve(
+                parts["assignments"], parts["centroids"], parts["codes"],
+                parts["codebooks"], spark.read.parquet(self.query_path),
+            )
+            served = self.action(df.collect)
+        t2 = time.perf_counter()
+        self.ingest_s.append(t1 - t0)
+        self.ann_query_s.append(t2 - t1)
         return n_quarantined, kept, survivors, served
 
     def after(self, i: int, result) -> str | None:
@@ -393,8 +391,8 @@ class CorpusIngest(Workload):
             )
         if removed - b.dup_ids:
             problems.append(f"dedup removed {len(removed - b.dup_ids)} unique documents")
-        if any(len(rows) != 10 * gen.QUERIES_PER_BATCH for _, rows in self.served):
-            problems.append("a served query batch did not return 10 results per query")
+        if len(self.served) != 10 * gen.QUERIES_PER_BATCH:
+            problems.append("the served query batch did not return 10 results per query")
         return f"batch {i}: " + "; ".join(problems) if problems else None
 
     def finish(self):
@@ -410,17 +408,14 @@ class CorpusIngest(Workload):
         removed_frac = self.removed_planted / max(self.planted, 1)
         if removed_frac < gen.DEDUP_FLOOR:
             failures.append(f"dedup removed {removed_frac:.3f} of planted duplicates")
-        # recall of the last batch's serves: the store has not changed since
+        # recall of the last batch's serve: the store has not changed since
         corpus = parts["assignments"].select(
             F.col("id").alias("vec_id"), F.col("vec").alias("embedding")
         )
-        hits = total = 0
-        for path, rows in self.served:
-            exact = similarity.cosine_topk_multi(corpus, spark.read.parquet(path), k=10)
-            truth = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
-            hits += len(truth & {(r["query_id"], r["vec_id"]) for r in rows})
-            total += len(truth)
-        recall = hits / max(total, 1)
+        exact = similarity.cosine_topk_multi(corpus, spark.read.parquet(self.query_path), k=10)
+        truth = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
+        served = {(r["query_id"], r["vec_id"]) for r in self.served}
+        recall = len(truth & served) / max(len(truth), 1)
         if recall < gen.RECALL_FLOOR:
             failures.append(f"ann_recall_at_10 {recall:.3f} below {gen.RECALL_FLOOR}")
         files = size = 0
