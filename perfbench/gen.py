@@ -407,7 +407,10 @@ def write_manifest(path: str, seed: int, index: int) -> ManifestFacts:
 # itself), so every planted duplicate is removable; near duplicates
 # change one word in ~50, Jaccard ~0.9 on word 3-shingles, well above
 # the 0.8 threshold.  Removed / planted must reach DEDUP_FLOOR.
-BASE_DOCS = 3000
+# Building the two base stores is set-up time: 1,000 documents give
+# every cluster ~60 members and take ~10 s less to build than 3,000
+# on 4 cores, time a run spends on more measured operations instead.
+BASE_DOCS = 1000
 BATCH_DOCS = 400
 EXACT_DUP_RATE = 0.05
 NEAR_DUP_RATE = 0.05
@@ -419,7 +422,7 @@ N_CLUSTERS = 16
 CLUSTER_NOISE = 0.15
 QUERY_NOISE = 0.02
 # One query batch is served after each ingested batch.  Serving 16
-# queries takes ~3 s of a ~11 s operation on 4 cores, and the cost
+# queries takes ~2 s of a ~9 s operation on 4 cores, and the cost
 # grows with the number of queries (each probes a quarter of the
 # store), so more or larger batches per operation would make a run
 # too long for the benchmark's time limit.  Queries

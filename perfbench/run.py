@@ -17,6 +17,7 @@ See perfbench/README.md for the workloads and metrics.
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import shutil
@@ -154,12 +155,15 @@ class Runner:
 
     def sequential(self) -> float:
         """Operations one after another until `seconds` of them have
-        run.  A traced run runs at least two, so that a traced and an
-        untraced operation give the tracing overhead."""
+        run, and at least the workload's `min_ops`.  A traced run runs
+        at least two, so that a traced and an untraced operation give
+        the tracing overhead."""
         busy, times = 0.0, []
-        min_ops = 2 if self.tracer.enabled else 1
+        min_ops = max(self.wl.min_ops, 2 if self.tracer.enabled else 1)
         while busy < self.seconds or len(times) < min_ops:
             self.wl.prepare(len(times))
+            # no operation pays for Python garbage an earlier one left
+            gc.collect()
             times.append(self.one(len(times)))
             busy += times[-1]
         print("operation seconds: " + " ".join(f"{t:.2f}" for t in times), file=sys.stderr)

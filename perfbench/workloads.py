@@ -44,6 +44,9 @@ from tests.oracle import _norm_rows
 class Workload:
     concurrent = False
     items_per_op = 1
+    # a sequential run measures at least this many operations, even
+    # when fewer fill --seconds
+    min_ops = 1
 
     spark = None  # set by run.py once the session is up
 
@@ -195,11 +198,15 @@ class ManifestIngest(Workload):
     items_per_op = gen.MANIFEST_METRICS - gen.MANIFEST_MALFORMED
 
     # the first ingest of a session takes ~3x a later one (JIT, Python
-    # worker start-up, code generation: measured 18.0 s, then 6.1, 5.7,
-    # 6.2, 5.7, 5.7, 5.0 s on a 4-core VM), so set-up ingests one
-    # manifest before timing starts; more warm-up manifests would buy
-    # little and cost ~5 s of every run
-    WARMUP_MANIFESTS = 1
+    # worker start-up, code generation), and the next ones still get
+    # faster: after one warm-up manifest, six ingests on a 4-core VM took
+    # 5.17, 4.47, 4.11, 3.72, 3.31, 3.11 s, every layer's span shrinking
+    # alike.  How far along that curve a run's measured ingests fall
+    # varied with the host's speed, and so did their median.  Set-up
+    # ingests three manifests, and a run measures at least three, whose
+    # median leaves out one slow ingest.
+    WARMUP_MANIFESTS = 3
+    min_ops = 3
 
     def make_inputs(self) -> None:
         self.warmup = []
@@ -287,6 +294,9 @@ class CorpusIngest(Workload):
     batch from the IVF-PQ store."""
 
     items_per_op = gen.BATCH_DOCS
+    # one batch runs ~56 small Spark jobs, and consecutive batches of a
+    # run took 9.0-12.5 s on a 4-core VM; a run measures two
+    min_ops = 2
 
     def make_inputs(self) -> None:
         self.corpus = gen.Corpus(self.seed)
