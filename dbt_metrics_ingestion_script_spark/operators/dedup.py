@@ -81,18 +81,6 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     )
 
 
-def word_shingles_from_tokens(tokens: Column, n: int = 3) -> Column:
-    """n-word shingles from an already-tokenized array (compat shim for
-    callers that only have tokens; prefer word_shingles on the text)."""
-    windowed = F.transform(
-        F.sequence(F.lit(1), F.size(tokens) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(tokens, i, n)),
-    )
-    return F.when(F.size(tokens) < n, F.array(F.concat_ws(" ", tokens))).otherwise(
-        F.array_distinct(windowed)
-    )
-
-
 def shingle_frame(
     df: DataFrame, text_col: str, id_col: str, n: int = 3, hashed: bool = True
 ) -> DataFrame:
@@ -951,31 +939,6 @@ def embedding_near_pairs_against_index(
 # ---------------------------------------------------------------------------
 # X2c: SimHash
 # ---------------------------------------------------------------------------
-
-
-def simhash64_from_hashes(token_hashes: Column, n_tokens: Column) -> Column:
-    """64-bit SimHash from a *materialized* token-hash array: bit b of
-    the signature is 1 iff the sum over tokens of ±1 votes (sign of
-    token-hash bit b) is > 0, i.e. iff 2 * popcount_b > n_tokens.
-
-    64 independent scalar aggregates over the int array -- no per-token
-    64-element accumulator array to allocate (the naive fold rebuilds
-    one per token), and the ±1 vote reduces to a bit-count comparison.
-    """
-    sig = F.lit(0).cast("bigint")
-    for b in range(64):
-        # bit 63 is the two's-complement sign bit: its set-value is the
-        # min-long literal
-        bit_val = (1 << b) if b < 63 else -(1 << 63)
-        ones = F.aggregate(
-            token_hashes, F.lit(0), lambda acc, h: acc + F.getbit(h, F.lit(b))
-        )
-        sig = sig.bitwiseOR(
-            F.when(ones * 2 > n_tokens, F.lit(bit_val).cast("bigint")).otherwise(
-                F.lit(0).cast("bigint")
-            )
-        )
-    return sig
 
 
 def simhash_signatures(

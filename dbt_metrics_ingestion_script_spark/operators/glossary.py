@@ -60,16 +60,6 @@ def glossary_nodes(
     return root.unionByName(cats)
 
 
-def category_urns(metrics: DataFrame, glossary_root: str = "dbt_metrics") -> DataFrame:
-    """(category, category_urn) lookup frame (J3's broadcast side)."""
-    return distinct_categories(metrics).select(
-        "category",
-        glossary_node_urn(
-            F.concat_ws(".", F.lit(glossary_root), F.translate("category", "/", "."))
-        ).alias("category_urn"),
-    )
-
-
 def glossary_terms(metrics: DataFrame, glossary_root: str = "dbt_metrics") -> DataFrame:
     """One glossary term per metric: (term_urn, name, definition,
     parent_urn, term_source) + passthrough of unique_id/category.

