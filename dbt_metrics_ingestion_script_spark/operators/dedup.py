@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import family_hash, hash31, hash64
+from ..sinks import versioned
 
 # ---------------------------------------------------------------------------
 # normalization + shingling (shared by all text dedup)
@@ -1539,13 +1540,6 @@ def duplicate_clusters_incremental(
 # cluster-label store: the materialized prior for incremental maintenance
 # ---------------------------------------------------------------------------
 
-# layout mirrors the IVF+PQ store (operators/similarity.py): versioned
-# dirs under base_path with a `_current` pointer written LAST via atomic
-# os.replace, so a reader never sees a half-written store and two
-# concurrent builders race only at the rename (the loser discards its
-# identical, deterministic build).
-_LABELS_CURRENT = "_current"
-
 
 def materialize_label_store(
     pairs: DataFrame,
@@ -1566,35 +1560,19 @@ def materialize_label_store(
 
     Idempotent: a published store is a no-op (built once per corpus,
     amortized over every batch folded into it -- the
-    materialize_ivf_pq_index posture).  Atomicity: labels land in a
-    private temp dir, promoted with ONE os.rename to `v1/`, pointer
-    published LAST (atomic os.replace)."""
+    materialize_ivf_pq_index posture).  Atomicity: the labels are
+    staged in a private dir and promoted by versioned.publish, the
+    IVF-PQ store's protocol (sinks/versioned.py)."""
     import os
-    import shutil
-    import uuid
 
-    if os.path.exists(os.path.join(base_path, _LABELS_CURRENT)):
+    if versioned.is_published(base_path):
         return
     labels = duplicate_clusters_star(
         pairs, id_a=id_a, id_b=id_b, materialize="leaf"
     )
-    os.makedirs(base_path, exist_ok=True)
-    tmp = os.path.join(base_path, f".build_{uuid.uuid4().hex[:8]}")
-    labels.write.mode("overwrite").parquet(os.path.join(tmp, "labels"))
-    try:
-        os.rename(tmp, os.path.join(base_path, "v1"))
-    except OSError:
-        # lost the publish race: the winner's build is bit-identical
-        # (deterministic clustering), drop ours
-        shutil.rmtree(tmp, ignore_errors=True)
-    ptr_tmp = os.path.join(
-        base_path, f".{_LABELS_CURRENT}.{uuid.uuid4().hex[:8]}"
-    )
-    with open(ptr_tmp, "w") as f:
-        f.write("v1\n")
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(ptr_tmp, os.path.join(base_path, _LABELS_CURRENT))
+    staged = versioned.staging_dir(base_path, "build")
+    labels.write.mode("overwrite").parquet(os.path.join(staged, "labels"))
+    versioned.publish(base_path, staged)
 
 
 def read_label_store(spark, base_path: str) -> DataFrame:
@@ -1603,14 +1581,6 @@ def read_label_store(spark, base_path: str) -> DataFrame:
     as the IVF+PQ store reader."""
     import os
 
-    ptr = os.path.join(base_path, _LABELS_CURRENT)
-    with open(ptr) as f:
-        version = f.read().strip()
-    vdir = os.path.join(base_path, version)
-    if not os.path.isdir(vdir):
-        raise FileNotFoundError(
-            f"corrupt label store at {base_path}: {_LABELS_CURRENT} "
-            f"points at {version!r} but that version directory does "
-            "not exist"
-        )
-    return spark.read.parquet(os.path.join(vdir, "labels"))
+    return spark.read.parquet(
+        os.path.join(versioned.resolve(base_path), "labels")
+    )

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash64
+from ..sinks import versioned
 
 
 def as_double(col: Column | str) -> Column:
@@ -1615,193 +1616,12 @@ def ivf_pq_batch_recall(
 
 _INDEX_PARTS = ("assignments", "centroids", "codes", "codebooks")
 
-# The store is VERSIONED (VERDICT r12 item 2, the metric-store
-# write-to-vN-then-swap discipline applied to the serving index):
-#
-#     base_path/
-#       v1/ assignments/ codes/ centroids/ codebooks/ [deletes/]
-#       v2/ ...
-#       _current            <- tiny pointer file, written LAST (atomic
-#                              os.replace), names the serving version
-#
-# Readers resolve the pointer ONCE per query / micro-batch
-# (resolve_ivf_pq_store) and then read only inside that version dir, so
-# a compaction publishing v{N+1} never races a reader: the old version
-# dir is RETAINED until vacuum_ivf_pq_index explicitly prunes it, and a
-# reader pinned on v{N} keeps a complete, immutable-layout snapshot.
-_CURRENT_POINTER = "_current"
-
-# append-only publish history: one `{version} {unix_ts}` line per
-# pointer publish -- feeds vacuum's retention lease
-_PUBLISH_LOG = "_publish_log"
-
-
-def resolve_ivf_pq_store(base_path: str) -> str:
-    """Resolve a store base path to its CURRENT version directory.
-
-    Reads the `_current` pointer file (one atomic pointer read per
-    query/micro-batch -- the whole concurrency contract); a store
-    written before versioning existed (parts directly under base_path)
-    resolves to base_path itself, so legacy stores stay readable.
-
-    A pointer naming a version directory that does not exist (a
-    corrupted or hand-edited store) raises a clear FileNotFoundError
-    naming both the pointer and the missing version (ADVICE r13) --
-    never a confusing downstream parquet-path error."""
-    import os
-
-    ptr = os.path.join(base_path, _CURRENT_POINTER)
-    try:
-        with open(ptr) as f:
-            version = f.read().strip()
-    except FileNotFoundError:
-        if os.path.exists(
-            os.path.join(base_path, "assignments", "_SUCCESS")
-        ):
-            return base_path  # legacy unversioned layout
-        raise FileNotFoundError(
-            f"no IVF+PQ store at {base_path}: neither a {_CURRENT_POINTER} "
-            "pointer nor a legacy unversioned layout"
-        ) from None
-    vdir = os.path.join(base_path, version)
-    if not os.path.isdir(vdir):
-        raise FileNotFoundError(
-            f"corrupt IVF+PQ store at {base_path}: {_CURRENT_POINTER} "
-            f"points at {version!r} but that version directory does not "
-            "exist"
-        )
-    return vdir
-
-
-def _ivf_pq_store_exists(base_path: str) -> bool:
-    import os
-
-    if os.path.exists(os.path.join(base_path, _CURRENT_POINTER)):
-        return True
-    return all(
-        os.path.exists(os.path.join(base_path, p, "_SUCCESS"))
-        for p in _INDEX_PARTS
-    )
-
-
-def _publish_ivf_pq_version(base_path: str, version: str) -> None:
-    """Atomically point `_current` at `version`: write a private temp
-    file, fsync, then os.replace -- a reader sees either the old
-    pointer or the new one, never a torn write.
-
-    Each publish also APPENDS a `{version} {unix_ts}` line to the
-    `_publish_log` sidecar (after the pointer swap): the supersession
-    timestamps vacuum_ivf_pq_index's retention lease is computed from
-    (VERDICT r13 item 6).  The append is advisory bookkeeping -- a
-    store missing the log (pre-lease layout) still reads and vacuums,
-    just without lease protection."""
-    import os
-    import time
-    import uuid
-
-    tmp = os.path.join(
-        base_path, f".{_CURRENT_POINTER}.{uuid.uuid4().hex[:8]}"
-    )
-    with open(tmp, "w") as f:
-        f.write(version + "\n")
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(base_path, _CURRENT_POINTER))
-    with open(os.path.join(base_path, _PUBLISH_LOG), "a") as f:
-        f.write(f"{version} {time.time():.6f}\n")
-
-
-def _read_publish_log(base_path: str) -> list[tuple[str, float]]:
-    """(version, publish_ts) entries in append order; [] if no log."""
-    import os
-
-    out = []
-    try:
-        with open(os.path.join(base_path, _PUBLISH_LOG)) as f:
-            for line in f:
-                parts = line.split()
-                if len(parts) == 2:
-                    try:
-                        out.append((parts[0], float(parts[1])))
-                    except ValueError:
-                        continue
-    except OSError:
-        return []
-    return out
-
-
-def vacuum_ivf_pq_index(
-    base_path: str, retain_sec: float = 0.0
-) -> list[str]:
-    """Prune RETAINED non-current version directories (and any legacy
-    unversioned parts superseded by a versioned compaction).
-    Explicitly separate from the swap itself so a reader pinned on the
-    previous version across a concurrent compaction keeps its snapshot.
-    Returns the removed paths.
-
-    Retention lease (VERDICT r13 item 6): a superseded version is
-    REFUSED (skipped, not removed) until it has been superseded for at
-    least `retain_sec` seconds -- supersession time is the publish
-    timestamp of the first `_publish_log` entry AFTER the version's own
-    last publish (legacy unversioned parts count as superseded at the
-    first publish ever).  Readers resolve the pointer once per
-    query/micro-batch, so `retain_sec` >= the longest query/batch you
-    run makes vacuum safe against pinned readers without coordination.
-    The default 0.0 preserves the caller-judges-safety behavior.  A
-    version never published (an orphan from a crashed maintenance run)
-    has no lease and is always removable.  Only in-flight maintenance
-    is outside the lease: rebuild/compaction stage under dot-prefixed
-    temp dirs which vacuum never touches, so a concurrent half-written
-    next version is safe too."""
-    import os
-    import shutil
-    import time
-
-    cur_dir = resolve_ivf_pq_store(base_path)
-    if os.path.realpath(cur_dir) == os.path.realpath(base_path):
-        return []  # legacy unversioned store: nothing is superseded
-    current = os.path.basename(cur_dir)
-    log = _read_publish_log(base_path)
-    now = time.time()
-
-    def lease_expired(entry: str, is_version: bool) -> bool:
-        if retain_sec <= 0 or not log:
-            return True
-        if is_version:
-            last_pub = max(
-                (i for i, (v, _) in enumerate(log) if v == entry),
-                default=None,
-            )
-            if last_pub is None:
-                return True  # never published: crashed-run orphan
-            superseded_at = min(
-                (ts for _, ts in log[last_pub + 1 :]), default=None
-            )
-        else:
-            # legacy bare parts: superseded by the first publish ever
-            superseded_at = log[0][1]
-        if superseded_at is None:
-            return True  # not yet superseded would mean current; defensive
-        return now - superseded_at >= retain_sec
-
-    removed = []
-    for entry in sorted(os.listdir(base_path)):
-        p = os.path.join(base_path, entry)
-        if not os.path.isdir(p):
-            continue
-        is_version = entry.startswith("v") and entry[1:].isdigit()
-        is_legacy_part = entry in _INDEX_PARTS or entry in (
-            "deletes",
-            _HEALTH_PART,
-        )
-        if (
-            (is_version or is_legacy_part)
-            and entry != current
-            and lease_expired(entry, is_version)
-        ):
-            shutil.rmtree(p, ignore_errors=True)
-            removed.append(p)
-    return removed
+# The store is VERSIONED (VERDICT r12 item 2): each build, compaction
+# and rebuild lands in its own `v{N}/` directory holding the four parts
+# (plus `health/` and, after a delete, `deletes/`), and readers resolve
+# the store's pointer ONCE per query / micro-batch, so a compaction
+# publishing v{N+1} never races a reader.  The pointer protocol lives
+# in sinks/versioned.py.
 
 
 # assignment-quality history (VERDICT r12 item 6): one row per build /
@@ -1864,7 +1684,7 @@ def ivf_pq_store_health(
     import os
 
     h = spark.read.parquet(
-        os.path.join(resolve_ivf_pq_store(base_path), _HEALTH_PART)
+        os.path.join(versioned.resolve(base_path), _HEALTH_PART)
     )
     base = (
         h.where(F.col("kind") == "build")
@@ -1893,6 +1713,58 @@ def ivf_pq_store_health(
     )
 
 
+def _write_ivf_pq_build(
+    corpus: DataFrame,
+    out_dir: str,
+    n_centroids: int,
+    m: int,
+    n_codes: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+) -> None:
+    """Train the IVF + PQ index on `corpus` and write the production
+    layout under out_dir: assignments and codes land
+    `partitionBy("centroid_id")` so probe-time scans prune to the
+    probed cells' files; centroids and codebooks are KB-sized plain
+    tables; the health part gets its build-time baseline row.
+
+    codes carry centroid_id (joined from assignments) purely as the
+    partition key, so the ADC stage can ALSO prune to probed cells.
+    The builds are lazy-checkpointed so the k-means and PQ assignment
+    run ONCE across the four writes, not once per action (assignments
+    feeds both its own write and the cells join into the codes
+    write)."""
+    import os
+
+    assignments, centroids = ivf_index(
+        corpus, n_centroids, id_col, vec_col,
+        lazy_checkpoint=True, keep_d2=True,
+    )
+    codes, codebooks = pq_encode(
+        corpus, m=m, n_codes=n_codes, dim=dim,
+        id_col=id_col, vec_col=vec_col, lazy_checkpoint=True,
+    )
+    cells = assignments.select("id", "centroid_id")
+    assignments.drop("d2").write.mode("overwrite").partitionBy(
+        "centroid_id"
+    ).parquet(os.path.join(out_dir, "assignments"))
+    # build-time drift baseline: the d2 column rides the SAME lazy
+    # checkpoint as the assignments write -- no extra assignment pass
+    _append_health_row(
+        assignments.select("d2"), out_dir, kind="build", seq=0
+    )
+    codes.join(cells, "id").write.mode("overwrite").partitionBy(
+        "centroid_id"
+    ).parquet(os.path.join(out_dir, "codes"))
+    centroids.write.mode("overwrite").parquet(
+        os.path.join(out_dir, "centroids")
+    )
+    codebooks.write.mode("overwrite").parquet(
+        os.path.join(out_dir, "codebooks")
+    )
+
+
 def materialize_ivf_pq_index(
     embeddings: DataFrame,
     base_path: str,
@@ -1904,89 +1776,33 @@ def materialize_ivf_pq_index(
     vec_col: str = "embedding",
     upsert: DataFrame | None = None,
 ) -> None:
-    """Build the IVF + PQ index ONCE and write it as the production
-    layout: assignments and codes land `partitionBy("centroid_id")` so
-    probe-time scans prune to the probed cells' files; centroids and
-    codebooks are KB-sized plain tables.  Idempotent: if every part
-    already exists under base_path, this is a no-op -- the index is
-    built once per corpus, amortized over every query batch served
-    from it (the posture each inline ivf_* docstring promises).
+    """Build the IVF + PQ index ONCE (_write_ivf_pq_build) and publish
+    it as the store's first version.  Idempotent: once any version is
+    published under base_path this is a no-op -- the index is built
+    once per corpus, amortized over every query batch served from it
+    (the posture each inline ivf_* docstring promises).
 
-    codes carry centroid_id (joined from assignments) purely as the
-    partition key, so the ADC stage can ALSO prune to probed cells.
+    Atomicity (ADVICE r11 + VERDICT r12 item 2): the build is staged in
+    a private dir and promoted by versioned.publish (one rename, the
+    pointer written last), so a reader never sees a half-written
+    store.  Two builders racing on an empty store both publish their
+    identical, deterministic builds (v1 and v2); a builder that crashed
+    between its rename and its pointer write leaves an unpublished v1
+    that the next build skips and vacuum removes.
 
-    Atomicity (ADVICE r11 + VERDICT r12 item 2): the four parts are
-    written into a private temp dir under base_path, promoted with ONE
-    os.rename to `v1/`, and the `_current` pointer is published LAST
-    (atomic os.replace) -- a reader never sees a half-written store,
-    and two concurrent builders race only at the rename (the loser
-    discards its identical, deterministic build).  The builds are
-    lazy-checkpointed so the k-means and PQ assignment run ONCE across
-    the four writes, not once per action (assignments feeds both its
-    own write and the cells join into the codes write).
-    """
-    import os
-    import shutil
-    import uuid
-
-    if _ivf_pq_store_exists(base_path):
+    `upsert`, if given, is an ingestion batch appended to the staged
+    build BEFORE it is published: base build + upsert are one atomic,
+    idempotent unit (re-running the sequence against a published store
+    is the no-op above, never a double append)."""
+    if versioned.is_published(base_path):
         return
-    assignments, centroids = ivf_index(
-        embeddings, n_centroids, id_col, vec_col,
-        lazy_checkpoint=True, keep_d2=True,
-    )
-    codes, codebooks = pq_encode(
-        embeddings, m=m, n_codes=n_codes, dim=dim,
-        id_col=id_col, vec_col=vec_col, lazy_checkpoint=True,
-    )
-    cells = assignments.select("id", "centroid_id")
-    os.makedirs(base_path, exist_ok=True)
-    tmp = os.path.join(base_path, f".build_{uuid.uuid4().hex[:8]}")
-    assignments.drop("d2").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(os.path.join(tmp, "assignments"))
-    # build-time drift baseline: the d2 column rides the SAME lazy
-    # checkpoint as the assignments write -- no extra assignment pass
-    _append_health_row(
-        assignments.select("d2"), tmp, kind="build", seq=0
-    )
-    codes.join(cells, "id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(os.path.join(tmp, "codes"))
-    centroids.write.mode("overwrite").parquet(
-        os.path.join(tmp, "centroids")
-    )
-    codebooks.write.mode("overwrite").parquet(
-        os.path.join(tmp, "codebooks")
+    staged = versioned.staging_dir(base_path, "build")
+    _write_ivf_pq_build(
+        embeddings, staged, n_centroids, m, n_codes, dim, id_col, vec_col
     )
     if upsert is not None:
-        # an ingestion batch applied BEFORE the store is promoted: the
-        # rename + pointer publish make base-build + upsert one atomic,
-        # idempotent unit (re-running the sequence against an existing
-        # store is the no-op above, never a double append).  The temp
-        # dir is a legacy-layout store, which resolve_ivf_pq_store
-        # understands, so the upsert applies to it directly.
-        ivf_pq_index_upsert(
-            upsert, tmp, m=m, dim=dim, id_col=id_col, vec_col=vec_col
-        )
-    v1 = os.path.join(base_path, "v1")
-    try:
-        os.rename(tmp, v1)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.isdir(v1):
-            # NOT the concurrent-winner race (v1 never landed): a
-            # genuine failure -- re-raise rather than publishing a
-            # dangling pointer at a nonexistent version (ADVICE r13)
-            raise
-        # a concurrent builder promoted its (identical, deterministic)
-        # store first; ours is redundant
-    if os.path.isdir(v1) and not os.path.exists(
-        os.path.join(base_path, _CURRENT_POINTER)
-    ):
-        # publish LAST; also repairs a store whose builder crashed
-        # between the rename and the pointer write
-        _publish_ivf_pq_version(base_path, "v1")
+        _ivf_pq_append(upsert, staged, m, dim, id_col, vec_col)
+    versioned.publish(base_path, staged)
 
 
 def ivf_pq_index_upsert(
@@ -2001,11 +1817,11 @@ def ivf_pq_index_upsert(
     (VERDICT r11 item 3): assign the new batch to the EXISTING
     centroids (no re-clustering), PQ-encode it against the EXISTING
     codebooks, and APPEND the new rows into the centroid_id partition
-    directories.  Untouched partitions' data files are never rewritten
-    (tests/test_ivf_index_upsert.py asserts byte-identity); centroids
-    and codebooks are immutable -- the IVF analogue of the dedup
-    signature index's append-only incremental family
-    (operators/dedup.py).
+    directories of the served version.  Untouched partitions' data
+    files are never rewritten (tests/test_ivf_index_upsert.py asserts
+    byte-identity); centroids and codebooks are immutable -- the IVF
+    analogue of the dedup signature index's append-only incremental
+    family (operators/dedup.py).
 
     Cost shape: ONE map-only pass over the NEW batch -- centroids and
     codebooks ride broadcasts, the argmin groupBys partial-aggregate,
@@ -2018,10 +1834,23 @@ def ivf_pq_index_upsert(
     rebuild_recommended flag once upserted batches stop fitting the
     Lloyd centroids.
     """
+    _ivf_pq_append(
+        new_embeddings, versioned.resolve(base_path), m, dim, id_col, vec_col
+    )
+
+
+def _ivf_pq_append(
+    new_embeddings: DataFrame,
+    store: str,
+    m: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+) -> None:
+    """The upsert's body, applied to one version directory `store`."""
     import os
 
     spark = new_embeddings.sparkSession
-    store = resolve_ivf_pq_store(base_path)
     centroids = spark.read.parquet(os.path.join(store, "centroids"))
     codebooks = spark.read.parquet(os.path.join(store, "codebooks"))
     vecs = new_embeddings.select(
@@ -2042,9 +1871,11 @@ def ivf_pq_index_upsert(
     # -- measured ~1,000 files from ONE sf0.1 upsert (32 tasks x 16
     # dirs x 2 parts), and every later serve paid the listing + footer
     # reads (+0.7 s, the r15/r16 upsert_served regression).  A
-    # batch-sized repartition on the partition column lands exactly
-    # one file per touched directory at any batch size (AQE splits a
-    # skewed cell if one ever dominates).
+    # batch-sized repartition on the partition column hashes each cell
+    # to exactly one task, so each touched directory gets exactly one
+    # file at any batch size.  A skewed cell stays in its one task:
+    # AQE splits skewed partitions of joins and rebalance(), never of a
+    # repartition by column.
     new_asg.drop("d2").repartition("centroid_id").write.mode(
         "append"
     ).partitionBy("centroid_id").parquet(
@@ -2080,7 +1911,7 @@ def ivf_pq_index_delete(ids: DataFrame, base_path: str) -> None:
     import os
 
     ids.select("id").write.mode("append").parquet(
-        os.path.join(resolve_ivf_pq_store(base_path), "deletes")
+        os.path.join(versioned.resolve(base_path), "deletes")
     )
 
 
@@ -2089,7 +1920,7 @@ def read_ivf_pq_index_deletes(spark, base_path: str) -> DataFrame | None:
     applied."""
     import os
 
-    p = os.path.join(resolve_ivf_pq_store(base_path), "deletes")
+    p = os.path.join(versioned.resolve(base_path), "deletes")
     if not os.path.exists(os.path.join(p, "_SUCCESS")):
         return None
     return spark.read.parquet(p)
@@ -2102,37 +1933,22 @@ def compact_ivf_pq_index(spark, base_path: str) -> None:
     batch -- at 100 TB that is the classic small-files listing/open tax
     on every probe.  Compaction rewrites assignments and codes with ONE
     file per cell (repartition on the partition column puts each cell
-    in exactly one task) into a fresh VERSION directory (v{N+1}), then
-    atomically republishes the `_current` pointer at it.  Contents are
-    byte-equal as SETS of rows; centroids/codebooks rewrite verbatim.
+    in exactly one task) into a staged dir and publishes it as the next
+    version.  Contents are byte-equal as SETS of rows;
+    centroids/codebooks rewrite verbatim.
 
     Reader-atomic (VERDICT r12 item 2): readers resolve the pointer
     once per query/micro-batch and see either v{N} or v{N+1}, both
     complete -- there is no gap a new reader can land in, and a reader
     pinned on v{N} keeps its snapshot because superseded versions are
-    RETAINED until vacuum_ivf_pq_index.  A crash before the pointer
-    write leaves an unreferenced v{N+1} dir (harmless; the next
-    compaction targets v{N+2}).  Single MAINTAINER per store, like the
-    upsert itself.  A legacy unversioned store is migrated: its
-    compaction lands in v1 + pointer, superseding the bare parts.
-
-    Staging (ADVICE r13): the rewrite lands in a dot-prefixed temp dir
-    and is promoted to v{N+1} with ONE os.rename before the pointer
-    publish -- matching rebuild_ivf_pq_index -- so a concurrent vacuum
-    (which only considers v* and legacy part dirs) can never rmtree a
-    half-written next version."""
+    RETAINED until versioned.vacuum.  A crash before the pointer write
+    leaves an unpublished version dir (harmless; the next publish skips
+    it and vacuum removes it).  Single MAINTAINER per store, like the
+    upsert itself."""
     import os
-    import shutil
-    import uuid
 
-    cur = resolve_ivf_pq_store(base_path)
-    if os.path.realpath(cur) == os.path.realpath(base_path):
-        next_n = 1  # legacy unversioned store: migrate into v1
-    else:
-        next_n = int(os.path.basename(cur)[1:]) + 1
-    while os.path.exists(os.path.join(base_path, f"v{next_n}")):
-        next_n += 1  # skip orphans from a crashed prior compaction
-    tmp = os.path.join(base_path, f".compact_{uuid.uuid4().hex[:8]}")
+    cur = versioned.resolve(base_path)
+    staged = versioned.staging_dir(base_path, "compact")
     # tombstones (ivf_pq_index_delete) are applied PHYSICALLY here:
     # the rewritten cells drop deleted rows and the deletes part is
     # not carried into the compacted store
@@ -2143,26 +1959,20 @@ def compact_ivf_pq_index(spark, base_path: str) -> None:
             df = df.join(F.broadcast(deletes), "id", "left_anti")
         df.repartition("centroid_id").write.partitionBy(
             "centroid_id"
-        ).parquet(os.path.join(tmp, part))
+        ).parquet(os.path.join(staged, part))
     for part in ("centroids", "codebooks"):
         spark.read.parquet(os.path.join(cur, part)).coalesce(
             1
-        ).write.parquet(os.path.join(tmp, part))
+        ).write.parquet(os.path.join(staged, part))
     # the assignment-quality history survives compaction verbatim: the
     # drift baseline is a property of the CENTROIDS (unchanged here),
     # not of the physical file layout
     hp = os.path.join(cur, _HEALTH_PART)
     if os.path.exists(os.path.join(hp, "_SUCCESS")):
         spark.read.parquet(hp).coalesce(1).write.parquet(
-            os.path.join(tmp, _HEALTH_PART)
+            os.path.join(staged, _HEALTH_PART)
         )
-    new = os.path.join(base_path, f"v{next_n}")
-    try:
-        os.rename(tmp, new)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    _publish_ivf_pq_version(base_path, f"v{next_n}")
+    versioned.publish(base_path, staged)
 
 
 def rebuild_ivf_pq_index(
@@ -2194,60 +2004,29 @@ def rebuild_ivf_pq_index(
     appends; at 100 TB this is the nightly/weekly job the drift flag
     schedules, not a per-ingest step."""
     import os
-    import shutil
-    import uuid
 
-    cur = resolve_ivf_pq_store(base_path)
-    if os.path.realpath(cur) == os.path.realpath(base_path):
-        next_n = 1  # legacy unversioned store: rebuild migrates to v1
-    else:
-        next_n = int(os.path.basename(cur)[1:]) + 1
-    while os.path.exists(os.path.join(base_path, f"v{next_n}")):
-        next_n += 1
+    cur = versioned.resolve(base_path)
     corpus = spark.read.parquet(os.path.join(cur, "assignments")).select(
         "id", "vec"
     )
     deletes = read_ivf_pq_index_deletes(spark, base_path)
     if deletes is not None:
         corpus = corpus.join(F.broadcast(deletes), "id", "left_anti")
-    assignments, centroids = ivf_index(
-        corpus, n_centroids, id_col="id", vec_col="vec",
-        lazy_checkpoint=True, keep_d2=True,
+    staged = versioned.staging_dir(base_path, "rebuild")
+    _write_ivf_pq_build(
+        corpus, staged, n_centroids, m, n_codes, dim, "id", "vec"
     )
-    codes, codebooks = pq_encode(
-        corpus, m=m, n_codes=n_codes, dim=dim,
-        id_col="id", vec_col="vec", lazy_checkpoint=True,
-    )
-    cells = assignments.select("id", "centroid_id")
-    tmp = os.path.join(base_path, f".rebuild_{uuid.uuid4().hex[:8]}")
-    assignments.drop("d2").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(os.path.join(tmp, "assignments"))
-    _append_health_row(
-        assignments.select("d2"), tmp, kind="build", seq=0
-    )
-    codes.join(cells, "id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(os.path.join(tmp, "codes"))
-    centroids.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-    codebooks.write.mode("overwrite").parquet(os.path.join(tmp, "codebooks"))
-    new = os.path.join(base_path, f"v{next_n}")
-    try:
-        os.rename(tmp, new)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    _publish_ivf_pq_version(base_path, f"v{next_n}")
+    versioned.publish(base_path, staged)
 
 
 def read_ivf_pq_index(spark, base_path: str) -> dict[str, DataFrame]:
     """Read back a materialize_ivf_pq_index store; keys _INDEX_PARTS.
-    Resolves the `_current` version pointer ONCE here, so every frame
+    Resolves the store's version pointer ONCE here, so every frame
     in the returned dict reads the same version snapshot even if a
     compaction republishes the pointer mid-query."""
     import os
 
-    store = resolve_ivf_pq_store(base_path)
+    store = versioned.resolve(base_path)
     return {
         p: spark.read.parquet(os.path.join(store, p))
         for p in _INDEX_PARTS

@@ -144,10 +144,19 @@ def dedup_containment_pairs(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+# the duplicate-cluster queries' pair graph (n-gram Jaccard >= this) and
+# their simulated ingest batch (doc_id % _DUP_BATCH_MOD == 0); the
+# label store's path tag reads both, so changing either builds a new
+# store instead of serving stale labels
+_DUP_PAIR_THRESHOLD = 0.2
+_DUP_BATCH_MOD = 7
+
+
 def _dup_clusters_oracle() -> str:
-    """Recursive-CTE min-label propagation over the same Jaccard>=0.2
-    edge set the pair query emits; converges to cluster_id = component
-    min, exactly what the Spark iterative loop computes."""
+    """Recursive-CTE min-label propagation over the same
+    Jaccard>=_DUP_PAIR_THRESHOLD edge set the pair graph emits;
+    converges to cluster_id = component min, exactly what the Spark
+    iterative loop computes."""
     edges = (
         _SHINGLE_CTE.replace("WITH docs AS (", "WITH RECURSIVE docs AS (", 1)
         + f"""
@@ -168,7 +177,7 @@ def _dup_clusters_oracle() -> str:
       GROUP BY 1, 2, 3, 4
     ), edges AS (
       SELECT id_a, id_b FROM jpairs
-      WHERE n_common / (n_a + n_b - n_common) >= 0.2
+      WHERE n_common / (n_a + n_b - n_common) >= {_DUP_PAIR_THRESHOLD}
     )"""
     )
     return (
@@ -191,7 +200,7 @@ def _dup_clusters_oracle() -> str:
 def _dup_pair_graph(spark, sf_dir):
     return dedup.ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"),
-        threshold=0.2,
+        threshold=_DUP_PAIR_THRESHOLD,
         df_max=dedup.NGRAM_DF_MAX,
     )
 
@@ -210,17 +219,19 @@ def dedup_duplicate_clusters(spark, sf_dir):
 def dedup_clusters_incremental_vs_corpus(spark, sf_dir):
     """Incremental component maintenance (VERDICT r6 next-round 4): the
     corpus-only pair graph (neither endpoint in the simulated ingest
-    batch, doc_id % 7 == 0) is clustered FIRST -- standing in for the
-    labels a previous run materialized -- and the batch's incident
-    edges are then folded in via `duplicate_clusters_incremental`:
-    batch nodes broadcast-probe the prior labels, old components
-    contract to their roots, only the batch-sized contracted graph
-    re-clusters, and untouched components pass through a broadcast
-    relabel join without being shuffled.  The oracle is the SAME full
-    recursive-CTE clustering over the whole graph -- incremental
-    maintenance must be indistinguishable from a from-scratch run."""
+    batch, doc_id % _DUP_BATCH_MOD == 0) is clustered FIRST --
+    standing in for the labels a previous run materialized -- and the
+    batch's incident edges are then folded in via
+    `duplicate_clusters_incremental`: batch nodes broadcast-probe the
+    prior labels, old components contract to their roots, only the
+    batch-sized contracted graph re-clusters, and untouched components
+    pass through a broadcast relabel join without being shuffled.  The
+    oracle is the SAME full recursive-CTE clustering over the whole
+    graph -- incremental maintenance must be indistinguishable from a
+    from-scratch run."""
     pairs = _dup_pair_graph(spark, sf_dir).persist()
-    in_batch_a, in_batch_b = F.col("id_a") % 7 == 0, F.col("id_b") % 7 == 0
+    in_batch_a = F.col("id_a") % _DUP_BATCH_MOD == 0
+    in_batch_b = F.col("id_b") % _DUP_BATCH_MOD == 0
     # prior labels as a LEAF: in production they come from a
     # materialized store, not a live lineage -- and the leaf keeps this
     # composed plan flat (the star's own caches are released inside)
@@ -246,8 +257,8 @@ def _label_store_path(sf_dir: str) -> str:
 
     fp = _parquet_fingerprint(os.path.join(sf_dir, "documents.parquet"))
     tag = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{fp}|t0.2|df{dedup.NGRAM_DF_MAX}"
-        f"|mod7".encode()
+        f"{os.path.realpath(sf_dir)}|{fp}|t{_DUP_PAIR_THRESHOLD}"
+        f"|df{dedup.NGRAM_DF_MAX}|mod{_DUP_BATCH_MOD}".encode()
     ).hexdigest()[:12]
     return os.path.join(
         tempfile.gettempdir(), f"spark_graft_label_store_{tag}"
@@ -273,7 +284,8 @@ def dedup_clusters_incremental_vs_corpus_served(spark, sf_dir):
     loop); the one-time store build adds the corpus-side pair scan.
     The inline variant stays registered as the oracle twin."""
     pairs = _dup_pair_graph(spark, sf_dir)
-    in_batch_a, in_batch_b = F.col("id_a") % 7 == 0, F.col("id_b") % 7 == 0
+    in_batch_a = F.col("id_a") % _DUP_BATCH_MOD == 0
+    in_batch_b = F.col("id_b") % _DUP_BATCH_MOD == 0
     store = _label_store_path(sf_dir)
     dedup.materialize_label_store(
         pairs.filter(~in_batch_a & ~in_batch_b), store

@@ -29,8 +29,8 @@ from ..operators.similarity import (
     as_double,
     ivf_pq_batch_serve,
     ivf_pq_index_upsert,
-    resolve_ivf_pq_store,
 )
+from ..sinks import versioned
 
 
 def stream_ingest_ivf_pq(
@@ -103,11 +103,11 @@ def stream_serve_ivf_pq(
         # the serve plan references the query frame 3x (probes,
         # subspace split, re-rank)
         qb2 = qb.localCheckpoint(eager=False)
-        # resolve the store's `_current` version pointer ONCE per
-        # micro-batch: every scan in this batch reads the same version
-        # snapshot, so a concurrent compaction republishing the pointer
-        # never tears a batch (VERDICT r12 item 2)
-        store = resolve_ivf_pq_store(store_path)
+        # resolve the store's version pointer ONCE per micro-batch:
+        # every scan in this batch reads the same version snapshot, so
+        # a concurrent compaction republishing the pointer never tears
+        # a batch (VERDICT r12 item 2)
+        store = versioned.resolve(store_path)
         cents = spark.read.parquet(os.path.join(store, "centroids"))
         books = spark.read.parquet(os.path.join(store, "codebooks"))
         # probe: nearest n_probe cells per query, collected driver-side

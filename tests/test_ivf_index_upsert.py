@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbt_metrics_ingestion_script_spark.operators import similarity
+from dbt_metrics_ingestion_script_spark.sinks import versioned
 from dbt_metrics_ingestion_script_spark.sources.tables import load_table
 
 
@@ -24,7 +25,7 @@ def _data_files(base_path: str) -> dict[str, str]:
     CURRENT version (markers like _SUCCESS are rewritten by append by
     design; superseded versions are retained separately for pinned
     readers and excluded here by resolving the pointer first)."""
-    store = similarity.resolve_ivf_pq_store(base_path)
+    store = versioned.resolve(base_path)
     out = {}
     for root, _, files in os.walk(store):
         for f in files:
@@ -40,7 +41,7 @@ def _data_files(base_path: str) -> dict[str, str]:
 def _part(spark, base_path: str, name: str):
     """Read one part of the store's current version (pointer-resolved)."""
     return spark.read.parquet(
-        os.path.join(similarity.resolve_ivf_pq_store(base_path), name)
+        os.path.join(versioned.resolve(base_path), name)
     )
 
 
@@ -291,7 +292,7 @@ def test_compaction_is_reader_atomic_via_version_pointer(
     reader.  A reader that resolved the pointer BEFORE a compaction
     keeps a complete v1 snapshot (retained, byte-identical) and its
     lazy frames still evaluate; a reader resolving AFTER sees v2; the
-    superseded version survives until vacuum_ivf_pq_index explicitly
+    superseded version survives until versioned.vacuum explicitly
     prunes it."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "store")
@@ -301,7 +302,7 @@ def test_compaction_is_reader_atomic_via_version_pointer(
     similarity.ivf_pq_index_upsert(emb.where(F.col("vec_id") % 5 == 4), path)
 
     # reader A pins v1: resolves the pointer once, holds lazy frames
-    v1 = similarity.resolve_ivf_pq_store(path)
+    v1 = versioned.resolve(path)
     assert os.path.basename(v1) == "v1"
     pinned = similarity.read_ivf_pq_index(spark, path)
     n_all = emb.count()
@@ -316,7 +317,7 @@ def test_compaction_is_reader_atomic_via_version_pointer(
     similarity.compact_ivf_pq_index(spark, path)
 
     # the pointer now names v2; v1 is RETAINED with every file intact
-    v2 = similarity.resolve_ivf_pq_store(path)
+    v2 = versioned.resolve(path)
     assert os.path.basename(v2) == "v2" and os.path.isdir(v1)
     v1_after = {
         os.path.relpath(os.path.join(root, f), v1)
@@ -339,61 +340,13 @@ def test_compaction_is_reader_atomic_via_version_pointer(
         assert f.read().strip() == "v2"
 
     # vacuum prunes exactly the superseded version
-    removed = similarity.vacuum_ivf_pq_index(path)
+    removed = versioned.vacuum(path)
     assert removed == [v1]
     assert not os.path.exists(v1) and os.path.isdir(v2)
     # and the current version still serves
     assert (
         similarity.read_ivf_pq_index(spark, path)["assignments"].count()
         == n_all - n_gone
-    )
-
-
-def test_legacy_unversioned_store_still_reads_and_migrates(
-    spark, sf_dir, tmp_path
-):
-    """A store written before versioning (parts directly under
-    base_path, no pointer) resolves to itself, upserts in place, and a
-    compaction MIGRATES it to v1 + pointer; vacuum then prunes the
-    superseded bare parts."""
-    import shutil
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    staging = str(tmp_path / "staging")
-    similarity.materialize_ivf_pq_index(
-        emb.where(F.col("vec_id") % 5 < 4), staging, n_centroids=8
-    )
-    # fabricate the legacy layout: copy v1's CONTENTS to a bare dir
-    legacy = str(tmp_path / "legacy")
-    shutil.copytree(similarity.resolve_ivf_pq_store(staging), legacy)
-    assert similarity.resolve_ivf_pq_store(legacy) == legacy
-    # vacuum on a legacy store is a no-op (nothing is superseded)
-    assert similarity.vacuum_ivf_pq_index(legacy) == []
-
-    n_base = emb.where(F.col("vec_id") % 5 < 4).count()
-    assert (
-        similarity.read_ivf_pq_index(spark, legacy)["assignments"].count()
-        == n_base
-    )
-    similarity.ivf_pq_index_upsert(emb.where(F.col("vec_id") % 5 == 4), legacy)
-    n_all = emb.count()
-    assert (
-        similarity.read_ivf_pq_index(spark, legacy)["assignments"].count()
-        == n_all
-    )
-    similarity.compact_ivf_pq_index(spark, legacy)
-    assert os.path.basename(similarity.resolve_ivf_pq_store(legacy)) == "v1"
-    assert (
-        similarity.read_ivf_pq_index(spark, legacy)["assignments"].count()
-        == n_all
-    )
-    removed = similarity.vacuum_ivf_pq_index(legacy)
-    assert {os.path.basename(p) for p in removed} == {
-        "assignments", "codes", "centroids", "codebooks", "health"
-    }
-    assert (
-        similarity.read_ivf_pq_index(spark, legacy)["assignments"].count()
-        == n_all
     )
 
 
@@ -486,7 +439,7 @@ def test_rebuild_retrains_resets_health_and_respects_tombstones(
     similarity.rebuild_ivf_pq_index(spark, path, n_centroids=8)
 
     # version bumped; pinned reader keeps its full pre-rebuild snapshot
-    assert os.path.basename(similarity.resolve_ivf_pq_store(path)) == "v2"
+    assert os.path.basename(versioned.resolve(path)) == "v2"
     assert pinned["assignments"].count() == n_before
 
     fresh = similarity.read_ivf_pq_index(spark, path)
@@ -537,13 +490,13 @@ def test_vacuum_retention_lease_refuses_young_versions(
     v1 = os.path.join(path, "v1")
     assert os.path.isdir(v1)
     # publish log carries one line per publish: v1 (build), v2 (compact)
-    log = similarity._read_publish_log(path)
+    log = versioned.read_publish_log(path)
     assert [v for v, _ in log] == ["v1", "v2"]
     # v1 was superseded seconds ago: a 1h lease refuses to remove it
-    assert similarity.vacuum_ivf_pq_index(path, retain_sec=3600.0) == []
+    assert versioned.vacuum(path, retain_sec=3600.0) == []
     assert os.path.isdir(v1)
     # horizon elapsed (0s lease): the same vacuum prunes it
-    assert similarity.vacuum_ivf_pq_index(path, retain_sec=0.0) == [v1]
+    assert versioned.vacuum(path, retain_sec=0.0) == [v1]
     assert not os.path.exists(v1)
 
 
@@ -552,7 +505,7 @@ def test_vacuum_never_touches_inflight_maintenance_dirs(
 ):
     """ADVICE r13: compaction/rebuild stage under dot-prefixed temp
     dirs and promote with one rename, so a concurrent vacuum -- which
-    only considers v* and legacy part dirs -- can never rmtree a
+    only considers v{N} dirs -- can never rmtree a
     half-written next version.  Pin the invariant: a staged dir
     survives vacuum; compaction leaves no stray staging dirs behind."""
     emb = load_table(spark, sf_dir, "embeddings").where(
@@ -563,7 +516,7 @@ def test_vacuum_never_touches_inflight_maintenance_dirs(
     staged = os.path.join(path, ".compact_deadbeef")
     os.makedirs(os.path.join(staged, "assignments"))
     similarity.compact_ivf_pq_index(spark, path)
-    assert similarity.vacuum_ivf_pq_index(path) == [
+    assert versioned.vacuum(path) == [
         os.path.join(path, "v1")
     ]
     assert os.path.isdir(staged)  # in-flight staging untouched
@@ -581,15 +534,24 @@ def test_resolve_raises_clearly_on_dangling_pointer(
 ):
     """ADVICE r13: a `_current` pointer naming a version dir that does
     not exist must raise a clear FileNotFoundError naming the missing
-    version, not surface later as a confusing parquet-path error."""
-    import pytest
+    version, not surface later as a confusing parquet-path error.  A
+    dir holding the index parts but no pointer is not a store either:
+    it raises too, rather than being served as itself."""
+    import shutil
 
     emb = load_table(spark, sf_dir, "embeddings").where(
         F.col("vec_id") % 7 == 0
     )
     path = str(tmp_path / "store")
     similarity.materialize_ivf_pq_index(emb, path, n_centroids=4)
+    bare = str(tmp_path / "bare")
+    shutil.copytree(versioned.resolve(path), bare)
+    with pytest.raises(FileNotFoundError, match="_current"):
+        versioned.resolve(bare)
+    with pytest.raises(FileNotFoundError):
+        similarity.read_ivf_pq_index(spark, bare)
+
     with open(os.path.join(path, "_current"), "w") as f:
         f.write("v99\n")
     with pytest.raises(FileNotFoundError, match="v99"):
-        similarity.resolve_ivf_pq_store(path)
+        versioned.resolve(path)

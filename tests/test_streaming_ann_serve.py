@@ -19,6 +19,7 @@ import os
 from pyspark.sql import functions as F
 
 from dbt_metrics_ingestion_script_spark.operators import similarity
+from dbt_metrics_ingestion_script_spark.sinks import versioned
 from dbt_metrics_ingestion_script_spark.sources.tables import load_table
 from dbt_metrics_ingestion_script_spark.streaming.ann_serve import (
     stream_serve_ivf_pq,
@@ -154,9 +155,7 @@ def test_stream_ingest_equals_batch_upsert(spark, sf_dir, tmp_path):
             map(
                 tuple,
                 spark.read.parquet(
-                    os.path.join(
-                        similarity.resolve_ivf_pq_store(stream_store), part
-                    )
+                    os.path.join(versioned.resolve(stream_store), part)
                 )
                 .drop("vec")
                 .collect(),
@@ -166,9 +165,7 @@ def test_stream_ingest_equals_batch_upsert(spark, sf_dir, tmp_path):
             map(
                 tuple,
                 spark.read.parquet(
-                    os.path.join(
-                        similarity.resolve_ivf_pq_store(batch_store), part
-                    )
+                    os.path.join(versioned.resolve(batch_store), part)
                 )
                 .drop("vec")
                 .collect(),
