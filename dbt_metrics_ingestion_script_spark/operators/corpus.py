@@ -814,33 +814,6 @@ def length_profile(
     )
 
 
-def length_profile_approx(
-    documents: DataFrame,
-    stratum_col: str = "source",
-    value_col: str = "n_chars",
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """The 100 TB swap for `length_profile`, made first-class: the
-    exact interpolated percentile buffers every group value on one
-    reducer, while `percentile_approx` keeps a bounded, MERGEABLE
-    sketch per partition (map-side partials), so high-cardinality
-    strata and corpus-wide profiles stay flat in memory.  Same output
-    schema; values agree with the exact profile within the sketch's
-    rank-error bound (~1/accuracy of the rank, tolerance-tested
-    against the exact operator rather than hash-matched -- approximate
-    by design, the same verification posture as the HLL distinct
-    count)."""
-    v = F.col(value_col)
-    acc = F.lit(accuracy)
-    return documents.groupBy(stratum_col).agg(
-        F.count(v).alias("n_docs"),
-        F.round(F.avg(v), 6).alias("mean_chars"),
-        F.round(F.percentile_approx(v, F.lit(0.5), acc), 6).alias("p50"),
-        F.round(F.percentile_approx(v, F.lit(0.9), acc), 6).alias("p90"),
-        F.round(F.percentile_approx(v, F.lit(0.99), acc), 6).alias("p99"),
-    )
-
-
 def source_cap_topk(
     df: DataFrame,
     stratum_col: str = "source",

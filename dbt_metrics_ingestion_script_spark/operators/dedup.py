@@ -1041,147 +1041,9 @@ def simhash_near_pairs(
 # ---------------------------------------------------------------------------
 
 
-def duplicate_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    checkpoint_every: int = 5,
-    on_exhaustion: str = "star",
-    stats: dict | None = None,
-) -> DataFrame:
-    """Connected components over an undirected duplicate-pair graph:
-    the post-pair stage every dedup pipeline runs so that A~B and B~C
-    collapse to ONE survivor (pairwise keep-lowest would keep A and B).
-
-    Min-label propagation to fixpoint: every node starts with the
-    smallest id among itself and its direct neighbors, then each
-    iteration takes the min over neighbors' labels.  Deterministic, so
-    the result is differentially checkable against a recursive-CTE
-    oracle.  Output: (doc_id, cluster_id) for every node of the pair
-    graph, cluster_id = min doc_id of its component.
-
-    Scale: each iteration is one shuffle join on node id; iterations
-    needed = graph diameter (dup clusters are shallow -- near-dup
-    components are cliques-ish, diameter < 5 in practice).  Frontiers
-    are persisted so the convergence probe doesn't recompute the chain,
-    and every `checkpoint_every` iterations the label frame is
-    localCheckpoint-ed to truncate lineage -- without that, each
-    iteration's plan nests the previous one and deep graphs OOM the
-    DRIVER during planning, not the executors during compute.  (On a
-    real cluster with executor loss, substitute a reliable
-    `checkpoint()` against the cluster FS.)  The label frame is 2
-    longs/node of the PAIR graph, not the corpus, so it fits executor
-    memory comfortably.
-
-    If labels are still moving after `max_iter` iterations, returning
-    them would silently split one duplicate cluster into several
-    (ADVICE r2 b), so the loop never returns unconverged labels.
-    Instead (VERDICT r4 item 2) `on_exhaustion` picks the recovery:
-
-    - "star" (default): fall back to `duplicate_clusters_star`, whose
-      O(log n) round count is diameter-independent -- at scale,
-      aborting a job after max_iter shuffle rounds when a correct
-      answer is computable is strictly worse than computing it.  The
-      fallback runs on the original `pairs` frame; the common shallow
-      case never reaches it (no extra jobs -- fallback only executes
-      after exhaustion).
-    - "raise": RuntimeError (the pre-r5 behavior, for callers that
-      treat a deep pair graph as a data-quality signal).
-
-    `stats`, if provided, is populated with {"iterations": rounds run,
-    "fell_back": bool} so tests (and operators wrapping this one) can
-    assert the shallow path stayed shallow.
-    """
-    if on_exhaustion not in ("star", "raise"):
-        raise ValueError(f"on_exhaustion must be 'star' or 'raise', got {on_exhaustion!r}")
-    # persist the symmetric edge list pre-partitioned on dst: every
-    # iteration joins on dst, so the cached partitioning is reused and
-    # only the (tiny) label frame moves per iteration
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .repartition("dst")
-        .persist()
-    )
-    labels = (
-        edges.groupBy("src")
-        .agg(F.least(F.col("src"), F.min("dst")).alias("lbl"))
-        .withColumnRenamed("src", "node")
-        .persist()
-    )
-    converged = False
-    for it in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        new_labels = labels.join(
-            neighbor_min, labels.node == neighbor_min.src, "left"
-        ).select(
-            "node",
-            F.least(
-                F.col("lbl"), F.coalesce(F.col("nbr_lbl"), F.col("lbl"))
-            ).alias("lbl"),
-        )
-        if (it + 1) % checkpoint_every == 0:
-            # truncate lineage: the checkpointed frame's plan is a leaf
-            new_labels = new_labels.localCheckpoint(eager=True)
-        else:
-            new_labels = new_labels.persist()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-        )
-        converged = changed.isEmpty()
-        labels.unpersist()
-        labels = new_labels
-        if converged:
-            if stats is not None:
-                stats["iterations"] = it + 1
-                stats["fell_back"] = False
-            break
-    if not converged:
-        # ADVICE r2 b: exiting with labels still moving means some
-        # component's min-label has not reached every node -- returning
-        # them would silently split one duplicate cluster into several.
-        labels.unpersist()
-        if stats is not None:
-            stats["iterations"] = max_iter
-            stats["fell_back"] = on_exhaustion == "star"
-        if on_exhaustion == "star":
-            # feed star the already-materialized symmetric edge frame
-            # rather than the raw pairs frame, whose lineage --
-            # typically the expensive pair-generation self-join --
-            # would otherwise recompute from scratch.  The frame is
-            # snapshotted into an eager localCheckpoint leaf (computed
-            # from the still-warm cache) so the label-prop persist can
-            # be released HERE instead of leaking for the process
-            # lifetime (ADVICE r5): checkpoint blocks are owned by the
-            # returned star frames' lineage and the ContextCleaner
-            # reclaims them once the caller drops those, the same
-            # lifetime convention as the returned label/star frames
-            # (2 longs per edge either way).
-            ckpt_edges = edges.select(
-                F.col("src").alias(id_a), F.col("dst").alias(id_b)
-            ).localCheckpoint(eager=True)
-            edges.unpersist()
-            return duplicate_clusters_star(ckpt_edges, id_a=id_a, id_b=id_b)
-        edges.unpersist()
-        raise RuntimeError(
-            f"duplicate_clusters did not converge within max_iter={max_iter} "
-            f"iterations; the pair graph's diameter exceeds the budget. "
-            f"Raise max_iter (iterations needed = component diameter; "
-            f"near-dup clusters are normally shallow, so a deep graph "
-            f"usually signals threshold-too-low pair generation), or use "
-            f"duplicate_clusters_star, which converges in O(log n) rounds "
-            f"regardless of diameter."
-        )
-    edges.unpersist()
-    return labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"))
+# Star rounds between lineage truncations: every _STAR_CHECKPOINT_EVERY-th
+# round's edge frame is localCheckpoint-ed instead of persisted.
+_STAR_CHECKPOINT_EVERY = 2
 
 
 def _star_round(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -1265,27 +1127,32 @@ def duplicate_clusters_star(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_rounds: int = 15,
-    checkpoint_every: int = 2,
     materialize: str = "lineage",
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., 'Connected Components in MapReduce and Beyond',
-    SoCC'14 -- a public algorithm): same output contract as
-    `duplicate_clusters` ((doc_id, cluster_id = component min) for every
-    node of the pair graph), but convergence takes O(log n) ROUNDS
-    instead of graph-diameter ITERATIONS.
+    """Connected components over an undirected duplicate-pair graph:
+    the post-pair stage every dedup pipeline runs so that A~B and B~C
+    collapse to ONE survivor (pairwise keep-lowest would keep A and B).
+    Output: (doc_id, cluster_id) for every node of the pair graph,
+    cluster_id = min doc_id of its component -- deterministic, so the
+    result is differentially checkable against a recursive-CTE oracle.
 
-    Min-label propagation moves a label one hop per iteration, so a
-    path-shaped component of length d costs d shuffle rounds; the star
-    operations instead rewire whole neighborhoods onto local minima each
-    round, halving component height.  Near-dup graphs are usually
-    shallow (label propagation wins on constant factors there -- fewer
-    jobs per round); chain-shaped graphs (transcription drift, shingled
-    chunk overlaps, id-remap chains) are where this one is the only
-    shape that finishes.  Each round is two window passes plus one
-    distinct over the EDGE frame only (3 shuffles, r16 -- see
-    `_star_round`); lineage is truncated by periodic localCheckpoint
-    exactly as in the label version.
+    Computed by alternating large-star / small-star (Kiveris et al.,
+    'Connected Components in MapReduce and Beyond', SoCC'14 -- a public
+    algorithm), which converges in O(log n) ROUNDS rather than
+    graph-diameter iterations: min-label propagation moves a label one
+    hop per iteration, so a path-shaped component of length d would
+    cost d shuffle rounds, while the star operations rewire whole
+    neighborhoods onto local minima each round, halving component
+    height.  Chain-shaped graphs (transcription drift, shingled chunk
+    overlaps, id-remap chains) therefore finish as quickly as shallow
+    ones.  Each round is two window passes plus one distinct over the
+    EDGE frame only (3 shuffles, r16 -- see `_star_round`); every
+    `_STAR_CHECKPOINT_EVERY`-th round's edge frame is localCheckpoint-ed
+    to truncate lineage -- without that, each round's plan nests the
+    previous one and deep graphs OOM the DRIVER during planning.  (On a
+    real cluster with executor loss, substitute a reliable
+    `checkpoint()` against the cluster FS.)  The edge frame is 2 longs
+    per edge of the PAIR graph, not the corpus.
 
     large-star(u): for every neighbor v > u, re-point v at
     m = min(N(u) ∪ {u}).  small-star(u): re-point the neighbors ≤ u
@@ -1371,7 +1238,7 @@ def duplicate_clusters_star(
         if rnd == max_rounds:
             stats.unpersist()
             break
-        if (rnd + 1) % checkpoint_every == 0:
+        if (rnd + 1) % _STAR_CHECKPOINT_EVERY == 0:
             # lazy (r15): the NEXT round's probe materializes the
             # checkpoint as part of its own job, truncating lineage at
             # the same point without paying a separate barrier job per
@@ -1392,8 +1259,8 @@ def duplicate_clusters_star(
     # converged: a forest of stars, every edge = (root=x < child=y).
     # The star frame stays persisted and the result reads from it --
     # unpersisting here would force the caller's collect to recompute
-    # the whole iteration chain (same convention as duplicate_clusters'
-    # label frame); the frame is 2 longs per edge of the PAIR graph.
+    # the whole iteration chain; the frame is 2 longs per edge of the
+    # PAIR graph.
     children = edges.select(
         F.col("y").alias("doc_id"), F.col("x").alias("cluster_id")
     )

@@ -23,7 +23,7 @@ degree aggregate; the global clustering coefficient is
 
 The edge frame is referenced three times (degrees, wedge side, closing
 side): pass a persisted/materialized frame at scale or Spark re-derives
-it per reference (the duplicate_clusters persist discipline).
+it per reference (the duplicate_clusters_star persist discipline).
 """
 
 from __future__ import annotations

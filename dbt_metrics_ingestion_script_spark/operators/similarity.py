@@ -924,7 +924,7 @@ def kmeans_convergence(
     eagerly (three tiny rows -- the stats-aggregate collect pattern),
     then every cache is released: a lazy composition would re-derive
     round i's whole subtree once per downstream reference (the
-    duplicate_clusters round discipline, applied).  n_iter stays small
+    duplicate_clusters_star round discipline, applied).  n_iter stays small
     because the trace, not full convergence, is the product.
     """
     if n_iter < 0:

@@ -787,10 +787,9 @@ def bpe_pair_counts(
     the pair with the highest frequency is the merge a tokenizer
     trainer would apply next.  Training a tokenizer on its own corpus
     is a standard stage of a large-scale data pipeline, and the pair
-    count is its distributed-shape core; the merge LOOP itself is a
-    driver-side iteration over this operator with a rewritten symbol
-    table (each round's frame is vocabulary-sized, not corpus-sized,
-    after round 1).
+    count is its distributed-shape core; the merge LOOP itself
+    (`bpe_train_local`) runs on the driver over the collected
+    word-frequency table.
 
     Output: top_k (pair, pair_count) rows, pair = two adjacent
     characters inside a word, count weighted by word frequency, total
@@ -861,88 +860,9 @@ def _merge_pair(symbols: Column, left: str, right: str) -> Column:
     )
 
 
-def bpe_train(
-    df: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """BPE tokenizer training (Sennrich et al. 2016) as a driver-side
-    merge loop over Spark frames: learn `n_merges` merge rules from the
-    corpus word-frequency table.
-
-    Output: (rank, left, right, merged, pair_count) -- the ordered
-    merge list, which IS the trained tokenizer artifact.  Ties break
-    (count DESC, pair lexicographic ASC) so the rule list is
-    deterministic across partitionings and engines; the pytest
-    differential replays the identical policy in pure Python.
-
-    Scale shape (the reason real BPE trainers are structured this
-    way): the corpus is touched ONCE to build the word-frequency
-    table; every merge round then runs over the VOCABULARY frame
-    (Heaps'-law sublinear in corpus size) -- a pair-count aggregate
-    (one slim shuffle), a 1-row TakeOrdered action to pick the winning
-    pair (inherent to the loop, same contract as the k-means
-    convergence trace), and a JVM-side fold rewriting each word's
-    symbol array.  Rounds persist at MEMORY_AND_DISK and unpersist
-    eagerly; lineage is cut each round by the persisted frame, so
-    n_merges rounds never replay round 1."""
-    from pyspark import StorageLevel
-
-    wf = _bpe_word_freq(df, text_col).select(
-        F.split("w", "(?!^)(?=.)").alias("symbols"), "wc"
-    )
-    wf = wf.persist(StorageLevel.MEMORY_AND_DISK)
-    spark = df.sparkSession
-    rules = []
-    for rank in range(n_merges):
-        pair_rows = (
-            wf.where(F.size("symbols") >= 2)
-            .select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("symbols") - 1),
-                        lambda i: F.struct(
-                            F.element_at("symbols", i).alias("l"),
-                            F.element_at("symbols", i + 1).alias("r"),
-                        ),
-                    )
-                ).alias("p"),
-                "wc",
-            )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("wc").alias("pair_count"))
-            .orderBy(
-                F.col("pair_count").desc(),
-                F.col("l").asc(),
-                F.col("r").asc(),
-            )
-            .limit(1)
-            .collect()
-        )
-        if not pair_rows:
-            break
-        left, right, count = (
-            pair_rows[0]["l"],
-            pair_rows[0]["r"],
-            pair_rows[0]["pair_count"],
-        )
-        rules.append((rank, left, right, left + right, count))
-        nxt = wf.select(
-            _merge_pair("symbols", left, right).alias("symbols"), "wc"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        nxt.count()  # materialize before dropping the parent
-        wf.unpersist()
-        wf = nxt
-    wf.unpersist()
-    return spark.createDataFrame(
-        rules, "rank int, left string, right string, merged string, pair_count bigint"
-    )
-
-
 def _bpe_word_freq(df: DataFrame, text_col: str) -> DataFrame:
-    """Corpus -> word-frequency table, the shared first stage of both
-    trainers (one scan, one shuffle; Heaps'-law sublinear rows)."""
+    """Corpus -> word-frequency table, the trainer's only corpus-sized
+    stage (one scan, one shuffle; Heaps'-law sublinear rows)."""
     words = df.select(
         F.explode(F.split(normalize_text(text_col), " ")).alias("w")
     ).where(F.length("w") >= 2)
@@ -951,7 +871,8 @@ def _bpe_word_freq(df: DataFrame, text_col: str) -> DataFrame:
 
 def _merge_word_local(sym: list[str], left: str, right: str) -> list[str]:
     """Pure-Python replica of `_merge_pair`'s greedy left-to-right scan
-    (merged_last guard included), used by the driver-local trainer."""
+    (merged_last guard included), used by the driver-local trainer so
+    its rules agree with what the encoders' Spark folds produce."""
     out: list[str] = []
     merged_last = False
     for x in sym:
@@ -970,29 +891,30 @@ def bpe_train_local(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """BPE training with the merge loop run DRIVER-LOCALLY over the
-    collected word-frequency table -- the production path for real
-    vocabulary sizes (VERDICT r7 item 3a).
+    """BPE tokenizer training (Sennrich et al. 2016): learn `n_merges`
+    merge rules from the corpus word-frequency table, with the merge
+    loop run DRIVER-LOCALLY (VERDICT r7 item 3a).
 
-    `bpe_train` runs one Spark aggregate + one 1-row action PER MERGE:
-    at a production 32k-merge vocabulary that is ~64k Spark jobs of
-    pure scheduling overhead, each over a frame that -- by Heaps' law
-    -- fits driver memory comfortably (a 100 TB web corpus has on the
-    order of 1e8 distinct words of ~10 bytes; the CORPUS is what
-    doesn't fit, and it is touched exactly once here, by the
+    Output: (rank, left, right, merged, pair_count) -- the ordered
+    merge list, which IS the trained tokenizer artifact.  Ties break
+    (count DESC, left ASC, right ASC) so the rule list is
+    deterministic across partitionings and engines; the pytest
+    differential replays the identical policy in pure Python.
+
+    Scale shape: a loop of one Spark aggregate + one 1-row action PER
+    MERGE would be ~64k jobs of pure scheduling overhead at a
+    production 32k-merge vocabulary, each over a frame that -- by
+    Heaps' law -- fits driver memory comfortably (a 100 TB web corpus
+    has on the order of 1e8 distinct words of ~10 bytes; the CORPUS is
+    what doesn't fit, and it is touched exactly once here, by the
     distributed word-count).  So: Spark builds the word-frequency
     table (the only corpus-sized stage), the driver collects it and
     runs the full Sennrich loop in-process with INCREMENTAL pair-count
     maintenance (only words containing the winning pair are re-scanned
     per round -- the classic trainer optimization; a fresh recount per
-    round would be O(vocab) x n_merges).
-
-    Rule selection and the greedy overlap policy replicate `bpe_train`
-    exactly (count DESC, left ASC, right ASC tie-break;
-    `_merge_word_local` mirrors `_merge_pair`), pinned by the
-    exact-equality differential in tests on both the crafted fixture
-    and the real sf0.001 corpus.  Keep `bpe_train` for the rare corpus
-    whose vocabulary outgrows the driver."""
+    round would be O(vocab) x n_merges).  The greedy overlap policy of
+    `_merge_word_local` mirrors `_merge_pair`, the fold the encoders
+    apply."""
     rows = _bpe_word_freq(df, text_col).collect()
     vocab: list[tuple[list[str], int]] = [
         (list(r["w"]), r["wc"]) for r in rows
@@ -1020,8 +942,8 @@ def bpe_train_local(
     for rank in range(n_merges):
         if not pair_counts:
             break
-        # max count, then lexicographic min -- identical to the Spark
-        # loop's ORDER BY pair_count DESC, l ASC, r ASC LIMIT 1
+        # max count, then lexicographic min: ORDER BY pair_count DESC,
+        # left ASC, right ASC LIMIT 1
         best = min(pair_counts.items(), key=lambda kv: (-kv[1], kv[0]))
         (left, right), count = best
         rules.append((rank, left, right, left + right, count))
@@ -1092,7 +1014,7 @@ def bpe_encode_token_counts(
     proxies.
 
     `rules` is the ordered [(left, right), ...] merge list from
-    `bpe_train` (driver-side, vocabulary-sized -- the tokenizer
+    `bpe_train_local` (driver-side, vocabulary-sized -- the tokenizer
     artifact, not data).
 
     Scale shape: one corpus scan -> per-(doc, word) counts [shuffle 1,

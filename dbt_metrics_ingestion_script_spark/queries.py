@@ -186,12 +186,6 @@ def metric_total_revenue_month(spark, sf_dir):
 # the driver registry stays within its evaluated-query budget.
 
 
-def total_revenue_at_grain(spark, sf_dir, grain: str):
-    """Unregistered helper for the grain differential suite."""
-    df = _compiler(spark, sf_dir).compile(TOTAL_REVENUE, grain)
-    return _round(df, {"total_revenue": 4})
-
-
 @register(
     "metric_customer_count_day",
     """

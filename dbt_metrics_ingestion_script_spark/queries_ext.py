@@ -155,8 +155,8 @@ _DUP_BATCH_MOD = 7
 def _dup_clusters_oracle() -> str:
     """Recursive-CTE min-label propagation over the same
     Jaccard>=_DUP_PAIR_THRESHOLD edge set the pair graph emits;
-    converges to cluster_id = component min, exactly what the Spark
-    iterative loop computes."""
+    converges to cluster_id = component min, exactly what
+    `duplicate_clusters_star` computes."""
     edges = (
         _SHINGLE_CTE.replace("WITH docs AS (", "WITH RECURSIVE docs AS (", 1)
         + f"""
@@ -207,12 +207,15 @@ def _dup_pair_graph(spark, sf_dir):
 
 @register("dedup_duplicate_clusters", _dup_clusters_oracle())
 def dedup_duplicate_clusters(spark, sf_dir):
-    """Scan budget: documents ~rounds x -- iterative label propagation;
-    the audited plan inlines the per-round references, at runtime the
-    edge frame is persisted/localCheckpoint-ed so the parquet scan
-    happens once.
+    """Connected components over the near-dup pair graph, computed by
+    `duplicate_clusters_star`; the recursive-CTE oracle states the
+    contract as min-label propagation.
+
+    Scan budget: documents ~rounds x -- O(log n) star rounds over the
+    persisted edge frame; audited references are lineage text, the
+    runtime scan count is 1.
     """
-    return dedup.duplicate_clusters(_dup_pair_graph(spark, sf_dir))
+    return dedup.duplicate_clusters_star(_dup_pair_graph(spark, sf_dir))
 
 
 @register("dedup_clusters_incremental_vs_corpus", _dup_clusters_oracle())
@@ -298,16 +301,13 @@ def dedup_clusters_incremental_vs_corpus_served(spark, sf_dir):
 
 @register("dedup_duplicate_clusters_star", _dup_clusters_oracle())
 def dedup_duplicate_clusters_star(spark, sf_dir):
-    """Same connected-components contract as dedup_duplicate_clusters
-    (and the same recursive-CTE oracle), computed by the O(log n)-round
-    alternating large-star/small-star algorithm -- the 100 TB-safe path
-    whose round count is independent of component diameter (VERDICT r4
-    item 1: previously pytest-only, now oracle-checked).
+    """Same body and recursive-CTE oracle as dedup_duplicate_clusters:
+    both names run the O(log n)-round star algorithm; this one stays
+    registered so recorded evidence keyed by query name still resolves.
 
     Scan budget: documents ~rounds x -- O(log n) star rounds over the
     persisted edge frame; audited references are lineage text, the
-    runtime scan count is 1 (eager checkpoints inside
-    duplicate_clusters_star).
+    runtime scan count is 1.
     """
     return dedup.duplicate_clusters_star(_dup_pair_graph(spark, sf_dir))
 
@@ -3411,16 +3411,11 @@ def text_bpe_merges(spark, sf_dir):
     (iterative, non-SQL-expressible; pytest-differentialed against an
     independent pure-Python BPE reference on the same corpus).
 
-    r15: serves the PRODUCTION trainer (`bpe_train_local`, VERDICT r7
-    item 3a) -- Spark builds the word-frequency table (the only
-    corpus-sized stage, Heaps'-law sublinear output), the driver runs
-    the Sennrich merge loop with incremental pair-count maintenance.
-    The prior registration ran the Spark-loop twin (`bpe_train`): one
-    pair-count shuffle + one 1-row action + one vocabulary rewrite PER
-    MERGE, ~17 jobs of scheduling overhead here and ~64k jobs at a
-    real 32k-merge vocabulary.  Output equality of the two trainers is
-    pinned by test_bpe_train_local_equals_spark_loop on both the
-    crafted fixture and this corpus."""
+    Trainer: `bpe_train_local` (VERDICT r7 item 3a) -- Spark builds
+    the word-frequency table (the only corpus-sized stage, Heaps'-law
+    sublinear output), the driver runs the Sennrich merge loop with
+    incremental pair-count maintenance, so the job count does not grow
+    with the number of merges."""
     return text.bpe_train_local(
         load_table(spark, sf_dir, "documents"), n_merges=_BPE_MERGES
     )

@@ -48,28 +48,31 @@ def read_documents_jsonl(
       replay, mirroring the Layer A quarantine contract.
 
     The explicit schema keeps this a single streaming-friendly scan:
-    schema inference would read the corpus twice.  The parsed frame is
-    CACHED before splitting -- Spark disallows queries whose pruned
-    projection references only the internal corrupt column
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN), and column
-    pruning reduces any quarantine-side action to exactly that; the
-    cache is Spark's documented workaround.  At corpus scale don't
-    split in memory at all: land the parsed frame (data + corrupt
-    column) to storage in one pass and split the materialized table --
-    the same contract without driver-managed cache.
+    schema inference would read the corpus twice.  Lines are read as
+    text and parsed with `from_json`, so neither frame holds a cache:
+    unlike the JSON file source, `from_json` allows a query whose
+    pruned projection references only the corrupt-record column.
+    Blank lines are skipped, as the JSON file source skips them.  A
+    line whose JSON parses but whose values do not fit the schema is
+    quarantined too, carrying whichever fields did parse.
     """
     if _CORRUPT in [f.name for f in schema.fields]:
         raise ValueError(f"schema must not predefine {_CORRUPT!r}")
     full = StructType([*schema.fields, StructField(_CORRUPT, StringType())])
-    df = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", _CORRUPT)
-        .json(path)
-        .cache()
+    parsed = (
+        spark.read.text(path)
+        .where(F.trim("value") != "")
+        .select(
+            F.from_json(
+                "value",
+                full,
+                {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": _CORRUPT},
+            ).alias("r")
+        )
+        .select("r.*")
     )
-    good = df.where(F.col(_CORRUPT).isNull()).drop(_CORRUPT)
-    quarantined = df.where(F.col(_CORRUPT).isNotNull()).select(
+    good = parsed.where(F.col(_CORRUPT).isNull()).drop(_CORRUPT)
+    quarantined = parsed.where(F.col(_CORRUPT).isNotNull()).select(
         F.col(_CORRUPT).alias("raw_line"), *[f.name for f in schema.fields]
     )
     return good, quarantined

@@ -136,227 +136,6 @@ def windowed_event_metrics(
     )
 
 
-def hopping_event_metrics(
-    events: DataFrame,
-    window_hours: int = 3,
-    hop_hours: int = 1,
-    watermark: str = "1 day",
-    ts_col: str = "ts",
-    dims: tuple[str, ...] = ("event_type",),
-) -> DataFrame:
-    """Streaming counterpart of the batch hopping-window aggregation
-    (queries_ext.events_hopping_window_agg): a sliding F.window of
-    `window_hours` advancing every `hop_hours`, watermarked for late
-    data.  Same geometry contract as the batch side -- window must be a
-    multiple of hop, both hop from the UTC epoch -- so the stream
-    converges to the batch answer over the same static data (the
-    differential test drives it with availableNow and diffs against the
-    registered batch query built from HOPPING_WINDOW_SPECS).
-
-    State scale: one row per (window x dims) within the watermark
-    horizon, times window/hop overlapping windows per event -- the
-    multiplier is the slide ratio, so a 24h/6h window costs 4x the
-    tumbling state, bounded and predictable.
-    """
-    if window_hours % hop_hours != 0:
-        raise ValueError("window_hours must be a multiple of hop_hours")
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.window(
-                ts_col, f"{window_hours} hours", f"{hop_hours} hours"
-            ).alias("w"),
-            *dims,
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(F.col("w.start").alias("ts"), *dims, "n_events", "total_value")
-    )
-
-
-def run_stream_to_memory(
-    result: DataFrame,
-    query_name: str,
-    timeout_sec: float = 120.0,
-    output_mode: str = "complete",
-) -> None:
-    """Drive a streaming frame to completion into an in-memory sink
-    (test/debug harness; production would writeStream to a real sink).
-    output_mode="append" emits only watermark-finalized windows --
-    the mode that exercises late-data drop semantics."""
-    q = (
-        result.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"stream {query_name!r} did not drain within {timeout_sec}s"
-        )
-
-
-def streaming_decontaminate(
-    doc_stream: DataFrame,
-    eval_set: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 13,
-) -> DataFrame:
-    """Stream-static decontamination: drop streaming documents that
-    share any word n-gram with a STATIC eval/benchmark set.
-
-    The eval n-gram set is collapsed into ONE static row
-    (collect_set of 31-bit gram hashes) and broadcast into the stream:
-    each micro-batch row computes its own gram array and filters on
-    `arrays_overlap` -- completely stateless (no watermark, no streaming
-    aggregation, no stream-stream join), so the operator is a map-side
-    filter per micro-batch.  Benchmark eval sets are ~10^5-10^6 grams
-    (megabytes of int32), comfortably broadcastable; at extreme eval
-    sizes the same shape works with a bloom filter instead of the exact
-    set.  Converges to the batch `decontaminate_ngram_overlap` verdict
-    on the same inputs, which is how it is tested.
-    """
-    from ..functions.hashing import hash31
-    from ..operators.dedup import word_shingles
-
-    eval_grams = (
-        eval_set.select(
-            F.explode(F.transform(word_shingles(text_col, n), hash31)).alias("gram")
-        )
-        .agg(F.collect_set("gram").alias("__eval_grams"))
-    )
-    withg = doc_stream.withColumn(
-        "__grams", F.transform(word_shingles(text_col, n), hash31)
-    )
-    # NULL text => NULL gram array => arrays_overlap is NULL; batch
-    # decontamination never flags such docs, so keep them here too
-    return (
-        withg.join(F.broadcast(eval_grams))
-        .filter(
-            F.coalesce(
-                ~F.arrays_overlap(F.col("__grams"), F.col("__eval_grams")),
-                F.lit(True),
-            )
-        )
-        .drop("__grams", "__eval_grams")
-    )
-
-
-def anomaly_baseline(events: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Per-type (mu, sigma) over the daily total series -- the BATCH
-    side of the streaming anomaly monitor.  Recomputed out of band
-    (nightly, like the streaming sampler's temperature rates) from
-    history; the stream only scores against it."""
-    daily = (
-        events.where(F.col(ts_col).isNotNull())
-        .groupBy(
-            "event_type", F.date_trunc("day", ts_col).cast("date").alias("day")
-        )
-        .agg(F.round(F.sum("value"), 4).alias("v"))
-    )
-    return daily.groupBy("event_type").agg(
-        F.avg("v").alias("mu"), F.stddev_samp("v").alias("sigma")
-    )
-
-
-def streaming_anomaly_zscore(
-    events_stream: DataFrame,
-    baseline_stats: DataFrame,
-    watermark: str = "1 day",
-    ts_col: str = "ts",
-    z_threshold: float = 3.0,
-) -> DataFrame:
-    """Stream-static metric anomaly monitor: the live stream aggregates
-    each day's per-type total (tumbling window + watermark); the
-    per-type baseline (event_type, mu, sigma) is STATIC -- computed
-    batch-side by `anomaly_baseline` over history and broadcast into
-    every micro-batch (stream-static join after the windowed agg is a
-    stateless projection, so the only streaming state is the window
-    aggregation itself).
-
-    Output schema matches the batch `events_daily_anomaly_zscore`
-    monitor: (event_type, day, total_value, zscore, is_anomaly), with
-    the same degenerate-series pinning -- NULL/zero sigma yields NULL z
-    and is never flagged (left join keeps days for types absent from
-    the baseline; they surface with NULL z rather than vanishing,
-    since an unknown type is exactly what a monitor must not drop).
-
-    Convergence: over the same static data with the baseline computed
-    from it, the drained stream equals the batch monitor row for row
-    (the differential test drives availableNow and diffs)."""
-    daily = (
-        events_stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, "1 day").alias("w"), "event_type")
-        .agg(F.round(F.sum("value"), 4).alias("total_value"))
-    )
-    z = F.when(
-        F.col("sigma") != 0,
-        (F.col("total_value") - F.col("mu")) / F.col("sigma"),
-    )
-    return daily.join(F.broadcast(baseline_stats), "event_type", "left").select(
-        "event_type",
-        F.col("w.start").cast("date").alias("day"),
-        "total_value",
-        F.round(z, 4).alias("zscore"),
-        F.coalesce(F.abs(z) > z_threshold, F.lit(False)).alias("is_anomaly"),
-    )
-
-
-def streaming_embedding_dedup(
-    vec_stream: DataFrame,
-    corpus: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    **lsh_kwargs,
-):
-    """Streaming incremental SEMANTIC dedup: every micro-batch of new
-    vectors is deduped against the STATIC corpus signature index with
-    the full batch operator (`embedding_dedup_against_corpus`) inside
-    `foreachBatch`, and survivors append to `out_dir`.
-
-    foreachBatch is the right streaming shape here -- not a
-    stream-static join in the streaming plan -- because the banded
-    candidate join + cosine verify + anti-join composition needs a
-    per-row "no band matched" decision: expressed directly on a
-    band-exploded stream it would require a watermarked de-duplicating
-    aggregation (state), while per micro-batch it is the plain
-    stateless batch plan, bit-identical to the batch operator.  The
-    corpus index is re-used across batches exactly like the streaming
-    sampler's static rates; refresh it out of band as ingestion
-    appends survivors.
-
-    Batch-INTERNAL near-dups within one micro-batch are kept (same
-    contract as the batch operator); cross-micro-batch near-dups are
-    caught only once their survivors enter the corpus index -- the
-    documented eventual-consistency window every incremental dedup
-    index has.
-
-    Returns the started StreamingQuery (availableNow-compatible; the
-    caller awaits termination)."""
-    from ..operators.dedup import embedding_dedup_against_corpus
-
-    def _dedup_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        out = embedding_dedup_against_corpus(
-            batch_df, corpus, threshold, id_col, vec_col, **lsh_kwargs
-        )
-        out.write.mode("append").parquet(out_dir)
-
-    return (
-        vec_stream.writeStream.foreachBatch(_dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stream_stream_conversion_join(
     events: DataFrame,
     window_minutes: int = 60,
@@ -489,69 +268,6 @@ def streaming_metric_store_upsert(
     return spark.read.parquet(cur)
 
 
-def streaming_incremental_clustering(
-    spark,
-    pairs_stream: DataFrame,
-    store_dir: str,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    timeout_s: int = 120,
-):
-    """Streaming duplicate-CLUSTER maintenance (VERDICT r6 stretch):
-    cluster labels are carried ACROSS micro-batches -- the state is the
-    prior label snapshot in the store, exactly like the metric-store
-    MERGE loop's snapshot (same write-to-vN-then-swap discipline).
-
-    The first micro-batch of near-dup edges runs the full O(log n) star
-    clustering; every later batch folds its edges in with
-    `duplicate_clusters_incremental`: the batch's nodes broadcast-probe
-    the prior snapshot, old components contract to their roots, only
-    the batch-sized contracted graph re-clusters, and untouched
-    components stream through a broadcast relabel -- so per-batch cost
-    follows the BATCH, not the corpus.  Because the incremental fold is
-    provably equal to re-clustering (old UNION batch), the drained
-    stream converges to the batch clustering of ALL edges regardless of
-    how ingestion split them (the differential test drives two
-    micro-batches and diffs against one batch run).
-
-    Composes with any streaming pair producer: point
-    `streaming_embedding_dedup`-style LSH candidates (batch-vs-corpus +
-    batch-internal pairs) at this maintainer and labels stay current as
-    vectors arrive.  Returns the final label snapshot DataFrame."""
-    import os
-
-    from ..operators.dedup import (
-        duplicate_clusters_incremental,
-        duplicate_clusters_star,
-    )
-
-    cur = os.path.join(store_dir, "current")
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_snapshot(cur)
-        if os.path.exists(cur):
-            prior = spark.read.parquet(cur)
-            out = duplicate_clusters_incremental(
-                batch_df, prior, id_a=id_a, id_b=id_b
-            )
-        else:
-            out = duplicate_clusters_star(batch_df, id_a=id_a, id_b=id_b)
-        nxt = os.path.join(store_dir, f"v{batch_id}")
-        out.write.mode("overwrite").parquet(nxt)
-        _swap_snapshot(nxt, cur)
-
-    q = (
-        pairs_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", os.path.join(store_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError("streaming_incremental_clustering did not drain")
-    return spark.read.parquet(cur)
-
-
 def streaming_semantic_ingestion(
     spark,
     vec_stream: DataFrame,
@@ -581,11 +297,10 @@ def streaming_semantic_ingestion(
        pair set of one batch run over B1 UNION B2 -- which is why the
        drained labels converge EXACTLY to the batch clustering of the
        union (pinned by the two-micro-batch differential test).
-    2. LABELS: the pair set folds into the label snapshot exactly as
-       `streaming_incremental_clustering` does (full star on the first
-       batch, `duplicate_clusters_incremental` after -- per-batch cost
-       follows the batch, never the corpus; crash-atomic snapshot
-       swap).
+    2. LABELS: the pair set folds into the label snapshot (full star
+       on the first batch, `duplicate_clusters_incremental` after --
+       per-batch cost follows the batch, never the corpus; crash-atomic
+       snapshot swap).
     3. INDEX: the batch's (id, unit, bucket) signatures APPEND to the
        index store -- never a corpus rewrite.  On checkpoint replay the
        appended duplicates are harmless: candidate pairs are distinct,
@@ -674,7 +389,7 @@ def streaming_snapshot_maintenance(
     timestamp can never resurrect a tombstoned key because tombstones
     stay in the store (only `live_view` filters them).  Same
     write-vN-then-swap crash-atomic store discipline as the metric
-    store and cluster-label maintainers.
+    store and the semantic-ingestion label maintainer.
 
     Per-batch cost follows the BATCH (one partial-aggregated max_by
     over batch rows) plus one key-join-sized fold against the store --

@@ -317,59 +317,6 @@ def test_bloom_decontamination_superset_of_exact(spark, sf_dir):
         corpus.decontaminate_bloom(train, eval_set, k=0)
 
 
-def test_length_profile_approx_within_rank_error(spark, sf_dir):
-    """The approx profile must agree with the exact operator: counts
-    and means exactly (they are not sketched), and every percentile
-    within the quantile sketch's rank-error neighborhood -- checked as
-    'the approx value lies between the exact values at p +/- 2%'
-    computed per stratum."""
-    from pyspark.sql import functions as F
-
-    from dbt_metrics_ingestion_script_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    exact = {r["source"]: r for r in corpus.length_profile(docs).collect()}
-    approx = {
-        r["source"]: r for r in corpus.length_profile_approx(docs).collect()
-    }
-    assert set(exact) == set(approx)
-    bounds = {
-        src: {
-            p: (
-                r[0],
-                r[1],
-            )
-            for p, r in zip(
-                ("p50", "p90", "p99"),
-                zip(
-                    docs.where(F.col("source") == src)
-                    .agg(
-                        *[
-                            F.percentile("n_chars", F.lit(max(q - 0.02, 0.0)))
-                            for q in (0.5, 0.9, 0.99)
-                        ]
-                    )
-                    .collect()[0],
-                    docs.where(F.col("source") == src)
-                    .agg(
-                        *[
-                            F.percentile("n_chars", F.lit(min(q + 0.02, 1.0)))
-                            for q in (0.5, 0.9, 0.99)
-                        ]
-                    )
-                    .collect()[0],
-                ),
-            )
-        }
-        for src in list(exact)[:3]  # spot-check 3 strata (driver loops)
-    }
-    for src, ps in bounds.items():
-        assert approx[src]["n_docs"] == exact[src]["n_docs"]
-        assert abs(approx[src]["mean_chars"] - exact[src]["mean_chars"]) < 1e-6
-        for p, (lo, hi) in ps.items():
-            assert lo - 1e-9 <= approx[src][p] <= hi + 1e-9, (src, p)
-
-
 def test_duplication_report_semantics(spark, tmp_path):
     """Digest-based: normalization jitter counts as a dup; rates are
     per source; a dup shared ACROSS sources does not raise either

@@ -8,6 +8,7 @@ import pytest
 from dbt_metrics_ingestion_script_spark import queries as q
 from dbt_metrics_ingestion_script_spark.plans.compiler import MetricCompiler
 from dbt_metrics_ingestion_script_spark.plans.metric_spec import MetricFilter, MetricSpec
+from dbt_metrics_ingestion_script_spark.registry import round_cols
 
 from .oracle import assert_matches_oracle
 
@@ -132,7 +133,8 @@ def test_total_revenue_grain_matches_oracle(spark, sf_dir, grain):
     were unregistered to stay inside the driver's evaluated-query budget
     (the driver still covers all grains via
     metric_total_revenue_all_grains)."""
-    df = q.total_revenue_at_grain(spark, sf_dir, grain)
+    comp = MetricCompiler(lambda m: spark.read.parquet(f"{sf_dir}/{m}.parquet"))
+    df = round_cols(comp.compile(q.TOTAL_REVENUE, grain), {"total_revenue": 4})
     assert_matches_oracle(
         df,
         f"""

@@ -19,8 +19,6 @@ from dbt_metrics_ingestion_script_spark.operators.multimodal import (
     _paeth,
     _png_chunk,
     _PNG_MAGIC,
-    decode_audio,
-    decode_image,
     decode_image_rgb,
     decode_png_rgb,
     decode_wav_pcm16,
@@ -36,7 +34,6 @@ def test_bmp_round_trip_with_row_padding():
     w, h = 3, 2
     rgb = bytes(range(w * h * 3))
     assert decode_image_rgb(encode_bmp(w, h, rgb)) == (w, h, rgb)
-    assert decode_image(encode_bmp(w, h, rgb)) == (w, h)
 
 
 def test_bmp_golden_file_bottom_up_bgr():
@@ -100,7 +97,6 @@ def test_png_round_trip_exercises_every_filter():
     assert blob[:8] == _PNG_MAGIC
     assert decode_png_rgb(blob) == (w, h, rgb)
     assert decode_image_rgb(blob) == (w, h, rgb)  # routed by magic
-    assert decode_image(blob) == (w, h)
 
 
 from hypothesis import given, settings
@@ -251,8 +247,6 @@ def test_wav_round_trip_full_int16_range():
     samples = [0, 1, -1, 32767, -32768, 1234, -4321]
     wav = encode_wav_pcm16(samples, 8000)
     assert decode_wav_pcm16(wav) == (8000, samples)
-    # decode_audio normalizes exactly like soundfile: v / 32768
-    assert decode_audio(wav) == [s / 32768.0 for s in samples]
 
 
 def test_wav_golden_header_fields():
@@ -293,34 +287,27 @@ def test_bmp_decoder_agrees_with_pil_when_available():
 
 
 def test_non_stdlib_formats_still_route_to_guarded_paths():
-    """JPEG/FLAC (and malformed PNG, non-PCM16 WAV) are NOT
-    stdlib-decodable: without PIL/soundfile they must raise the honest
-    NotImplementedError, not a parse error."""
-    try:
-        import PIL  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="codec"):
-            decode_image(b"\x89PNG\r\n\x1a\n not really")  # corrupt PNG
-        with pytest.raises(NotImplementedError, match="codec"):
-            decode_image(b"\xff\xd8\xff\xe0 jpeg-ish")
-    try:
-        import soundfile  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="codec"):
-            decode_audio(b"fLaC not really")
-        # valid RIFF/WAVE container but 8-bit samples: stdlib path
-        # declines, guarded path reports the missing codec
-        import io
-        import wave
+    """Payloads the stdlib codecs cannot decode (malformed PNG/JPEG,
+    non-PCM16 WAV) raise ValueError -- the documented rejection channel
+    callers route on -- never a bare parse error."""
+    import io
+    import wave
 
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as f:
-            f.setnchannels(1)
-            f.setsampwidth(1)
-            f.setframerate(8000)
-            f.writeframes(b"\x00\x7f\xff")
-        with pytest.raises(NotImplementedError, match="codec"):
-            decode_audio(buf.getvalue())
+    with pytest.raises(ValueError):
+        decode_image_rgb(b"\x89PNG\r\n\x1a\n not really")  # corrupt PNG
+    with pytest.raises(ValueError):
+        decode_image_rgb(b"\xff\xd8\xff\xe0 jpeg-ish")
+    with pytest.raises(ValueError):
+        decode_image_rgb(b"fLaC not an image")
+    # valid RIFF/WAVE container but 8-bit samples: the PCM16 path declines
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as f:
+        f.setnchannels(1)
+        f.setsampwidth(1)
+        f.setframerate(8000)
+        f.writeframes(b"\x00\x7f\xff")
+    with pytest.raises(ValueError, match="sample width"):
+        decode_wav_pcm16(buf.getvalue())
 
 
 def test_spark_media_round_trip_decode_stats(spark):

@@ -50,6 +50,30 @@ def test_jsonl_quarantine_splits_malformed_lines(spark, tmp_path):
         )
 
 
+def test_read_documents_jsonl_leaves_nothing_persisted(spark, tmp_path):
+    """A long-lived session reads batch after batch: counting both
+    frames must persist no RDD (compared by id, as in
+    test_pipeline_leaves_nothing_persisted)."""
+    p = tmp_path / "docs.jsonl"
+    p.write_text(
+        '{"doc_id": 1, "text": "hello world"}\n'
+        "{broken\n"
+        "\n"
+        '{"doc_id": "not a number", "text": "type mismatch"}\n'
+    )
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    good, bad = read_documents_jsonl(spark, str(p))
+    assert good.count() == 1
+    assert sorted(r["raw_line"] for r in bad.collect()) == [
+        '{"doc_id": "not a number", "text": "type mismatch"}',
+        "{broken",
+    ]
+    assert persisted() - before == set()
+
+
 def test_jsonl_round_trip_matches_parquet_table(spark, sf_dir, tmp_path):
     """The fixture documents table written as JSONL and read back
     through the quarantine source must reproduce the table exactly

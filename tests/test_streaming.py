@@ -6,13 +6,37 @@ from __future__ import annotations
 import shutil
 
 import pytest
+from pyspark.sql import DataFrame
 
 from dbt_metrics_ingestion_script_spark.sources.tables import load_table
 from dbt_metrics_ingestion_script_spark.streaming.metrics_stream import (
     read_events_stream,
-    run_stream_to_memory,
     windowed_event_metrics,
 )
+
+
+def run_stream_to_memory(
+    result: DataFrame,
+    query_name: str,
+    timeout_sec: float = 120.0,
+    output_mode: str = "complete",
+) -> None:
+    """Drive a streaming frame to completion into an in-memory sink
+    named `query_name`.  output_mode="append" emits only
+    watermark-finalized windows -- the mode that exercises late-data
+    drop semantics."""
+    q = (
+        result.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(
+            f"stream {query_name!r} did not drain within {timeout_sec}s"
+        )
 
 
 @pytest.fixture(scope="module")
@@ -49,46 +73,6 @@ def test_stream_converges_to_batch(spark, sf_dir, events_dir):
         .collect()
     }
     assert got == expected
-
-
-def test_stream_hopping_window_converges_to_batch(spark, sf_dir, events_dir):
-    """Streaming parity for the event-analytics hopping window (VERDICT
-    r5 stretch): both slide ratios from the shared batch geometry table
-    must converge, window for window, to the registered batch query
-    over the same static data."""
-    from dbt_metrics_ingestion_script_spark import queries_ext
-    from dbt_metrics_ingestion_script_spark.streaming.metrics_stream import (
-        hopping_event_metrics,
-    )
-
-    for name, (window_h, hop_h) in queries_ext.HOPPING_WINDOW_SPECS.items():
-        stream = read_events_stream(spark, events_dir)
-        result = hopping_event_metrics(
-            stream, window_hours=window_h, hop_hours=hop_h
-        )
-        sink = f"stream_hop_{window_h}_{hop_h}"
-        run_stream_to_memory(result, sink)
-        got = {
-            (str(r["ts"]), r["event_type"]): (r["n_events"], r["total_value"])
-            for r in spark.sql(f"SELECT * FROM {sink}").collect()
-        }
-        expected = {
-            (str(r["ts"]), r["event_type"]): (r["n_events"], r["total_value"])
-            for r in queries_ext._hopping_window_agg(
-                spark, sf_dir, name
-            ).collect()
-        }
-        assert got == expected, f"{name} stream diverged from batch"
-
-
-def test_stream_hopping_window_rejects_bad_geometry(spark, events_dir):
-    from dbt_metrics_ingestion_script_spark.streaming.metrics_stream import (
-        hopping_event_metrics,
-    )
-
-    stream = read_events_stream(spark, events_dir)
-    with pytest.raises(ValueError, match="multiple"):
-        hopping_event_metrics(stream, window_hours=5, hop_hours=2)
 
 
 def test_streaming_rejects_unknown_grain(spark, events_dir):
@@ -201,7 +185,7 @@ def test_stateful_running_totals_converge_to_batch(spark, sf_dir, events_dir):
 
     stream = read_events_stream(spark, events_dir)
     result = running_totals_by_key(stream)
-    run_stream_to_memory_update(result, "running_totals")
+    run_stream_to_memory(result, "running_totals", output_mode="update")
     # update mode emits one row per key per touching micro-batch; the
     # final (max n_events) row per key is the converged total
     rows = spark.sql(
@@ -233,7 +217,7 @@ def test_stateful_streaming_dedup_first_wins(spark, events_dir):
         F.col("event_id"),
     )
     result = streaming_exact_dedup(stream)
-    run_stream_to_memory_update(result, "stream_dedup")
+    run_stream_to_memory(result, "stream_dedup", output_mode="update")
     rows = spark.sql("SELECT * FROM stream_dedup").collect()
     batch = spark.read.parquet(events_dir).select(
         hash64(F.col("event_type")).alias("content_hash"), "event_id"
@@ -338,67 +322,6 @@ def test_stateful_dedup_ttl_survives_duplicates(spark, tmp_path):
         assert wait_for(lambda: (1, 3) in rows())
     finally:
         q.stop()
-
-
-def run_stream_to_memory_update(result, name, timeout_sec=120.0):
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(f"stream {name!r} did not drain within {timeout_sec}s")
-
-
-def test_streaming_decontaminate_converges_to_batch(spark, tmp_path_factory):
-    """availableNow over a static documents directory must keep exactly
-    the docs the batch decontamination operator keeps (stream-static
-    broadcast filter, stateless)."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from dbt_metrics_ingestion_script_spark.operators.corpus import (
-        decontaminate_ngram_overlap,
-    )
-    from dbt_metrics_ingestion_script_spark.streaming.metrics_stream import (
-        streaming_decontaminate,
-    )
-
-    d = tmp_path_factory.mktemp("docs_stream")
-    shutil.copy("/root/testdata/sf0.001/documents.parquet", d / "documents.parquet")
-    batch = spark.read.parquet(str(d))
-    eval_set = batch.where(F.col("doc_id") % 19 == 0)
-    train = batch.where(F.col("doc_id") % 19 != 0)
-
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-        .where(F.col("doc_id") % 19 != 0)
-    )
-    result = streaming_decontaminate(stream, eval_set, n=5)
-    name = "stream_decon"
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    kept = {r["doc_id"] for r in spark.sql(f"SELECT doc_id FROM {name}").collect()}
-
-    flagged = {
-        r["doc_id"]
-        for r in decontaminate_ngram_overlap(train, eval_set, n=5).collect()
-    }
-    expected = {r["doc_id"] for r in train.collect()} - flagged
-    assert kept == expected
-    assert flagged, "fixture produced no contamination; test is vacuous"
 
 
 def test_streaming_chunking_converges_to_batch(spark, tmp_path_factory):
@@ -791,73 +714,6 @@ def test_streaming_asof_lookup_converges_to_batch(spark, sf_dir, events_dir):
     assert got == want and got
 
 
-def test_streaming_anomaly_converges_to_batch_monitor(spark, sf_dir, events_dir):
-    """Stream-static anomaly scoring: with the baseline computed from
-    the same static history, the drained stream must reproduce the
-    batch events_daily_anomaly_zscore monitor row for row -- including
-    NULL-z degenerate series never being flagged."""
-    from dbt_metrics_ingestion_script_spark import queries_ext
-    from dbt_metrics_ingestion_script_spark.sources.tables import load_table
-    from dbt_metrics_ingestion_script_spark.streaming.metrics_stream import (
-        anomaly_baseline,
-        streaming_anomaly_zscore,
-    )
-
-    baseline = anomaly_baseline(load_table(spark, sf_dir, "events"))
-    stream = read_events_stream(spark, events_dir)
-    result = streaming_anomaly_zscore(stream, baseline)
-    run_stream_to_memory(result, "stream_anomaly")
-    key = lambda r: (r["event_type"], str(r["day"]))  # noqa: E731
-    val = lambda r: (r["total_value"], r["zscore"], r["is_anomaly"])  # noqa: E731
-    got = {key(r): val(r) for r in spark.sql("SELECT * FROM stream_anomaly").collect()}
-    expected = {
-        key(r): val(r)
-        for r in queries_ext.events_daily_anomaly_zscore(spark, sf_dir).collect()
-    }
-    assert got == expected
-
-
-def test_streaming_embedding_dedup_converges_to_batch(spark, sf_dir, tmp_path):
-    """foreachBatch incremental semantic dedup: the union of per-micro-
-    batch survivors equals the batch operator over the whole new-vector
-    side (each row's fate depends only on the static corpus index, so
-    micro-batch boundaries cannot change decisions).  Two staged files
-    force at least two micro-batches, proving cross-batch statelessness."""
-    from pyspark.sql import functions as F
-
-    from dbt_metrics_ingestion_script_spark.operators.dedup import (
-        embedding_dedup_against_corpus,
-    )
-    from dbt_metrics_ingestion_script_spark.sources.tables import load_table
-    from dbt_metrics_ingestion_script_spark.streaming.metrics_stream import (
-        streaming_embedding_dedup,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.where(F.col("vec_id") % 3 == 0)
-    batch = emb.where(F.col("vec_id") % 3 != 0)
-
-    src = tmp_path / "vec_stream"
-    src.mkdir()
-    batch.where(F.col("vec_id") % 2 == 0).write.parquet(str(src / "f0.parquet"))
-    batch.where(F.col("vec_id") % 2 == 1).write.parquet(str(src / "f1.parquet"))
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*.parquet")
-    )
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = streaming_embedding_dedup(stream, corpus, out, ckpt, threshold=0.4)
-    assert q.awaitTermination(120)
-
-    got = sorted(r["vec_id"] for r in spark.read.parquet(out).collect())
-    expected = sorted(
-        r["vec_id"]
-        for r in embedding_dedup_against_corpus(batch, corpus, 0.4).collect()
-    )
-    assert got == expected and len(expected) > 0
-
-
 @pytest.mark.slow
 def test_stream_stream_join_state_across_micro_batches(spark, tmp_path):
     """Stream-stream join must hold VIEW-side state across micro-batches:
@@ -1047,71 +903,6 @@ def test_streaming_metric_store_upsert_merges_across_batches(spark, tmp_path):
     assert got[("2024-03-01", "click")] == (3, 7.0)
     assert got[("2024-03-02", "view")] == (1, 8.0)
     assert len(got) == 2
-
-
-def test_streaming_incremental_clustering_converges_to_batch(spark, tmp_path):
-    """Streaming cluster-label maintenance (VERDICT r6 stretch): TWO
-    micro-batches of near-dup edges (maxFilesPerTrigger=1, mtime-pinned
-    order) -- batch 0 seeds the label store via the full star run,
-    batch 1 folds in edges that MERGE two batch-0 components, attach a
-    new node to an old component, and open a brand-new component.  The
-    drained snapshot must equal the one-shot batch clustering of the
-    UNION of all edges, and the store must show that cluster state
-    genuinely crossed the micro-batch boundary."""
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dbt_metrics_ingestion_script_spark.operators.dedup import (
-        duplicate_clusters_star,
-    )
-    from dbt_metrics_ingestion_script_spark.streaming.metrics_stream import (
-        streaming_incremental_clustering,
-    )
-
-    src = str(tmp_path / "edges"); os.makedirs(src)
-    store = str(tmp_path / "labels")
-
-    def write_file(name, pairs, mtime):
-        path = f"{src}/{name}"
-        pq.write_table(
-            pa.table(
-                {
-                    "id_a": pa.array([p[0] for p in pairs], pa.int64()),
-                    "id_b": pa.array([p[1] for p in pairs], pa.int64()),
-                }
-            ),
-            path,
-        )
-        os.utime(path, (mtime, mtime))
-
-    b0 = [(1, 2), (2, 3), (10, 11), (20, 21)]
-    b1 = [(3, 11), (30, 31), (40, 20)]  # merge, new component, attach
-    now = _time.time()
-    write_file("batch0.parquet", b0, now - 100)
-    write_file("batch1.parquet", b1, now - 50)
-
-    stream = (
-        spark.readStream.schema("id_a long, id_b long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    snap = streaming_incremental_clustering(spark, stream, store)
-    got = {r["doc_id"]: r["cluster_id"] for r in snap.collect()}
-    want = {
-        r["doc_id"]: r["cluster_id"]
-        for r in duplicate_clusters_star(
-            spark.createDataFrame(b0 + b1, "id_a long, id_b long")
-        ).collect()
-    }
-    assert got == want
-    assert got[11] == 1 and got[40] == 20 and got[30] == 30
-    # two micro-batches genuinely ran (checkpoint committed offsets 0, 1)
-    commits = os.path.join(store, "_checkpoint", "commits")
-    assert os.path.exists(os.path.join(commits, "0"))
-    assert os.path.exists(os.path.join(commits, "1"))
 
 
 def test_snapshot_swap_is_crash_recoverable(tmp_path):

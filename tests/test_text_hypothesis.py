@@ -175,8 +175,8 @@ def test_corpus_ops_agree_on_adversarial_corpora(spark, tmp_path_factory, texts)
 @pytest.mark.slow
 def test_duplicate_clusters_chain_corpus_matches_oracle(spark, tmp_path_factory):
     """Three documents where A~B and B~C overlap enough for Jaccard>=0.2
-    but A and C don't: the recursive-CTE oracle and the iterative Spark
-    loop must both collapse them into one cluster."""
+    but A and C don't: the recursive-CTE oracle and the star algorithm
+    must both collapse them into one cluster."""
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     texts = [
         base + " one two three four five",            # A: shares core with B

@@ -1,7 +1,9 @@
 """Every top-level function of the package is referenced somewhere.
 
-A def whose name occurs nowhere in the repository's Python files except
-at its own definition is dead code.  Functions decorated with
+A def whose name no Python file of the repository references in code --
+as a name, an attribute or an imported name -- is dead code.  Mentions
+in docstrings, comments and other strings do not count, and neither do
+a function's references to itself.  Functions decorated with
 `@register(...)` are reached through the query registry, so they count
 as used.
 """
@@ -10,8 +12,6 @@ from __future__ import annotations
 
 import ast
 import os
-import re
-from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, "dbt_metrics_ingestion_script_spark")
@@ -30,16 +30,34 @@ def _registered(fn: ast.FunctionDef) -> bool:
     )
 
 
+def _code_refs(node: ast.AST, skip: str = "") -> set[str]:
+    """Names `node` references in code: names other than `skip`,
+    attribute names and imported names (the last dotted part)."""
+    refs = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name) and n.id != skip:
+            refs.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            refs.add(n.attr)
+        elif isinstance(n, ast.alias):
+            refs.add(n.name.rsplit(".", 1)[-1])
+    return refs
+
+
 def test_no_unreferenced_top_level_defs():
-    sources = {path: open(path).read() for path in _py_files(ROOT)}
-    words = Counter(w for text in sources.values() for w in re.findall(r"\w+", text))
+    trees = {path: ast.parse(open(path).read()) for path in _py_files(ROOT)}
+    refs: set[str] = set()
+    for tree in trees.values():
+        for node in tree.body:
+            # a def's bare-name calls to itself (recursion) keep nothing alive
+            refs |= _code_refs(node, getattr(node, "name", ""))
     unreferenced = [
         f"{os.path.relpath(path, ROOT)}::{node.name}"
-        for path, text in sources.items()
+        for path, tree in trees.items()
         if path.startswith(PACKAGE + os.sep)
-        for node in ast.parse(text).body
+        for node in tree.body
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
         and not _registered(node)
-        and words[node.name] == 1
+        and node.name not in refs
     ]
     assert unreferenced == []
