@@ -64,8 +64,8 @@ BYTES_DRIFT_THRESHOLD = 1.25
 
 # Stable headline set: all metric-compiler queries, the Layer A metadata
 # pipeline, and the scale-path EXT operators.  Exact brute-force pair
-# baselines (O(n^2)) and streaming are covered by tests/verify, not the
-# bench -- the bench tracks the plans meant to run at 100 TB.
+# baselines (O(n^2)) are covered by tests/verify, not the bench -- the
+# bench tracks the plans meant to run at 100 TB.
 HEADLINE = [
     # Layer B: metric compiler
     "metric_customer_count_day",
@@ -98,7 +98,6 @@ HEADLINE = [
     "dedup_simhash_near_pairs",
     "dedup_ngram_jaccard_pairs",
     "dedup_duplicate_clusters",
-    "dedup_duplicate_clusters_star",
     "dedup_clusters_incremental_vs_corpus",
     "dedup_embedding_lsh_survivors",
     "similarity_cosine_topk",
@@ -278,15 +277,13 @@ HEADLINE = [
     "text_quality_calibration",
     "embeddings_jl_projection_error",
     "events_run_length_stats",
-    "streaming_heavy_hitters",
     "events_woe_information_value",
     "events_feature_chi2",
     "embeddings_label_separability",
     "events_time_to_convert",
     # round-11 additions: last expressible TPC-H archetypes, the
     # materialized-index/batch ANN serving plans, and the composed
-    # quality-filter pipeline (streaming variant excluded by the
-    # streaming policy above)
+    # quality-filter pipeline
     "tpch_q8_national_market_share",
     "tpch_q12_shipmode_priority",
     "tpch_q21_suppliers_kept_waiting",
@@ -299,8 +296,7 @@ HEADLINE = [
     "similarity_ivf_batch_topk",
     "similarity_ivf_pq_batch_topk_served",
     # round-12: incremental index maintenance, served from the merged
-    # store, plus the store-health stats scan (streaming ingest/serve
-    # excluded by the streaming policy above)
+    # store, plus the store-health stats scan
     "similarity_ivf_pq_index_upsert_served",
     "similarity_ivf_store_cell_stats",
     "similarity_ivf_pq_batch_topk_after_delete",

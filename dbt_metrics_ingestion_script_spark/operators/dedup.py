@@ -865,9 +865,8 @@ def _index_verified_hits(
     candidate-sized frames (candidate distinct + two vector re-attach
     joins) and the emitted set is distinct by construction, so no
     distinct operator remains.  Output: (id_b, id_c) verified distinct
-    pairs, id_b from the batch, id_c from the index.  Consumed two
-    ways: the dedup drops id_b, the streaming cluster maintainer feeds
-    the pairs into incremental connected components."""
+    pairs, id_b from the batch, id_c from the index; the dedup drops
+    id_b."""
     from .similarity import dot
 
     b_unit = embedding_signature_index(batch, id_col, vec_col, n_planes, dim)
@@ -906,35 +905,6 @@ def embedding_dedup_against_index(
         .distinct()
     )
     return batch.join(hits, id_col, "left_anti")
-
-
-def embedding_near_pairs_against_index(
-    batch: DataFrame,
-    corpus_index: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    probe_hamming: int = 2,
-    dim: int = 64,
-) -> DataFrame:
-    """Verified near-dup PAIRS between a batch and a materialized
-    signature index, id-normalized like `embedding_near_pairs`:
-    (id_a, id_b) with id_a < id_b.  Self-pairs (a batch id already
-    present in the index, e.g. a checkpoint-replayed micro-batch) are
-    filtered, so replay is idempotent for the downstream clustering."""
-    hits = _index_verified_hits(
-        batch, corpus_index, threshold, id_col, vec_col,
-        n_planes, probe_hamming, dim,
-    )
-    return (
-        hits.select(
-            F.least("id_b", "id_c").alias("id_a"),
-            F.greatest("id_b", "id_c").alias("id_b"),
-        )
-        .where(F.col("id_a") < F.col("id_b"))
-        .distinct()
-    )
 
 
 # ---------------------------------------------------------------------------

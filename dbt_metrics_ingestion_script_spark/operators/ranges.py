@@ -218,156 +218,3 @@ def interval_overlap_join(
     )
 
 
-def interval_overlap_join_stream(
-    left: DataFrame,
-    right: DataFrame,
-    left_start: str,
-    left_end: str,
-    right_start: str,
-    right_end: str,
-    on: str | None = None,
-    bucket_minutes: int = 60,
-    max_interval_minutes: int = 24 * 60,
-    watermark: str = "1 day",
-) -> DataFrame:
-    """STREAM-STREAM interval-interval overlap join (both sides
-    streaming, state on both sides): the canonical-bucket discipline of
-    `interval_overlap_join`, run inside Spark's symmetric hash join.
-
-    Structured Streaming rejects a stream-stream join with no equality
-    predicate -- exactly the gap the bucketization closes: each side
-    explodes its interval into the buckets it spans (a stateless
-    projection, streams unchanged), the REQUIRED equi-key is the bucket
-    id, the exact overlap predicate prunes candidates, and each
-    overlapping pair is emitted only from its canonical bucket
-    (max(start_l, start_r)'s bucket), so a pair sharing many buckets --
-    even across micro-batches -- produces exactly one row without any
-    post-join dedup.
-
-    Bounded state needs a bounded TIME RANGE between the two sides'
-    watermarked event-time columns, which an overlap predicate alone
-    does not give Spark (a still-open interval could match arbitrarily
-    old rows).  `max_interval_minutes` (required, > 0, a multiple of
-    bucket_minutes) makes it derivable: the cap is applied in
-    BUCKET-SPAN terms before replication -- an interval is kept iff
-    floor(end/bucket) - floor(start/bucket) <
-    max_interval_minutes / bucket_minutes, the EXACT filter
-    interval_overlap_join's max_span_buckets applies (ADVICE r13: a
-    duration-based stream cap and a bucket-span batch cap diverge at
-    the boundary for an interval of duration exactly L that straddles
-    one extra bucket edge; expressing both in bucket-span terms makes
-    the batch differential exact for ALL inputs, not just
-    cap-unaligned ones).  Any kept interval therefore has duration
-    < L, and overlap between two <L intervals implies
-    |start_l - start_r| < L, so the join condition carries that
-    start-to-start bound on the watermarked columns and state is
-    O(watermark + L), not O(stream).  The bound is implied by
-    overlap + the cap, so it never removes a true pair.
-
-    Both start columns must be event-time timestamps (withWatermark is
-    applied here); output columns are the union of both frames'
-    columns, like the batch operator.  Batch-convergence: draining the
-    same rows through any micro-batching EQUALS
-    interval_overlap_join(..., max_span_buckets=
-    max_interval_minutes // bucket_minutes) -- identical pre-replication
-    filters, identical canonical-bucket emission -- the differential
-    the registered query's oracle runs.
-    """
-    if bucket_minutes <= 0:
-        raise ValueError(f"bucket_minutes must be positive, got {bucket_minutes}")
-    if max_interval_minutes <= 0:
-        raise ValueError(
-            "max_interval_minutes must be positive (it bounds join "
-            f"state), got {max_interval_minutes}"
-        )
-    if max_interval_minutes % bucket_minutes:
-        raise ValueError(
-            "max_interval_minutes must be a multiple of bucket_minutes "
-            "(the cap is applied in bucket-span terms so the batch "
-            f"differential is exact), got {max_interval_minutes} at "
-            f"bucket_minutes={bucket_minutes}"
-        )
-    if on is not None:
-        missing = [
-            side
-            for side, df in (("left", left), ("right", right))
-            if on not in df.columns
-        ]
-        if missing:
-            raise ValueError(
-                f"join key {on!r} missing from {' and '.join(missing)} "
-                "columns"
-            )
-    key = {on} if on is not None else set()
-    clash = (set(left.columns) & set(right.columns)) - key
-    if clash:
-        raise ValueError(
-            f"left/right columns collide: {sorted(clash)}; rename first"
-        )
-    reserved = {
-        "__bl", "__br", "__ls", "__le", "__rs", "__re", "__rk",
-        "__lwm", "__rwm",
-    } & (set(left.columns) | set(right.columns))
-    if reserved:
-        raise ValueError(
-            f"columns collide with internal names: {sorted(reserved)}; rename first"
-        )
-    b_us = bucket_minutes * 60 * 1_000_000
-    cap_buckets = max_interval_minutes // bucket_minutes
-
-    def spans(df, start_col, end_col, s_name, e_name, b_name, wm_name):
-        # the watermark rides a DERIVED tz-aware cast of the start
-        # column (withWatermark rejects TIMESTAMP_NTZ), so the caller's
-        # columns come through with their original types
-        return (
-            df.withColumn(wm_name, F.col(start_col).cast("timestamp"))
-            .withWatermark(wm_name, watermark)
-            .withColumn(s_name, F.unix_micros(F.col(wm_name)))
-            .withColumn(
-                e_name, F.unix_micros(F.col(end_col).cast("timestamp"))
-            )
-            .filter(
-                (F.col(s_name) <= F.col(e_name))
-                # the SAME bucket-span cap interval_overlap_join's
-                # max_span_buckets applies (exact batch differential)
-                & (
-                    F.floor(F.col(e_name) / b_us)
-                    - F.floor(F.col(s_name) / b_us)
-                    < F.lit(cap_buckets)
-                )
-            )
-            .withColumn(
-                b_name,
-                F.explode(
-                    F.sequence(
-                        F.floor(F.col(s_name) / b_us),
-                        F.floor(F.col(e_name) / b_us),
-                    )
-                ),
-            )
-        )
-
-    l_rep = spans(left, left_start, left_end, "__ls", "__le", "__bl", "__lwm")
-    r_rep = spans(right, right_start, right_end, "__rs", "__re", "__br", "__rwm")
-    if on is not None:
-        r_rep = r_rep.withColumnRenamed(on, "__rk")
-    bound = f"INTERVAL {max_interval_minutes} MINUTES"
-    cond = (
-        (F.col("__bl") == F.col("__br"))
-        & (F.col("__ls") <= F.col("__re"))
-        & (F.col("__rs") <= F.col("__le"))
-        & (
-            F.floor(F.greatest("__ls", "__rs") / b_us)
-            == F.col("__bl")
-        )
-        # the state-bounding start-to-start range on the WATERMARKED
-        # event-time columns (implied by overlap + the length cap)
-        & (F.col("__lwm") >= F.col("__rwm") - F.expr(bound))
-        & (F.col("__lwm") <= F.col("__rwm") + F.expr(bound))
-    )
-    if on is not None:
-        cond = cond & (F.col(on) == F.col("__rk"))
-    out = l_rep.join(r_rep, cond, "inner").drop(
-        "__bl", "__br", "__ls", "__le", "__rs", "__re", "__lwm", "__rwm"
-    )
-    return out.drop("__rk") if on is not None else out

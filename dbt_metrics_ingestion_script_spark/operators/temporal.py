@@ -57,11 +57,11 @@ def latest_records(
 
     Latest-wins over the (ts, seq) order is ASSOCIATIVE and
     COMMUTATIVE, so this fold can run over any partition of the log --
-    per micro-batch, per shard -- and re-fold its own outputs
-    (``snapshot_fold``) to the same result as one pass over the union.
-    Tombstones must stay in the folded state for that to hold: a
-    tombstone dropped early could be resurrected by a LATE record with
-    an EARLIER timestamp arriving in a later batch.
+    per shard, per batch -- and re-fold its own outputs to the same
+    result as one pass over the union.  Tombstones must stay in the
+    folded state for that to hold: a tombstone dropped early could be
+    resurrected by a LATE record with an EARLIER timestamp arriving in
+    a later batch.
     """
     cond = F.col(ts_col).isNotNull()
     if as_of is not None:
@@ -87,31 +87,6 @@ def latest_records(
             F.col("__s.state_op").alias("state_op"),
             *[F.col(f"__s.{c}").alias(c) for c in value_cols],
         )
-    )
-
-
-def snapshot_fold(
-    prior: DataFrame,
-    batch_latest: DataFrame,
-    *,
-    key_col: str,
-    value_cols: list[str],
-) -> DataFrame:
-    """Fold a batch's latest-records frame into a prior state frame:
-    per key, the later (state_ts, state_seq) record wins.  Both inputs
-    and the output are ``latest_records``-shaped (tombstones kept), so
-    folds chain across arbitrarily many batches -- the streaming
-    maintenance loop's one-step state transition."""
-    cols = ["state_ts", "state_seq", "state_op", *value_cols]
-    unioned = prior.select(key_col, *cols).unionByName(
-        batch_latest.select(key_col, *cols)
-    )
-    payload = F.struct(*[F.col(c) for c in cols])
-    order = F.struct(F.col("state_ts"), F.col("state_seq"))
-    return (
-        unioned.groupBy(F.col(key_col))
-        .agg(F.max_by(payload, order).alias("__s"))
-        .select(key_col, *[F.col(f"__s.{c}").alias(c) for c in cols])
     )
 
 

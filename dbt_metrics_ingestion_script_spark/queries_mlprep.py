@@ -1591,92 +1591,6 @@ def events_run_length_stats(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# streaming heavy hitters (space-saving)
-# ---------------------------------------------------------------------------
-
-_HH_M = 256  # > distinct users at every test SF: the convergent regime,
-# so the stateful plumbing gets a FULL batch oracle; the eviction
-# regime's guarantees are pinned by tests/test_mlprep.py property tests
-
-
-@register(
-    "streaming_heavy_hitters",
-    # with m above the distinct-key count space-saving never evicts, so
-    # the stream converges to exact per-key counts
-    """
-    SELECT CAST(user_id AS VARCHAR) AS key,
-           COUNT(*) AS est_count,
-           CAST(0 AS BIGINT) AS max_err
-    FROM events WHERE user_id IS NOT NULL
-    GROUP BY 1
-    """,
-)
-def streaming_heavy_hitters(spark, sf_dir):
-    """Streaming top-key summary by the space-saving algorithm
-    (Metwally et al. 2005) run as an applyInPandasWithState fold,
-    driven to completion with availableNow.  Registered in the
-    convergent regime (m=256 > distinct users) so the batch oracle is
-    exact counts; the eviction regime -- every key with frequency >
-    n/m tracked, true <= est <= true + max_err -- is pinned by the
-    property tests.  At cluster scale the same update runs per
-    partition and summaries merge pairwise (space-saving is mergeable,
-    Agarwal et al. 2012).
-
-    State partitioning: the fold has exactly ONE group, so the stream
-    runs with spark.sql.shuffle.partitions=1 (restored after the
-    drain).  With the session default (32) Spark instantiates 32
-    state-store partitions of which 31 hold no state yet still pay
-    task launch + delta-file commit + maintenance every micro-batch --
-    the r14 wall regression (1.9-2.1 s five-round band -> 4.96 s
-    committed, 5.30/3.55 s judge re-probes): aggregate state-store
-    commitTimeMs measured 9.5-11.7 s across the 32 instances vs ~40 ms
-    with one, and the empty commits serialize under host/disk
-    contention.  Interleaved same-session A/B (r15): parts=32 drains
-    3.1-4.0 s, parts=1 drains 2.1-2.5 s -- back inside the committed
-    band.  A cluster-scale deployment with real per-key state sizes
-    shuffle partitions to the key cardinality instead; 1 is simply
-    that rule applied to a single-group summary."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from .streaming.metrics_stream import read_events_stream
-    from .streaming.stateful import space_saving_heavy_hitters
-
-    d = tempfile.mkdtemp(prefix="events_stream_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-        shutil.copy(os.path.join(sf_dir, "events.parquet"), d)
-        name = "hh_" + uuid.uuid4().hex[:8]
-        q = (
-            space_saving_heavy_hitters(
-                read_events_stream(spark, d), key_col="user_id", m=_HH_M
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError(
-                "streaming_heavy_hitters did not drain within 120s"
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.sql(
-        f"""SELECT key,
-                   max_by(est_count, n_total) AS est_count,
-                   max_by(max_err, n_total) AS max_err
-            FROM {name} GROUP BY key"""
-    )
-
-
-# ---------------------------------------------------------------------------
 # weight-of-evidence encoding + information value
 # ---------------------------------------------------------------------------
 #

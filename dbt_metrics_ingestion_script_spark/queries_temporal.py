@@ -49,8 +49,7 @@ _SNAP_T1 = "2024-01-10 00:00:00"
 _SNAP_T2 = "2024-01-20 00:00:00"
 
 
-def _snapshot_oracle(as_of: str | None) -> str:
-    bound = f"AND ts <= TIMESTAMP '{as_of}'" if as_of else ""
+def _snapshot_oracle(as_of: str) -> str:
     return f"""
     WITH ranked AS (
       SELECT user_id, ts AS state_ts, event_id AS state_seq,
@@ -59,7 +58,7 @@ def _snapshot_oracle(as_of: str | None) -> str:
                PARTITION BY user_id ORDER BY ts DESC, event_id DESC
              ) AS rn
       FROM events
-      WHERE ts IS NOT NULL {bound}
+      WHERE ts IS NOT NULL AND ts <= TIMESTAMP '{as_of}'
     )
     SELECT user_id, state_ts, state_seq, state_op, value
     FROM ranked WHERE rn = 1 AND state_op <> 'error'
@@ -1156,60 +1155,6 @@ def dq_value_histogram_equidepth(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# streaming changelog-snapshot maintenance
-# ---------------------------------------------------------------------------
-
-
-@register("streaming_snapshot_maintenance", _snapshot_oracle(None))
-def streaming_snapshot_maintenance_query(spark, sf_dir):
-    """STREAMING face of the changelog snapshot: events arrive as
-    micro-batches (the fixture is re-laid as two files, maxFilesPerTrigger=1
-    -> two foreachBatch folds), each batch reduces to its per-key
-    latest records and folds into the crash-atomic snapshot store;
-    latest-wins over (ts, seq) is associative+commutative so the
-    drained store equals the batch snapshot_at over the whole log --
-    the DuckDB window oracle -- regardless of how ingestion split the
-    records.  Tombstones live in the store (a late-but-earlier record
-    cannot resurrect a deleted key); only the returned live view
-    filters them.
-
-    The live view is returned LAZILY over the store's parquet (the
-    temp store dir is reaped at interpreter exit, not here -- the
-    overlap-drain pattern): snapshot cardinality is the distinct key
-    count, which is driver-hostile at 100x, so the snapshot never
-    passes through a collect() (VERDICT r13 item 5)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    from .streaming.metrics_stream import (
-        read_events_stream,
-        streaming_snapshot_maintenance,
-    )
-
-    d = tempfile.mkdtemp(prefix="events_snap_stream_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    src = os.path.join(d, "log")
-    store = os.path.join(d, "store")
-    spark.read.parquet(os.path.join(sf_dir, "events.parquet")).repartition(
-        2
-    ).write.parquet(src)
-    stream = read_events_stream(spark, src)
-    return streaming_snapshot_maintenance(
-        spark,
-        stream,
-        store,
-        key_col="user_id",
-        ts_col="ts",
-        seq_col="event_id",
-        op_col="event_type",
-        delete_op="error",
-        value_cols=["value"],
-    )
-
-
-# ---------------------------------------------------------------------------
 # PSI distribution drift (the tabular twin of embeddings_label_drift)
 # ---------------------------------------------------------------------------
 
@@ -1541,64 +1486,6 @@ def events_survival_curve(spark, sf_dir):
             6,
         ).alias("survival"),
     )
-
-
-# ---------------------------------------------------------------------------
-# streaming exactly-once dedup within watermark
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "streaming_dedup_within_watermark",
-    """
-    SELECT event_id, user_id, ts, event_type, value
-    FROM events WHERE ts IS NOT NULL
-    """,
-)
-def streaming_dedup_within_watermark(spark, sf_dir):
-    """At-least-once ingestion healed in-stream: the event feed is
-    deliberately delivered TWICE (two identical files, one per
-    micro-batch) and `dropDuplicatesWithinWatermark` on the event key
-    emits each event exactly once -- the second delivery hits the
-    keyed state within the watermark and is dropped, state for keys
-    older than the watermark is evicted (bounded memory, unlike an
-    unbounded `dropDuplicates`).  The oracle is simply the events
-    table: a correct exactly-once heal leaves NO trace of the
-    duplication.  Redelivery across micro-batches is precisely the
-    failure-retry shape checkpointed sources produce."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from .streaming.metrics_stream import read_events_stream
-
-    d = tempfile.mkdtemp(prefix="events_dup_stream_")
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        shutil.copy(src, os.path.join(d, "copy1.parquet"))
-        shutil.copy(src, os.path.join(d, "copy2.parquet"))
-        stream = (
-            read_events_stream(spark, d)
-            .where(F.col("ts").isNotNull())
-            .select("event_id", "user_id", "ts", "event_type", "value")
-            .withWatermark("ts", "60 days")
-            .dropDuplicatesWithinWatermark(["event_id"])
-        )
-        name = "dedup_wm_" + uuid.uuid4().hex[:8]
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError("streaming_dedup_within_watermark did not drain")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.table(name)
 
 
 # ---------------------------------------------------------------------------

@@ -12,9 +12,9 @@ pointer file naming the one being served:
 A writer fills a fresh `staging_dir` and hands it to `publish`, which
 renames it to the next free `v{N}` and only then swaps the pointer
 (fsync, then os.replace).  A reader `resolve`s the pointer ONCE per
-query / micro-batch and reads only inside that version, so a publish
-never tears a read, and a superseded version stays readable until
-`vacuum` prunes it.
+query and reads only inside that version, so a publish never tears a
+read, and a superseded version stays readable until `vacuum` prunes
+it.
 
 Used by the IVF-PQ serving store (operators/similarity.py) and the
 cluster-label store (operators/dedup.py).
@@ -139,12 +139,11 @@ def vacuum(base_path: str, retain_sec: float = 0.0) -> list[str]:
     Retention lease: a superseded version is skipped until it has been
     superseded for at least `retain_sec` seconds, measured from the
     first publish-log entry after its own last publish.  Readers
-    resolve once per query / micro-batch, so `retain_sec` >= the
-    longest query or batch makes vacuum safe against pinned readers
-    without coordination; the default 0.0 leaves that judgment to the
-    caller.  A version never published (a crashed writer's orphan) has
-    no lease and is always removable; a store without a log has no
-    leases.  Staging directories are never touched."""
+    resolve once per query, so `retain_sec` >= the longest query
+    makes vacuum safe against pinned readers without coordination; the
+    default 0.0 leaves that judgment to the caller.  A version never
+    published (a crashed writer's orphan) has no lease and is always
+    removable; a store without a log has no leases.  Staging directories are never touched."""
     current = os.path.basename(resolve(base_path))
     log = read_publish_log(base_path)
     now = time.time()

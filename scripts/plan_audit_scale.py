@@ -86,7 +86,7 @@ WAVE2 = [
     "dedup_semantic_survivors",
     "dedup_semantic_clusters_celled",
     "dedup_semantic_survivors_celled",
-    "dedup_duplicate_clusters_star",
+    "dedup_duplicate_clusters",
     "similarity_ivf_pq_batch_topk",
     "similarity_ivf_pq_batch_topk_served",
     "corpus_training_pipeline",

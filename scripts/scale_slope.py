@@ -62,7 +62,6 @@ DEFAULT_SET = [
     "text_bpe_merges",
     "text_bpe_encoded_lengths",
     "dedup_duplicate_clusters",
-    "dedup_duplicate_clusters_star",
     "similarity_ivf_pq_batch_topk",
     "similarity_ivf_pq_topk",
     "dedup_embedding_incremental_vs_corpus",

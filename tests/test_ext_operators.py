@@ -21,7 +21,6 @@ EXT_ORACLE_QUERIES = [
     "dedup_near_minhash_survivors",
     "dedup_embedding_lsh_survivors",
     "dedup_duplicate_clusters",
-    "dedup_duplicate_clusters_star",
     "similarity_cosine_topk",
     "similarity_norm_stats_by_label",
     "text_stats",
@@ -1334,6 +1333,39 @@ def test_sessionize_duration_and_bounds(spark):
     assert r["n_events"] == 2
     assert r["duration_us"] == 300 * 1_000_000 + 500_000
     assert r["session_start"] == rows[0][2] and r["session_end"] == rows[1][2]
+
+
+def test_session_window_gap_boundary(spark):
+    """Boundary pin (empirically verified): Spark's session_window
+    MERGES an exactly-gap step (windows merge while next start <=
+    previous end) -- the same `gap >` split rule as sessionize; one
+    microsecond past the gap splits.  A naive half-open `>=` oracle
+    would split the exact step and diverge."""
+    import datetime
+
+    from dbt_metrics_ingestion_script_spark.operators.sessions import (
+        session_window_stats,
+        sessionize,
+    )
+
+    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
+
+    def mk(delta):
+        return spark.createDataFrame(
+            [
+                (0, t0, 7, "view", 1.0, "{}"),
+                (1, t0 + delta, 7, "view", 1.0, "{}"),
+            ],
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string",
+        )
+
+    exact = mk(datetime.timedelta(minutes=30))
+    assert len(session_window_stats(exact, gap="30 minutes").collect()) == 1
+    assert len(sessionize(exact, gap_minutes=30).collect()) == 1
+    past = mk(datetime.timedelta(minutes=30, microseconds=1))
+    assert len(session_window_stats(past, gap="30 minutes").collect()) == 2
+    assert len(sessionize(past, gap_minutes=30).collect()) == 2
 
 
 def test_pii_scrub_counts_and_redaction(spark):
@@ -3312,376 +3344,7 @@ def test_interval_overlap_join_guards(spark):
     assert pairs(max_span_buckets=48) == [(1, 100), (2, 100), (2, 101)]
 
 
-def _overlap_stream_files(tmp_path, side, named_rows):
-    """Write one parquet file per (name, rows) with increasing mtimes so
-    maxFilesPerTrigger=1 drains them as successive micro-batches."""
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    d = str(tmp_path / side)
-    os.makedirs(d, exist_ok=True)
-    base = _time.time() - 1000
-    for i, (name, rows) in enumerate(named_rows):
-        p = os.path.join(d, name)
-        pq.write_table(
-            pa.table(
-                {
-                    "id": pa.array([r[0] for r in rows], pa.int64()),
-                    "s": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                    "e": pa.array([r[2] for r in rows], pa.timestamp("us")),
-                }
-            ),
-            p,
-        )
-        os.utime(p, (base + 10 * i, base + 10 * i))
-    return d
-
-
-def test_interval_overlap_join_stream_cross_batch_pairs(spark, tmp_path):
-    """Stream-STREAM overlap join (state on both sides): the
-    canonical-bucket replication supplies the equality key the
-    symmetric hash join requires, and a pair whose two sides arrive in
-    DIFFERENT micro-batches is emitted from state -- then the whole
-    drain equals the batch operator under the same length cap, with
-    zero duplicate pairs even though overlapping spans share many
-    buckets."""
-    import datetime
-    import os
-
-    from dbt_metrics_ingestion_script_spark.operators.ranges import (
-        interval_overlap_join,
-        interval_overlap_join_stream,
-    )
-
-    t = lambda h, m=0: datetime.datetime(2024, 1, 1 + h // 24, h % 24, m)  # noqa: E731
-    # left batch 1: l1; left batch 2: l2
-    ldir = _overlap_stream_files(
-        tmp_path, "left",
-        [
-            ("l1.parquet", [(1, t(0), t(2))]),
-            ("l2.parquet", [(2, t(10), t(11))]),
-        ],
-    )
-    # right batch 1: r1 (same-batch pair with l1); right batch 2: r2
-    # (CROSS-batch pair with l1, which is already in state) + r3
-    rdir = _overlap_stream_files(
-        tmp_path, "right",
-        [
-            ("r1.parquet", [(100, t(1), t(1, 30))]),
-            (
-                "r2.parquet",
-                [(101, t(1, 30), t(3)), (102, t(10, 30), t(12))],
-            ),
-        ],
-    )
-    lschema = "lid long, ls timestamp, le timestamp"
-    rschema = "rid long, rs timestamp, re timestamp"
-    lstream = (
-        spark.readStream.schema("id long, s timestamp, e timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ldir)
-        .toDF("lid", "ls", "le")
-    )
-    rstream = (
-        spark.readStream.schema("id long, s timestamp, e timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(rdir)
-        .toDF("rid", "rs", "re")
-    )
-    pairs = interval_overlap_join_stream(
-        lstream, rstream,
-        left_start="ls", left_end="le",
-        right_start="rs", right_end="re",
-        bucket_minutes=60, max_interval_minutes=24 * 60,
-        watermark="30 days",
-    )
-    out = str(tmp_path / "out")
-    q = (
-        pairs.writeStream.format("parquet")
-        .option("path", os.path.join(out, "pairs"))
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    got = sorted(
-        (r["lid"], r["rid"])
-        for r in spark.read.schema(pairs.schema)
-        .parquet(os.path.join(out, "pairs"))
-        .collect()
-    )
-    # the (1, 101) pair is cross-batch by construction: l1 drained in
-    # left micro-batch 1, r2 in right micro-batch 2
-    assert got == [(1, 100), (1, 101), (2, 102)]
-    assert len(got) == len(set(got)), "duplicate pair reported"
-    # batch convergence: identical to the batch operator under the cap
-    left_b = spark.createDataFrame(
-        [(1, t(0), t(2)), (2, t(10), t(11))], lschema
-    )
-    right_b = spark.createDataFrame(
-        [(100, t(1), t(1, 30)), (101, t(1, 30), t(3)), (102, t(10, 30), t(12))],
-        rschema,
-    )
-    want = sorted(
-        (r["lid"], r["rid"])
-        for r in interval_overlap_join(
-            left_b, right_b,
-            left_start="ls", left_end="le",
-            right_start="rs", right_end="re",
-            bucket_minutes=60, max_span_buckets=24,
-        ).collect()
-    )
-    assert got == want
-
-
-def test_interval_overlap_join_stream_checkpoint_restart(spark, tmp_path):
-    """Checkpoint recovery for the stream-stream overlap: run 1 drains
-    a left interval with no partner; run 2 (a NEW query object on the
-    SAME checkpoint) delivers the matching right interval -- the pair
-    must emit from RECOVERED state, and run 1's pair must not
-    re-emit."""
-    import datetime
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dbt_metrics_ingestion_script_spark.operators.ranges import (
-        interval_overlap_join_stream,
-    )
-
-    t = lambda h, m=0: datetime.datetime(2024, 1, 1, h, m)  # noqa: E731
-    ldir = str(tmp_path / "left"); os.makedirs(ldir)
-    rdir = str(tmp_path / "right"); os.makedirs(rdir)
-    out = str(tmp_path / "out")
-
-    def write(d, name, rows, mtime):
-        p = os.path.join(d, name)
-        pq.write_table(
-            pa.table(
-                {
-                    "id": pa.array([r[0] for r in rows], pa.int64()),
-                    "s": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                    "e": pa.array([r[2] for r in rows], pa.timestamp("us")),
-                }
-            ),
-            p,
-        )
-        os.utime(p, (mtime, mtime))
-
-    def run_once():
-        lstream = (
-            spark.readStream.schema("id long, s timestamp, e timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ldir)
-            .toDF("lid", "ls", "le")
-        )
-        rstream = (
-            spark.readStream.schema("id long, s timestamp, e timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(rdir)
-            .toDF("rid", "rs", "re")
-        )
-        pairs = interval_overlap_join_stream(
-            lstream, rstream,
-            left_start="ls", left_end="le",
-            right_start="rs", right_end="re",
-            bucket_minutes=60, max_interval_minutes=24 * 60,
-            watermark="30 days",
-        )
-        q = (
-            pairs.writeStream.format("parquet")
-            .option("path", os.path.join(out, "pairs"))
-            .option("checkpointLocation", os.path.join(out, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        return pairs.schema
-
-    now = _time.time()
-    write(ldir, "l1.parquet", [(1, t(0), t(2))], now - 100)
-    write(rdir, "r1.parquet", [(100, t(1), t(1, 30))], now - 100)
-    schema = run_once()  # run 1: (1, 100)
-
-    # run 2: only a NEW right interval arrives; its partner lives in
-    # run 1's recovered left state
-    write(rdir, "r2.parquet", [(101, t(0, 30), t(3))], now - 50)
-    run_once()
-
-    got = sorted(
-        (r["lid"], r["rid"])
-        for r in spark.read.schema(schema)
-        .parquet(os.path.join(out, "pairs"))
-        .collect()
-    )
-    assert got == [(1, 100), (1, 101)]
-
-
-def test_interval_overlap_join_stream_keyed_mode(spark, tmp_path):
-    """Keyed stream-stream overlap: the key joins ALONGSIDE the bucket
-    id (both are equality conjuncts in the symmetric hash join), so
-    overlapping intervals under different keys never pair; guards
-    match the batch operator."""
-    import datetime
-    import os
-
-    import pytest as _pytest
-
-    from dbt_metrics_ingestion_script_spark.operators.ranges import (
-        interval_overlap_join_stream,
-    )
-
-    t = lambda h, m=0: datetime.datetime(2024, 1, 1, h, m)  # noqa: E731
-    ldir = _overlap_stream_files(
-        tmp_path, "left",
-        [("l1.parquet", [(1, t(0), t(2)), (2, t(0), t(2))])],
-    )
-    rdir = _overlap_stream_files(
-        tmp_path, "right",
-        [("r1.parquet", [(100, t(1), t(3)), (101, t(1), t(3))])],
-    )
-    # key: odd/even id -- l1(k=1) pairs only with r101(k=1), l2(k=0)
-    # only with r100(k=0), despite all four intervals overlapping
-    lstream = (
-        spark.readStream.schema("id long, s timestamp, e timestamp")
-        .parquet(ldir)
-        .selectExpr("id AS lid", "id % 2 AS k", "s AS ls", "e AS le")
-    )
-    rstream = (
-        spark.readStream.schema("id long, s timestamp, e timestamp")
-        .parquet(rdir)
-        .selectExpr("id AS rid", "id % 2 AS k", "s AS rs", "e AS re")
-    )
-    pairs = interval_overlap_join_stream(
-        lstream, rstream,
-        left_start="ls", left_end="le",
-        right_start="rs", right_end="re",
-        on="k", bucket_minutes=60, max_interval_minutes=24 * 60,
-        watermark="30 days",
-    )
-    out = str(tmp_path / "out")
-    q = (
-        pairs.writeStream.format("parquet")
-        .option("path", os.path.join(out, "pairs"))
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    got = sorted(
-        (r["lid"], r["rid"], r["k"])
-        for r in spark.read.schema(pairs.schema)
-        .parquet(os.path.join(out, "pairs"))
-        .collect()
-    )
-    assert got == [(1, 101, 1), (2, 100, 0)]
-
-    with _pytest.raises(ValueError, match="missing from right"):
-        interval_overlap_join_stream(
-            lstream, rstream.drop("k"),
-            left_start="ls", left_end="le",
-            right_start="rs", right_end="re", on="k",
-        )
-    with _pytest.raises(ValueError, match="max_interval_minutes"):
-        interval_overlap_join_stream(
-            lstream, rstream.drop("k").withColumnRenamed("rid", "rid2"),
-            left_start="ls", left_end="le",
-            right_start="rs", right_end="re", max_interval_minutes=0,
-        )
-
-
-@pytest.mark.slow
-def test_interval_overlap_stream_cap_is_bucket_span_exact(spark, tmp_path):
-    """ADVICE r13: the stream's length cap is expressed in BUCKET-SPAN
-    terms -- the exact filter interval_overlap_join's max_span_buckets
-    applies -- so the pinned batch differential holds even at the cap
-    boundary.  The adversarial input: an interval of duration exactly
-    max_interval_minutes (24h) that straddles one extra bucket edge
-    (00:30-24:30 spans 25 hourly buckets).  Both engines must DROP it;
-    a duration-based stream cap would have kept it and diverged."""
-    import datetime
-    import os
-
-    import pytest as _pytest
-
-    from dbt_metrics_ingestion_script_spark.operators.ranges import (
-        interval_overlap_join,
-        interval_overlap_join_stream,
-    )
-
-    def t(h, m=0):
-        return datetime.datetime(2024, 1, 1) + datetime.timedelta(
-            hours=h, minutes=m
-        )
-
-    # l1 straddles: duration exactly 24h over 25 buckets; l2 is a
-    # control pair well under the cap
-    left_rows = [(1, t(0, 30), t(24, 30)), (2, t(1), t(2))]
-    right_rows = [(100, t(1), t(1, 30))]
-    lschema = "lid long, ls timestamp, le timestamp"
-    rschema = "rid long, rs timestamp, re timestamp"
-    ldir, rdir = str(tmp_path / "l"), str(tmp_path / "r")
-    spark.createDataFrame(left_rows, lschema).coalesce(1).write.parquet(ldir)
-    spark.createDataFrame(right_rows, rschema).coalesce(1).write.parquet(rdir)
-    pairs = interval_overlap_join_stream(
-        spark.readStream.schema(lschema).parquet(ldir),
-        spark.readStream.schema(rschema).parquet(rdir),
-        left_start="ls", left_end="le",
-        right_start="rs", right_end="re",
-        bucket_minutes=60, max_interval_minutes=24 * 60,
-        watermark="30 days",
-    )
-    out = str(tmp_path / "out")
-    q = (
-        pairs.writeStream.format("parquet")
-        .option("path", os.path.join(out, "pairs"))
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    got = sorted(
-        (r["lid"], r["rid"])
-        for r in spark.read.schema(pairs.schema)
-        .parquet(os.path.join(out, "pairs"))
-        .collect()
-    )
-    want = sorted(
-        (r["lid"], r["rid"])
-        for r in interval_overlap_join(
-            spark.createDataFrame(left_rows, lschema),
-            spark.createDataFrame(right_rows, rschema),
-            left_start="ls", left_end="le",
-            right_start="rs", right_end="re",
-            bucket_minutes=60, max_span_buckets=24,
-        ).collect()
-    )
-    # the straddling boundary interval drops on BOTH engines
-    assert got == want == [(2, 100)]
-
-    # the exactness precondition is validated, not assumed
-    with _pytest.raises(ValueError, match="multiple of bucket_minutes"):
-        interval_overlap_join_stream(
-            spark.readStream.schema(lschema).parquet(ldir),
-            spark.readStream.schema(rschema).parquet(rdir),
-            left_start="ls", left_end="le",
-            right_start="rs", right_end="re",
-            bucket_minutes=60, max_interval_minutes=90,
-        )
-
-
-def test_ensure_scan_parallelism_guard_contract(
-    spark, tmp_path, monkeypatch
-):
+def test_ensure_scan_parallelism_guard_contract(spark, monkeypatch):
     """r16 fan-out guard contract: under-split frames repartition to a
     SIZE-DERIVED width (ceil(estimated bytes / target), capped at
     defaultParallelism -- VERDICT r15 items 3/8: the r15 guard fanned
@@ -3689,10 +3352,7 @@ def test_ensure_scan_parallelism_guard_contract(
     metadata-sized frames pass through untouched (the in-query ANN
     store-build exemption), exchange-bearing plans are never probed
     (ADVICE r15 medium: .rdd under AQE would EXECUTE the upstream
-    stages at build time), and STREAMING frames bypass the probe
-    entirely (df.rdd on a streaming source is an AnalysisException --
-    the regression that broke streaming_quality_filter_report when the
-    guard first landed in repetition_signals)."""
+    stages at build time)."""
     from dbt_metrics_ingestion_script_spark.operators.similarity import (
         ensure_scan_parallelism,
     )
@@ -3725,9 +3385,3 @@ def test_ensure_scan_parallelism_guard_contract(
     assert ensure_scan_parallelism(wide, "id") is wide
     agg = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
     assert ensure_scan_parallelism(agg, "k") is agg
-    # streaming: bypassed, frame returned untouched, no exception
-    src = str(tmp_path / "stream_src")
-    spark.range(10).selectExpr("id", "id AS doc_id").write.parquet(src)
-    stream = spark.readStream.schema("id long, doc_id long").parquet(src)
-    out = ensure_scan_parallelism(stream, "doc_id")
-    assert out is stream

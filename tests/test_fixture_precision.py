@@ -51,17 +51,17 @@ def test_events_ts_parquet_type_is_pinned(sf_dir):
 
     The fixture was regenerated between rounds 2 and 3 from
     TIMESTAMP(NANOS) to timestamp[us], silently flipping Spark's inferred
-    type from bigint (nanosAsLong) to TIMESTAMP_NTZ and breaking the
-    streaming watermark.  The loaders now handle bigint, timestamp_ntz,
-    and timestamp — but any OTHER type a future regeneration produces
-    must fail loudly here, not downstream in a watermark error.
+    type from bigint (nanosAsLong) to TIMESTAMP_NTZ.  The loader now
+    handles bigint, timestamp_ntz, and timestamp — but any OTHER type a
+    future regeneration produces must fail loudly here, not downstream
+    in a type error.
     """
     import pyarrow.parquet as pq
 
     t = pq.read_schema(f"{sf_dir}/events.parquet").field("ts").type
     assert str(t) in {"timestamp[us]", "timestamp[us, tz=UTC]", "timestamp[ns]"}, (
-        f"{sf_dir}/events.parquet ts is {t}; the Spark loaders "
-        f"(sources/tables.py:_load_events, streaming/metrics_stream.py:"
-        f"read_events_stream) only handle nanos-as-long, timestamp_ntz "
-        f"and timestamp — extend them before accepting this fixture shape"
+        f"{sf_dir}/events.parquet ts is {t}; the Spark loader "
+        f"(sources/tables.py:_load_events) only handles nanos-as-long, "
+        f"timestamp_ntz and timestamp — extend it before accepting this "
+        f"fixture shape"
     )

@@ -690,134 +690,6 @@ def test_run_length_totals_conserve_events(spark):
 
 
 # ---------------------------------------------------------------------------
-# space-saving heavy hitters
-# ---------------------------------------------------------------------------
-
-
-def _run_space_saving(summary_m, stream):
-    """Reference driver: feed `stream` (list of key lists = micro-
-    batches) through the SAME insertion rule in pure Python."""
-    summary, n = {}, 0
-    for batch in stream:
-        from collections import Counter
-
-        vc = Counter(batch)
-        n += len(batch)
-        for k in sorted(vc, key=lambda x: (-vc[x], str(x))):
-            c = vc[k]
-            if k in summary:
-                summary[k][0] += c
-            elif len(summary) < summary_m:
-                summary[k] = [c, 0]
-            else:
-                vk = min(summary.items(), key=lambda kv: (kv[1][0], kv[0]))
-                vmin = vk[1][0]
-                del summary[vk[0]]
-                summary[k] = [c + vmin, vmin]
-    return summary, n
-
-
-def test_space_saving_guarantees_under_eviction():
-    """m=4 over a skewed 3-batch stream: every key above n/m is
-    tracked, and true <= est <= true + err for each tracked key."""
-    from collections import Counter
-
-    stream = [
-        ["a"] * 40 + ["b"] * 20 + list("cdefg"),
-        ["a"] * 30 + ["h"] * 25 + list("ijklm"),
-        ["b"] * 15 + ["n"] * 3 + ["a"] * 2,
-    ]
-    truth = Counter([k for b in stream for k in b])
-    summary, n = _run_space_saving(4, stream)
-    assert n == sum(truth.values())
-    for k, cnt in truth.items():
-        if cnt > n / 4:
-            assert k in summary, (k, cnt, n)
-    for k, (est, err) in summary.items():
-        assert truth[k] <= est <= truth[k] + err
-        assert err <= n / 4
-
-
-def test_streaming_heavy_hitters_converges_to_exact(spark):
-    """Convergent regime (m > distinct keys): the streamed summary
-    equals the batch groupBy exactly, zero error."""
-    from dbt_metrics_ingestion_script_spark.queries_mlprep import (
-        streaming_heavy_hitters,
-    )
-
-    got = {
-        r["key"]: (r["est_count"], r["max_err"])
-        for r in streaming_heavy_hitters(spark, SF).collect()
-    }
-    exact = {
-        str(r["user_id"]): r["n"]
-        for r in spark.read.parquet(f"{SF}/events.parquet")
-        .where(F.col("user_id").isNotNull())
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert got.keys() == exact.keys()
-    for k, (est, err) in got.items():
-        assert est == exact[k] and err == 0
-
-
-def test_streaming_heavy_hitters_single_state_partition(spark):
-    """r14 wall-regression root cause (VERDICT r14 'wrong' 1): the
-    single-group fold must run with ONE state partition -- with the
-    session default (32) the 31 empty state stores each pay task +
-    commit overhead that serializes under host contention (measured
-    commitTimeMs sum 9.5-11.7 s at parts=32 vs ~40 ms at parts=1).
-    Asserts (a) the stream's state operator reports
-    numShufflePartitions == 1 via the progress listener, and (b) the
-    session conf is restored afterwards."""
-    import json as _json
-    import threading
-
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    from dbt_metrics_ingestion_script_spark.queries_mlprep import (
-        streaming_heavy_hitters,
-    )
-
-    seen: list[int] = []
-    lock = threading.Lock()
-
-    class L(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            p = _json.loads(event.progress.json)
-            with lock:
-                for so in p.get("stateOperators", []):
-                    if so.get("numShufflePartitions") is not None:
-                        seen.append(int(so["numShufflePartitions"]))
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            pass
-
-    listener = L()
-    spark.streams.addListener(listener)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        assert streaming_heavy_hitters(spark, SF).count() > 0
-        # listener delivery is async
-        import time as _time
-
-        deadline = _time.time() + 10
-        while not seen and _time.time() < deadline:
-            _time.sleep(0.2)
-    finally:
-        spark.streams.removeListener(listener)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    assert seen and set(seen) == {1}, seen
-
-
-# ---------------------------------------------------------------------------
 # WOE / chi2 / separability
 # ---------------------------------------------------------------------------
 

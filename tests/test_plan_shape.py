@@ -82,11 +82,9 @@ def test_sketch_self_join_reuses_exchange(spark):
 def test_no_python_eval_in_hot_paths(spark):
     """Zero row-level Python in ANY registered plan (SCALE.md UDF
     policy): no BatchEvalPython (pickled row UDF) anywhere; Arrow-batch
-    Python only in the explicitly-Arrow surfaces (multimodal mapInPandas,
-    streaming applyInPandasWithState)."""
+    Python only in the explicitly-Arrow surface (multimodal
+    mapInPandas)."""
     for name, qd in q.REGISTRY.items():
-        if name.startswith("streaming_"):
-            continue  # applyInPandasWithState by design; covered in test_streaming
         plan = plan_of(qd.fn(spark, SF_DIR))
         assert "BatchEvalPython" not in plan, name
         if not name.startswith("multimodal_"):

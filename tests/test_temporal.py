@@ -252,57 +252,6 @@ def test_equidepth_buckets_balanced_and_ordered(spark, sf_dir):
         assert prev["hi"] <= cur["lo"]  # non-overlapping value ranges
 
 
-def test_snapshot_fold_matches_one_pass_any_split(spark):
-    from dbt_metrics_ingestion_script_spark.operators.temporal import (
-        latest_records,
-        live_view,
-        snapshot_fold,
-    )
-
-    log = _log(spark)
-    kw = dict(key_col="k", ts_col="ts", seq_col="seq", op_col="op",
-              value_cols=["v"])
-    one_pass = latest_records(log, **kw)
-    # adversarial split: the tombstones and their overriding upserts
-    # land in DIFFERENT batches, in both orders
-    for pred in (F.col("seq") % 2 == 0, F.col("seq") <= 4):
-        b1 = latest_records(log.where(pred), **kw)
-        b2 = latest_records(log.where(~pred), **kw)
-        for folded in (
-            snapshot_fold(b1, b2, key_col="k", value_cols=["v"]),
-            snapshot_fold(b2, b1, key_col="k", value_cols=["v"]),
-        ):
-            assert sorted(map(tuple, folded.collect())) == sorted(
-                map(tuple, one_pass.collect())
-            )
-    # live view hides tombstoned keys but the fold retained them
-    assert {r["k"] for r in one_pass.collect()} == {1, 2, 3}
-    assert {r["k"] for r in live_view(one_pass).collect()} == {1, 3}
-
-
-def test_snapshot_fold_late_record_cannot_resurrect_tombstone(spark):
-    from dbt_metrics_ingestion_script_spark.operators.temporal import (
-        latest_records,
-        live_view,
-        snapshot_fold,
-    )
-
-    kw = dict(key_col="k", ts_col="ts", seq_col="seq", op_col="op",
-              value_cols=["v"])
-    schema = "seq bigint, ts timestamp, k bigint, op string, v double"
-    batch1 = spark.createDataFrame([(2, _ts(5), 1, "del", None)], schema)
-    # batch 2 arrives LATER but carries an EARLIER-timestamped upsert
-    batch2 = spark.createDataFrame([(1, _ts(3), 1, "set", 7.0)], schema)
-    folded = snapshot_fold(
-        latest_records(batch1, **kw),
-        latest_records(batch2, **kw),
-        key_col="k",
-        value_cols=["v"],
-    )
-    assert live_view(folded).count() == 0  # still deleted
-    assert folded.collect()[0]["state_op"] == "del"  # tombstone retained
-
-
 def test_psi_drift_totals_and_smoothing(spark, sf_dir):
     from dbt_metrics_ingestion_script_spark.queries_temporal import (
         _PSI_BUCKETS,

@@ -187,14 +187,13 @@ def test_duplicate_clusters_chain_corpus_matches_oracle(spark, tmp_path_factory)
     q.queries()
     tmpdir = str(tmp_path_factory.mktemp("chaincorpus"))
     _write_documents(spark, tmpdir, texts)
-    for name in ("dedup_duplicate_clusters", "dedup_duplicate_clusters_star"):
-        qd = q.REGISTRY[name]
-        s_rows = sorted(tuple(r) for r in qd.fn(spark, tmpdir).collect())
-        _, o_rows = _run_duckdb(qd.oracle, tmpdir)
-        assert s_rows == sorted(o_rows), name
-        if s_rows:  # every flagged doc resolves to one shared min label
-            labels = {c for _, c in s_rows}
-            assert min(labels) == min(d for d, _ in s_rows)
+    qd = q.REGISTRY["dedup_duplicate_clusters"]
+    s_rows = sorted(tuple(r) for r in qd.fn(spark, tmpdir).collect())
+    _, o_rows = _run_duckdb(qd.oracle, tmpdir)
+    assert s_rows == sorted(o_rows)
+    if s_rows:  # every flagged doc resolves to one shared min label
+        labels = {c for _, c in s_rows}
+        assert min(labels) == min(d for d, _ in s_rows)
 
 
 @pytest.mark.slow
@@ -213,10 +212,7 @@ def test_corpus_ops_agree_on_null_rows(spark, tmp_path_factory):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmpdir}/documents.parquet")
     q.queries()
-    for name in CORPUS_QUERIES + [
-        "dedup_duplicate_clusters",
-        "dedup_duplicate_clusters_star",
-    ]:
+    for name in CORPUS_QUERIES + ["dedup_duplicate_clusters"]:
         qd = q.REGISTRY[name]
         s_rows = sorted(
             map(repr, (tuple(r) for r in qd.fn(spark, tmpdir).collect()))

@@ -29,8 +29,6 @@ STORE_BACKED_QUERIES = [
     "similarity_ivf_pq_batch_topk_after_delete",
     "similarity_ivf_store_cell_stats",
     "similarity_ivf_store_drift",
-    "streaming_ivf_pq_ingest_served",
-    "streaming_ivf_pq_serve",
     "dedup_clusters_incremental_vs_corpus_served",
 ]
 
@@ -70,9 +68,10 @@ def test_failed_promotion_publishes_nothing(
 
 
 def test_pointer_protocol_has_one_owner():
-    """Only sinks/versioned.py knows the pointer file's name and makes
-    it durable; every store goes through its publish."""
-    owners = {"_current": [], "os.fsync": []}
+    """Only sinks/versioned.py knows the pointer file's name, makes it
+    durable and swaps it atomically; every store goes through its
+    publish."""
+    owners = {"_current": [], "os.fsync": [], "os.replace": []}
     for d, dirs, names in os.walk(PACKAGE):
         dirs[:] = [x for x in dirs if x != "__pycache__"]
         for n in names:
@@ -84,10 +83,11 @@ def test_pointer_protocol_has_one_owner():
             rel = os.path.relpath(path, PACKAGE)
             if '"_current"' in text or "'_current'" in text:
                 owners["_current"].append(rel)
-            if "os.fsync" in text:
-                owners["os.fsync"].append(rel)
+            for call in ("os.fsync", "os.replace"):
+                if call in text:
+                    owners[call].append(rel)
     want = [os.path.relpath(PROTOCOL, PACKAGE)]
-    assert owners == {"_current": want, "os.fsync": want}
+    assert owners == {"_current": want, "os.fsync": want, "os.replace": want}
 
 
 @pytest.fixture(scope="module")
