@@ -18,7 +18,9 @@ import time
 
 from dbt_metrics_ingestion_script_spark import queries as q
 from dbt_metrics_ingestion_script_spark import queries_ext
+from dbt_metrics_ingestion_script_spark.plans.compiler import PLAN_CACHE
 from dbt_metrics_ingestion_script_spark.session import get_spark
+from dbt_metrics_ingestion_script_spark.sources import tables
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # suspect plan fingerprints are compared against the committed
@@ -783,6 +785,10 @@ def main() -> None:
     def run_query(name, fn, iters):
         best = float("inf")
         for _ in range(max(iters, 1)):
+            # each iteration times resolution, compile and execution,
+            # not a reuse of the previous iteration's frames and plans
+            tables.clear_memo()
+            PLAN_CACHE.clear()
             t0 = time.perf_counter()
             n = fn(spark, SF_DIR).count()
             best = min(best, time.perf_counter() - t0)

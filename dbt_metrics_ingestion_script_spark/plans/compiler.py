@@ -32,13 +32,17 @@ reset /root/reference/example_dbt_metrics.yml:78-92; derived
 
 from __future__ import annotations
 
+import copy
 import re
+import threading
+from collections import OrderedDict
 from functools import reduce
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources import tables
 from .metric_spec import MetricFilter, MetricSpec
 
 # ---------------------------------------------------------------------------
@@ -293,6 +297,84 @@ def _agg_column(
 
 
 # ---------------------------------------------------------------------------
+# the plan cache
+# ---------------------------------------------------------------------------
+
+# Plans the cache holds: room for a dashboard's pool of repeated
+# requests.  An entry costs a JVM plan and, once collected, the shuffle
+# files of its stages on local disk.
+PLAN_CACHE_BOUND = 64
+
+
+class PlanCache:
+    """Compiled plans of earlier requests, least recently used first.
+
+    A hit returns the very DataFrame an earlier compile returned, so
+    collecting it again skips compile, analysis and physical planning,
+    and adaptive execution reuses the shuffle stages an earlier collect
+    materialized: only the final stage re-runs.  Nothing is persisted
+    -- a persisted plan would be substituted into every later plan that
+    contains it -- so an entry is only a reference, and an evicted
+    plan's shuffle files are freed by Spark's ContextCleaner like those
+    of any dropped DataFrame."""
+
+    def __init__(self, bound: int) -> None:
+        self.bound = bound
+        self._plans: OrderedDict[tuple, DataFrame] = OrderedDict()
+        self._lock = threading.Lock()
+        self._hits = self._misses = self._evictions = 0
+
+    def get(self, key: tuple) -> DataFrame | None:
+        with self._lock:
+            df = self._plans.get(key)
+            if df is None:
+                self._misses += 1
+            else:
+                self._hits += 1
+                self._plans.move_to_end(key)
+            return df
+
+    def put(self, key: tuple, df: DataFrame) -> None:
+        with self._lock:
+            self._plans[key] = df
+            self._plans.move_to_end(key)
+            while len(self._plans) > self.bound:
+                self._plans.popitem(last=False)
+                self._evictions += 1
+
+    def clear(self) -> None:
+        """Drop every entry; the counters keep counting."""
+        with self._lock:
+            self._plans.clear()
+
+    def stats(self) -> dict[str, int]:
+        with self._lock:
+            return {
+                "hits": self._hits,
+                "misses": self._misses,
+                "evictions": self._evictions,
+                "entries": len(self._plans),
+            }
+
+
+PLAN_CACHE = PlanCache(PLAN_CACHE_BOUND)
+
+
+def plan_cache_stats() -> dict[str, int]:
+    """Hits, misses and evictions since the process started, and the
+    entries held now."""
+    return PLAN_CACHE.stats()
+
+
+def _session_date(spark: SparkSession) -> str:
+    """Today in the session time zone: the date `current_date` takes
+    when Catalyst folds it into a plan."""
+    jvm = spark.sparkContext._jvm
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    return str(jvm.java.time.LocalDate.now(jvm.java.time.ZoneId.of(tz)))
+
+
+# ---------------------------------------------------------------------------
 # the compiler
 # ---------------------------------------------------------------------------
 
@@ -327,8 +409,28 @@ class MetricCompiler:
 
         Output schema: [ts (date)] + dims + <metric name>.  grain=None or
         'all_time' drops the time key.
+
+        Each model the spec reads is resolved once.  When every resolved
+        frame is a table `sources.tables.load_table` memoized, the
+        request goes through PLAN_CACHE, keyed on the canonical spec,
+        the grain, the registry specs it reaches, approx_distinct/rsd,
+        the session and file snapshot of every table, and the
+        session-timezone date when a filter is anchored on
+        `current_date`; any other frame (a filtered or in-memory one)
+        compiles anew on every call.
         """
-        return self._compile(spec, grain, visiting=())
+        models, reached = self._reach(spec)
+        frames = {m: self.resolver(m) for m in sorted(models)}
+        resolved = copy.copy(self)
+        resolved.resolver = frames.__getitem__
+        key = self._plan_key(spec, grain, frames, reached)
+        if key is None:
+            return resolved._compile(spec, grain, visiting=())
+        df = PLAN_CACHE.get(key)
+        if df is None:
+            df = resolved._compile(spec, grain, visiting=())
+            PLAN_CACHE.put(key, df)
+        return df
 
     def compile_all_grains(self, spec: MetricSpec) -> dict[str, DataFrame]:
         """One DataFrame per declared grain.
@@ -392,6 +494,49 @@ class MetricCompiler:
         return df.agg(*aggs)
 
     # -- internals ---------------------------------------------------------
+
+    def _reach(self, spec: MetricSpec) -> tuple[set[str], dict[str, MetricSpec]]:
+        """The models a compile of `spec` reads, and the registry specs
+        it reaches through derived inputs.  Unknown inputs and cycles
+        are left for the compile to report."""
+        models: set[str] = set()
+        reached: dict[str, MetricSpec] = {}
+        todo = [spec]
+        while todo:
+            s = todo.pop()
+            if s.metric_type in ("derived", "expression"):
+                for m in s.input_metrics:
+                    if m in self.registry and m not in reached:
+                        reached[m] = self.registry[m]
+                        todo.append(reached[m])
+            elif s.metric_type == "ratio":
+                models.add(s.numerator.model)
+            else:
+                models.add(s.model)
+        return models, reached
+
+    def _plan_key(
+        self,
+        spec: MetricSpec,
+        grain: str | None,
+        frames: dict[str, DataFrame],
+        reached: dict[str, MetricSpec],
+    ) -> tuple | None:
+        """PLAN_CACHE's key for this request, or None when a frame is
+        not a memoized table."""
+        snaps = []
+        for model, df in frames.items():
+            snap = tables.snapshot_of(df)
+            if snap is None:
+                return None
+            snaps.append((model, df.sparkSession, snap))
+        specs = repr(spec), tuple(sorted((n, repr(s)) for n, s in reached.items()))
+        today = (
+            _session_date(snaps[0][1])
+            if snaps and "current_date" in repr(specs)
+            else None
+        )
+        return specs, grain, self.approx_distinct, self.rsd, tuple(snaps), today
 
     def _compile(self, spec: MetricSpec, grain: str | None, visiting: tuple) -> DataFrame:
         if spec.name in visiting:

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from .operators import dedup, multimodal, similarity, text
 from .functions.hashing import DUCKDB_HASH31 as _H31_CK
 from .registry import register, round_cols
+from .sinks import versioned
 from .sources.tables import load_table
 
 _H = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
@@ -4278,10 +4279,6 @@ def similarity_ivf_store_drift(spark, sf_dir):
     health part is KB-sized (one row per batch) and the baseline rides
     a broadcast.  Ref behavior spec: pure EXT anchor (no counterpart
     in /root/reference)."""
-    import os
-    import shutil
-    import uuid
-
     emb = load_table(spark, sf_dir, "embeddings")
     is_batch = (
         F.col("vec_id") % _UPSERT_BATCH_MOD == _UPSERT_BATCH_REM
@@ -4293,14 +4290,14 @@ def similarity_ivf_store_drift(spark, sf_dir):
             f"s{_DRIFT_SCALE}o{_DRIFT_SHIFT}"
         ),
     )
-    if not os.path.exists(path):
-        tmp_store = f"{path}.build_{uuid.uuid4().hex[:8]}"
+
+    def build(store):
         similarity.materialize_ivf_pq_index(
-            emb.where(~is_batch), tmp_store, n_centroids=16,
+            emb.where(~is_batch), store, n_centroids=16,
             m=_PQ_M, n_codes=_PQ_CODES, dim=_PQ_DIM,
         )
         similarity.ivf_pq_index_upsert(
-            emb.where(is_batch), tmp_store, m=_PQ_M, dim=_PQ_DIM
+            emb.where(is_batch), store, m=_PQ_M, dim=_PQ_DIM
         )
         drifted = emb.where(is_batch).select(
             (F.col("vec_id") + F.lit(_DRIFT_ID_OFFSET)).alias("vec_id"),
@@ -4311,12 +4308,10 @@ def similarity_ivf_store_drift(spark, sf_dir):
             ).alias("embedding"),
         )
         similarity.ivf_pq_index_upsert(
-            drifted, tmp_store, m=_PQ_M, dim=_PQ_DIM
+            drifted, store, m=_PQ_M, dim=_PQ_DIM
         )
-        try:
-            os.rename(tmp_store, path)
-        except OSError:
-            shutil.rmtree(tmp_store, ignore_errors=True)
+
+    versioned.build_once(path, build)
     return similarity.ivf_pq_store_health(
         spark, path, drift_factor=_DRIFT_FACTOR
     )
@@ -4345,10 +4340,6 @@ def similarity_ivf_pq_rebuild_served(spark, sf_dir):
     (private dir + one atomic rename); serve-time scan budget:
     embeddings x0, the served-family posture.  Ref behavior spec:
     pure EXT anchor (no counterpart in /root/reference)."""
-    import os
-    import shutil
-    import uuid
-
     emb = load_table(spark, sf_dir, "embeddings")
     is_batch = (
         F.col("vec_id") % _UPSERT_BATCH_MOD == _UPSERT_BATCH_REM
@@ -4357,21 +4348,19 @@ def similarity_ivf_pq_rebuild_served(spark, sf_dir):
         sf_dir,
         variant=f"rebuild{_UPSERT_BATCH_MOD}r{_UPSERT_BATCH_REM}",
     )
-    if not os.path.exists(path):
-        tmp_store = f"{path}.build_{uuid.uuid4().hex[:8]}"
+
+    def build(store):
         similarity.materialize_ivf_pq_index(
-            emb.where(~is_batch), tmp_store, n_centroids=16,
+            emb.where(~is_batch), store, n_centroids=16,
             m=_PQ_M, n_codes=_PQ_CODES, dim=_PQ_DIM,
             upsert=emb.where(is_batch),
         )
         similarity.rebuild_ivf_pq_index(
-            spark, tmp_store, n_centroids=16,
+            spark, store, n_centroids=16,
             m=_PQ_M, n_codes=_PQ_CODES, dim=_PQ_DIM,
         )
-        try:
-            os.rename(tmp_store, path)
-        except OSError:
-            shutil.rmtree(tmp_store, ignore_errors=True)
+
+    versioned.build_once(path, build)
     idx = similarity.read_ivf_pq_index(spark, path)
     qbatch = _min_ids_queries(emb).localCheckpoint(eager=False)
     return similarity.ivf_pq_batch_serve(
@@ -4415,30 +4404,24 @@ def similarity_ivf_pq_batch_topk_after_delete(spark, sf_dir):
     Build + delete promote under ONE atomic rename (the upsert-served
     discipline), so a warm store is a no-op and a reader never sees
     the store without its tombstones."""
-    import os
-    import shutil
-    import uuid
-
     emb = load_table(spark, sf_dir, "embeddings")
     path = _ivf_pq_index_path(
         sf_dir, variant=f"delete{_DELETE_MOD}r{_DELETE_REM}"
     )
-    if not os.path.exists(path):
-        tmp_store = f"{path}.build_{uuid.uuid4().hex[:8]}"
+
+    def build(store):
         similarity.materialize_ivf_pq_index(
-            emb, tmp_store, n_centroids=16,
+            emb, store, n_centroids=16,
             m=_PQ_M, n_codes=_PQ_CODES, dim=_PQ_DIM,
         )
         similarity.ivf_pq_index_delete(
             emb.where(
                 F.col("vec_id") % _DELETE_MOD == _DELETE_REM
             ).select(F.col("vec_id").alias("id")),
-            tmp_store,
+            store,
         )
-        try:
-            os.rename(tmp_store, path)
-        except OSError:
-            shutil.rmtree(tmp_store, ignore_errors=True)
+
+    versioned.build_once(path, build)
     idx = similarity.read_ivf_pq_index(spark, path)
     deletes = similarity.read_ivf_pq_index_deletes(spark, path)
     asg = idx["assignments"]

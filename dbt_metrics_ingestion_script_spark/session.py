@@ -43,6 +43,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic time semantics across engines (oracle parity).
         .config("spark.sql.session.timeZone", "UTC")
+        # parquet TIMESTAMP(NANOS) reads as a long, which
+        # sources.tables rebuilds into a timestamp; set once here rather
+        # than by every table load on the shared session conf
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
     )
     # NOTE: spark.driver.memory must be set BEFORE the JVM launches

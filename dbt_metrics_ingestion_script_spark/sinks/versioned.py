@@ -17,7 +17,9 @@ read, and a superseded version stays readable until `vacuum` prunes
 it.
 
 Used by the IVF-PQ serving store (operators/similarity.py) and the
-cluster-label store (operators/dedup.py).
+cluster-label store (operators/dedup.py).  `build_once` is the other
+promote path: it moves a whole store, built privately, into place with
+one rename, for the registered queries that build their own.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ import re
 import shutil
 import time
 import uuid
+from typing import Callable
 
 _POINTER = "_current"
 _PUBLISH_LOG = "_publish_log"
@@ -112,6 +115,29 @@ def publish(base_path: str, staged: str) -> str:
     with open(os.path.join(base_path, _PUBLISH_LOG), "a") as f:
         f.write(f"{version} {time.time():.6f}\n")
     return version
+
+
+def build_once(path: str, build: Callable[[str], None]) -> None:
+    """Create the whole directory `path` at most once: unless it exists,
+    `build` fills a private `{path}.build_{hex}` sibling, which one
+    rename then moves into place, so a reader sees all of `path` or
+    none of it.  A writer that loses the race to a concurrent one
+    discards its copy; a failed build or any other failed rename
+    removes the private copy and re-raises."""
+    if os.path.exists(path):
+        return
+    staged = f"{path}.build_{uuid.uuid4().hex[:8]}"
+    try:
+        build(staged)
+    except BaseException:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    try:
+        os.rename(staged, path)
+    except OSError:
+        shutil.rmtree(staged, ignore_errors=True)
+        if not os.path.isdir(path):
+            raise
 
 
 def read_publish_log(base_path: str) -> list[tuple[str, float]]:

@@ -20,7 +20,9 @@ import time
 sys.path.insert(0, "/root/repo")
 
 from dbt_metrics_ingestion_script_spark import queries as q  # noqa: E402
+from dbt_metrics_ingestion_script_spark.plans.compiler import PLAN_CACHE  # noqa: E402
 from dbt_metrics_ingestion_script_spark.session import get_spark  # noqa: E402
+from dbt_metrics_ingestion_script_spark.sources import tables  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -64,6 +66,9 @@ def main() -> None:
         fn = by_name[name]
         best = None
         for it in range(iters):
+            # every iteration builds its frames anew, as the first did
+            tables.clear_memo()
+            PLAN_CACHE.clear()
             sc.setJobGroup(f"profile-{name}", name)
             t0 = time.perf_counter()
             df = fn(spark, SF_DIR)

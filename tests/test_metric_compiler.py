@@ -3,12 +3,26 @@ oracle at sf0.001 (fast); the driver repeats this at sf0.01."""
 
 from __future__ import annotations
 
+import os
+import sys
+from concurrent.futures import ThreadPoolExecutor
+
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from dbt_metrics_ingestion_script_spark import queries as q
-from dbt_metrics_ingestion_script_spark.plans.compiler import MetricCompiler
+from dbt_metrics_ingestion_script_spark.plans import compiler
+from dbt_metrics_ingestion_script_spark.plans.compiler import (
+    PLAN_CACHE,
+    PLAN_CACHE_BOUND,
+    MetricCompiler,
+    plan_cache_stats,
+)
 from dbt_metrics_ingestion_script_spark.plans.metric_spec import MetricFilter, MetricSpec
+from dbt_metrics_ingestion_script_spark.plans.sql_oracle import oracle_sql_for
 from dbt_metrics_ingestion_script_spark.registry import round_cols
+from dbt_metrics_ingestion_script_spark.sources import tables
 
 from .oracle import assert_matches_oracle
 
@@ -724,3 +738,151 @@ def test_compile_shared_validation_and_filter_independence(spark):
     )
     with _pytest.raises(ValueError, match="simple metrics only"):
         comp.compile_shared([ratio])
+
+
+# ---------------------------------------------------------------------------
+# plan cache: repeated requests over unchanged tables reuse one plan
+# ---------------------------------------------------------------------------
+
+REVENUE = MetricSpec(
+    name="revenue", calculation_method="sum", expression="o_totalprice",
+    model="orders", timestamp="o_orderdate", dimensions=["o_orderstatus"],
+)
+
+
+def _table_compiler(spark, data_dir, **kw):
+    return MetricCompiler(lambda m: tables.load_table(spark, data_dir, m), **kw)
+
+
+@pytest.fixture
+def table_dir(tmp_path, sf_dir):
+    """sf_dir's tables, with orders.parquet a private copy a test may
+    rewrite."""
+    for t in tables.TABLES:
+        os.symlink(os.path.join(sf_dir, f"{t}.parquet"), tmp_path / f"{t}.parquet")
+    orders = tmp_path / "orders.parquet"
+    os.remove(orders)
+    pq.write_table(pq.read_table(os.path.join(sf_dir, "orders.parquet")), orders)
+    return str(tmp_path)
+
+
+def test_plan_cache_misses_after_table_rewrite(spark, table_dir):
+    comp = _table_compiler(spark, table_dir)
+    orders = tables.load_table(spark, table_dir, "orders")
+    assert tables.load_table(spark, table_dir, "orders") is orders
+    assert tables.snapshot_of(orders) is not None
+    assert tables.snapshot_of(orders.where("o_totalprice > 0")) is None
+    sql = oracle_sql_for(REVENUE, "month")
+    first = comp.compile(REVENUE, "month")
+    assert comp.compile(REVENUE, "month") is first
+    assert_matches_oracle(first, sql, table_dir)
+    before = sorted(tuple(r) for r in first.collect())
+
+    path = os.path.join(table_dir, "orders.parquet")
+    t = pq.read_table(path)
+    pq.write_table(t.slice(0, t.num_rows // 2), path)
+    assert tables.load_table(spark, table_dir, "orders") is not orders
+    second = comp.compile(REVENUE, "month")
+    assert second is not first
+    assert_matches_oracle(second, sql, table_dir)
+    assert sorted(tuple(r) for r in second.collect()) != before
+
+
+def test_plan_cache_evicts_least_recently_used(spark, sf_dir):
+    PLAN_CACHE.clear()
+    comp = _table_compiler(spark, sf_dir)
+    specs = [
+        MetricSpec(name=f"n{i}", calculation_method="count", model="orders")
+        for i in range(PLAN_CACHE_BOUND + 1)
+    ]
+    evictions = plan_cache_stats()["evictions"]
+    dfs = [comp.compile(s) for s in specs]
+    stats = plan_cache_stats()
+    assert stats["entries"] == PLAN_CACHE_BOUND
+    assert stats["evictions"] - evictions == 1
+    assert comp.compile(specs[1]) is dfs[1]
+    assert comp.compile(specs[0]) is not dfs[0]
+
+
+def test_plan_cache_keys_current_date_filters_on_session_date(
+    spark, sf_dir, monkeypatch
+):
+    assert compiler._session_date(spark) == spark.sql(
+        "SELECT CAST(current_date() AS STRING)"
+    ).first()[0]
+    recent = MetricSpec(
+        name="recent_orders", calculation_method="count", model="orders",
+        timestamp="o_orderdate",
+        filters=[MetricFilter(
+            "o_orderdate", ">=", "{{ dbt.dateadd('day', -30, 'current_date') }}"
+        )],
+    )
+    comp = _table_compiler(spark, sf_dir)
+    first = comp.compile(recent, "month")
+    literal = comp.compile(REVENUE, "month")
+    assert comp.compile(recent, "month") is first
+    monkeypatch.setattr(compiler, "_session_date", lambda s: "2999-01-01")
+    assert comp.compile(recent, "month") is not first
+    assert comp.compile(REVENUE, "month") is literal
+
+
+def test_in_memory_frames_bypass_plan_cache(spark, sf_dir):
+    frame = spark.createDataFrame([(1, "a"), (2, "b")], "x long, k string")
+    spec = MetricSpec(
+        name="total", calculation_method="sum", expression="x", model="t",
+        dimensions=["k"],
+    )
+    filtered = MetricCompiler(
+        lambda m: tables.load_table(spark, sf_dir, m).where(F.col("o_totalprice") > 0)
+    )
+    before = plan_cache_stats()
+    comp = MetricCompiler(lambda m: frame)
+    assert comp.compile(spec) is not comp.compile(spec)
+    assert filtered.compile(REVENUE) is not filtered.compile(REVENUE)
+    assert plan_cache_stats() == before
+
+
+def test_concurrent_requests_match_oracle(spark, sf_dir):
+    registry = {
+        "revenue": REVENUE,
+        "buyers": MetricSpec(
+            name="buyers", calculation_method="count_distinct",
+            expression="o_custkey", model="orders", timestamp="o_orderdate",
+            dimensions=["o_orderstatus"],
+        ),
+    }
+    spec = MetricSpec(
+        name="per_buyer", metric_type="derived", expression="revenue / buyers",
+        input_metrics=["revenue", "buyers"], model="orders",
+        timestamp="o_orderdate", dimensions=["o_orderstatus"],
+    )
+    sql = oracle_sql_for(spec, "quarter", registry=registry)
+    PLAN_CACHE.clear()
+    before = plan_cache_stats()
+
+    def request(_):
+        df = _table_compiler(spark, sf_dir, registry=registry).compile(spec, "quarter")
+        assert_matches_oracle(df, sql, sf_dir)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            for f in [pool.submit(request, i) for i in range(8)]:
+                f.result(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    after = plan_cache_stats()
+    assert after["entries"] == 1
+    assert (after["hits"] + after["misses"]) - (before["hits"] + before["misses"]) == 8
+
+
+def test_plan_cache_persists_nothing(spark, sf_dir):
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    comp = _table_compiler(spark, sf_dir)
+    for _ in range(3):
+        comp.compile(REVENUE, "month").collect()
+    assert persisted() - before == set()

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from dbt_metrics_ingestion_script_spark import queries as q
 from dbt_metrics_ingestion_script_spark.operators import dedup, similarity
+from dbt_metrics_ingestion_script_spark.sinks import versioned
 from dbt_metrics_ingestion_script_spark.sources.tables import load_table
 
 from .oracle import assert_matches_oracle
@@ -69,9 +70,9 @@ def test_failed_promotion_publishes_nothing(
 
 def test_pointer_protocol_has_one_owner():
     """Only sinks/versioned.py knows the pointer file's name, makes it
-    durable and swaps it atomically; every store goes through its
-    publish."""
-    owners = {"_current": [], "os.fsync": [], "os.replace": []}
+    durable, swaps it atomically and renames a store into place; every
+    store goes through its publish or build_once."""
+    owners = {"_current": [], "os.fsync": [], "os.replace": [], "os.rename": []}
     for d, dirs, names in os.walk(PACKAGE):
         dirs[:] = [x for x in dirs if x != "__pycache__"]
         for n in names:
@@ -83,11 +84,53 @@ def test_pointer_protocol_has_one_owner():
             rel = os.path.relpath(path, PACKAGE)
             if '"_current"' in text or "'_current'" in text:
                 owners["_current"].append(rel)
-            for call in ("os.fsync", "os.replace"):
+            for call in ("os.fsync", "os.replace", "os.rename"):
                 if call in text:
                     owners[call].append(rel)
     want = [os.path.relpath(PROTOCOL, PACKAGE)]
-    assert owners == {"_current": want, "os.fsync": want, "os.replace": want}
+    assert owners == {
+        "_current": want, "os.fsync": want, "os.replace": want, "os.rename": want
+    }
+
+
+def test_build_once_promotes_one_whole_copy(tmp_path):
+    """build_once builds privately and renames once: a second call
+    builds nothing, a failed build leaves nothing behind, and a writer
+    that loses the race keeps the winner's store."""
+    path = str(tmp_path / "store")
+    calls = []
+
+    def build(staged):
+        calls.append(staged)
+        os.makedirs(staged)
+        with open(os.path.join(staged, "part"), "w") as f:
+            f.write("mine")
+
+    versioned.build_once(path, build)
+    versioned.build_once(path, build)
+    assert len(calls) == 1
+    assert os.listdir(tmp_path) == ["store"]
+
+    def broken(staged):
+        os.makedirs(staged)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError):
+        versioned.build_once(str(tmp_path / "broken"), broken)
+    assert os.listdir(tmp_path) == ["store"]
+
+    raced = str(tmp_path / "raced")
+
+    def loses_race(staged):
+        build(staged)
+        os.makedirs(raced)
+        with open(os.path.join(raced, "part"), "w") as f:
+            f.write("theirs")
+
+    versioned.build_once(raced, loses_race)
+    assert sorted(os.listdir(tmp_path)) == ["raced", "store"]
+    with open(os.path.join(raced, "part")) as f:
+        assert f.read() == "theirs"
 
 
 @pytest.fixture(scope="module")
