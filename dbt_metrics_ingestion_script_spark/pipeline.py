@@ -5,20 +5,23 @@ per-metric term synthesis -> sink, /root/reference/
 dbt_metrics_to_datahub.py:337-361) as a DAG of DataFrame transforms.
 The per-metric Python loop becomes set-oriented projections and
 broadcast joins; per-record exception isolation becomes a row
-quarantine split (E1); the sink is a strategy object (sinks/).
+quarantine split (E1); the sink is a strategy object (sinks/).  An
+ingest runs one Spark action: it collects the emission rows, counts
+them on the driver and hands them to the sink.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.glossary import category_column, glossary_nodes, glossary_terms
+from .operators.glossary import glossary_nodes, glossary_terms
 from .operators.lineage import dataset_registry, resolve_upstreams
 from .operators.properties import with_custom_properties
-from .sinks.base import NoopSink, Sink
+from .sinks.base import EMISSION_COLUMNS, NoopSink, Sink
 from .sources.manifest import ManifestFrames, load_manifest
 
 
@@ -27,7 +30,7 @@ class IngestionResult:
     nodes: DataFrame | None = None  # glossary root + categories
     terms: DataFrame | None = None  # glossary terms incl. custom_properties
     quarantined: DataFrame | None = None  # invalid metric rows + reason
-    emissions: DataFrame | None = None
+    emissions: list[Row] | None = None  # the rows handed to the sink
     stats: dict = field(default_factory=dict)
 
 
@@ -65,32 +68,11 @@ def build_glossary_frames(
     platform: str = "dbt",
     env: str = "PROD",
 ) -> IngestionResult:
-    """Transform stage: manifest frames -> glossary node/term frames.
-
-    Runs one Spark action: the aggregate behind `stats`, which is also
-    the P6 empty-input guard.
-    """
+    """Transform stage: manifest frames -> lazy glossary node/term frames
+    and the quarantine split.  Runs no Spark action."""
     metrics, quarantined = split_valid_metrics(frames.metrics)
     registry = dataset_registry(frames.nodes, frames.sources, platform, env)
     upstreams = F.broadcast(resolve_upstreams(metrics, registry))
-
-    valid = quarantine_reason().isNull()
-    stats = (
-        frames.metrics.join(upstreams, "unique_id", "left")
-        .agg(
-            F.count_if(valid).alias("n_metrics"),
-            (F.size(F.collect_set(F.when(valid, category_column()))) + 1).alias("n_nodes"),
-            F.count_if(~valid).alias("n_quarantined"),
-            F.coalesce(F.sum("n_unresolved"), F.lit(0)).alias("n_unresolved_lineage"),
-        )
-        .first()
-        .asDict()
-    )
-    if stats["n_metrics"] == 0:
-        return IngestionResult(
-            quarantined=quarantined, stats={"n_metrics": 0, "aborted": "no metrics"}
-        )
-
     nodes = glossary_nodes(spark, metrics, glossary_root)
     enriched = with_custom_properties(metrics.join(upstreams, "unique_id", "left"))
     terms = glossary_terms(metrics, glossary_root).join(
@@ -98,11 +80,12 @@ def build_glossary_frames(
         "unique_id",
         "left",
     )
-    return IngestionResult(nodes=nodes, terms=terms, quarantined=quarantined, stats=stats)
+    return IngestionResult(nodes=nodes, terms=terms, quarantined=quarantined)
 
 
-def build_emissions(result: IngestionResult) -> DataFrame:
-    """Flatten node/term frames into the sink-facing emission frame."""
+def _emission_rows(result: IngestionResult) -> DataFrame:
+    """Node and term emission rows, each term's `n_unresolved` on the
+    side (NULL on node rows)."""
     node_rows = result.nodes.select(
         F.col("urn").alias("entity_urn"),
         F.lit("glossaryNode").alias("entity_kind"),
@@ -116,8 +99,17 @@ def build_emissions(result: IngestionResult) -> DataFrame:
         F.to_json(
             F.struct("name", "definition", "parent_urn", "term_source", "custom_properties")
         ).alias("payload"),
+        "n_unresolved",
     )
-    return node_rows.unionByName(term_rows)
+    return node_rows.unionByName(term_rows, allowMissingColumns=True)
+
+
+def build_emissions(result: IngestionResult) -> DataFrame:
+    """Flatten node/term frames into the sink-facing emission frame."""
+    return _emission_rows(result).select(*EMISSION_COLUMNS)
+
+
+_Emission = Row(*EMISSION_COLUMNS)
 
 
 def ingest_metrics(
@@ -128,14 +120,31 @@ def ingest_metrics(
     platform: str = "dbt",
     env: str = "PROD",
 ) -> IngestionResult:
-    """The full pipeline; sink=None means dry run (NoopSink)."""
+    """The full pipeline; sink=None means dry run (NoopSink).
+
+    One Spark action per manifest (plus any the sink runs): the emission
+    rows, each term's `n_unresolved` and the quarantined metrics' reasons
+    are collected together, every count is taken from those rows, and
+    only the emission rows reach the sink."""
     frames = load_manifest(spark, manifest_path)
     result = build_glossary_frames(spark, frames, glossary_root, platform, env)
-    if result.terms is None:
-        return result
-    result.emissions = build_emissions(result)
-    sink = sink or NoopSink()
-    # the counts came from build_glossary_frames' one aggregate; the
-    # sink's emit is the only other action over the manifest
-    result.stats["sink"] = sink.emit(result.emissions)
+    rows = (
+        _emission_rows(result)
+        .unionByName(result.quarantined.select("reason"), allowMissingColumns=True)
+        .collect()
+    )
+    result.emissions = [_Emission(*r[:4]) for r in rows if r["reason"] is None]
+    kinds = Counter(r["entity_kind"] for r in result.emissions)
+    # P6 empty-input guard, before anything is sent
+    if kinds["glossaryTerm"] == 0:
+        return IngestionResult(
+            quarantined=result.quarantined, stats={"n_metrics": 0, "aborted": "no metrics"}
+        )
+    result.stats = {
+        "n_metrics": kinds["glossaryTerm"],
+        "n_nodes": kinds["glossaryNode"],
+        "n_quarantined": len(rows) - len(result.emissions),
+        "n_unresolved_lineage": sum(r["n_unresolved"] or 0 for r in rows),
+    }
+    result.stats["sink"] = (sink or NoopSink()).emit(result.emissions)
     return result

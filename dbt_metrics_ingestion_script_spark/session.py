@@ -47,6 +47,12 @@ def get_spark(
         # sources.tables rebuilds into a timestamp; set once here rather
         # than by every table load on the shared session conf
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # PySpark records the Python call site of every Column and
+        # DataFrame call (about five py4j calls and a stack walk each):
+        # over half the py4j calls of a Layer A ingest.  Off, an
+        # analysis error loses its `== DataFrame ==` call-site block;
+        # the Python traceback still names the line.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
     )
     # NOTE: spark.driver.memory must be set BEFORE the JVM launches

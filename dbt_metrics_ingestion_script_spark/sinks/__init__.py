@@ -1,5 +1,5 @@
-from .base import Sink, NoopSink, collect_emissions
+from .base import Sink, NoopSink
 from .emission_log import EmissionLogSink
 from .rest import RestSink
 
-__all__ = ["Sink", "NoopSink", "EmissionLogSink", "RestSink", "collect_emissions"]
+__all__ = ["Sink", "NoopSink", "EmissionLogSink", "RestSink"]

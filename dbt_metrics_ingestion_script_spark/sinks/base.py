@@ -2,28 +2,28 @@
 
 The reference emits one (entityUrn, aspect) pair per synchronous HTTP
 POST (/root/reference/dbt_metrics_to_datahub.py:112-117); its own docs
-call for batching/parallelism past ~500 entities
-(/root/reference/TESTING_GUIDE.md:324-327).  Here a sink consumes an
-*emission frame* -- rows of (entity_urn, entity_kind, aspect_name,
-payload JSON) -- so emission parallelism is just DataFrame partitioning:
-a REST sink POSTs per partition in batches, the emission-log sink is a
-parquet write, dry-run counts without moving data.
+call for batching/parallelism past ~500 entities (the reference's
+TESTING_GUIDE.md:324-327).  Here a sink consumes the
+*emission rows* -- (entity_urn, entity_kind, aspect_name, payload JSON)
+-- that the pipeline collected to the driver in its one Spark action: a
+manifest is MBs, not TBs, so its ~3,000 rows fit the driver.  The REST
+sink POSTs them in batches, the emission-log sink writes them as
+parquet, dry-run counts them.
 """
 
 from __future__ import annotations
 
-from typing import Protocol
+from collections import Counter
+from typing import Protocol, Sequence
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
+from pyspark.sql import Row
 
 EMISSION_COLUMNS = ["entity_urn", "entity_kind", "aspect_name", "payload"]
 
 
 class Sink(Protocol):
-    def emit(self, emissions: DataFrame) -> dict:
-        """Consume an emission frame; return summary stats."""
+    def emit(self, rows: Sequence[Row]) -> dict:
+        """Consume emission rows (fields EMISSION_COLUMNS); return summary stats."""
         ...
 
 
@@ -31,14 +31,6 @@ class NoopSink:
     """Dry-run: validates + counts, emits nothing
     (reference --dry-run, /root/reference/dbt_metrics_to_datahub.py:97-107)."""
 
-    def emit(self, emissions: DataFrame) -> dict:
-        counts = {
-            r["entity_kind"]: r["n"]
-            for r in emissions.groupBy("entity_kind").agg(F.count("*").alias("n")).collect()
-        }
+    def emit(self, rows: Sequence[Row]) -> dict:
+        counts = dict(Counter(r["entity_kind"] for r in rows))
         return {"mode": "dry_run", "emitted": 0, "by_kind": counts}
-
-
-def collect_emissions(emissions: DataFrame) -> list[dict]:
-    """Driver-side materialization for tests/small runs only."""
-    return [r.asDict() for r in emissions.collect()]

@@ -1,14 +1,19 @@
-"""Parquet emission log: the canonical pure-Spark sink.
+"""Parquet emission log: the replayable, pure-Spark sink.
 
-Instead of a per-entity network hop, the emission frame lands as a
-partitioned parquet table -- replayable, idempotent (overwrite per run),
-and scalable to any entity count.  A downstream shipper (or the
-RestSink) can stream it out.
+Instead of a per-entity network hop, the emission rows land as a
+parquet table partitioned by `entity_kind` -- replayable, idempotent
+(overwrite per run), and readable by any downstream shipper.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Sequence
+
+from pyspark.sql import Row, SparkSession
+
+from .base import EMISSION_COLUMNS
+
+EMISSION_SCHEMA = ", ".join(f"{c} string" for c in EMISSION_COLUMNS)
 
 
 class EmissionLogSink:
@@ -16,9 +21,11 @@ class EmissionLogSink:
         self.path = path
         self.mode = mode
 
-    def emit(self, emissions: DataFrame) -> dict:
+    def emit(self, rows: Sequence[Row]) -> dict:
         (
-            emissions.write.mode(self.mode)
+            SparkSession.active()
+            .createDataFrame(rows, EMISSION_SCHEMA)
+            .write.mode(self.mode)
             .partitionBy("entity_kind")
             .parquet(self.path)
         )

@@ -1,33 +1,33 @@
-"""Batched, partition-parallel REST sink.
+"""Batched REST sink, posting from the driver.
 
 Replaces the reference's one-synchronous-POST-per-entity loop
-(/root/reference/dbt_metrics_to_datahub.py:354-359) with
-`foreachPartition`: one HTTP session per partition, payloads sent in
-batches.  Batch failures are caught and counted (per-entity error
-isolation, the reference's E1 posture scaled to batches) instead of
-failing the task -- an HTTP error therefore cannot trigger Spark task
-retries that would re-POST already-sent batches, and a persistently
-broken endpoint degrades to a failure count, not a job abort.
+(its dbt_metrics_to_datahub.py:354-359): the emission rows
+the pipeline collected are sent in batches of `batch_size` over the
+standard library's HTTP client.  A manifest's ~3,000 rows make ~30
+requests, so the sink needs no Spark job and no Python worker.
 
-Delivery semantics are AT-LEAST-ONCE: if a task dies for unrelated
-reasons (executor loss, OOM) after some batches were sent, the retried
-task re-sends them.  Downstream ingestion should be idempotent on
-(entityUrn, aspectName) -- true for DataHub-style aspect upserts, which
-is exactly the payload shape emitted here.  Counters are Spark
-accumulators, so retried tasks may overcount sends; treat the stats as
-observability, not an exactly-once ledger.
+Each batch is posted once.  A failed batch (HTTP error, refused
+connection, timeout) is caught and counted, and the next batch is
+still sent: per-entity error isolation, the reference's E1 posture
+scaled to batches.  Nothing retries, so `n_sent` and `n_failed` are
+exact.  If the driver dies mid-emit, the batches posted before it are
+delivered and the rest are not; re-running the ingest re-sends them
+all, which is safe because downstream aspect upserts are idempotent on
+(entityUrn, aspectName) -- true for DataHub-style ingestion, which is
+the payload shape emitted here.
 
-Network code uses only the standard library.  This sink is exercised
-with a mock server in tests; against a real endpoint set `endpoint` to
-the ingestion URL.
+This sink is exercised with a mock server in tests; against a real
+endpoint set `endpoint` to the ingestion URL.
 """
 
 from __future__ import annotations
 
+import http.client
 import json
 import urllib.request
+from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Row
 
 
 def _post_batch(endpoint: str, token: str | None, batch: list[dict], timeout: float) -> None:
@@ -54,43 +54,26 @@ class RestSink:
         self.batch_size = batch_size
         self.timeout = timeout
 
-    def emit(self, emissions: DataFrame) -> dict:
-        endpoint, token = self.endpoint, self.token
-        batch_size, timeout = self.batch_size, self.timeout
-        sc = emissions.sparkSession.sparkContext
-        n_sent = sc.accumulator(0)
-        n_failed = sc.accumulator(0)
-
-        def flush(batch: list[dict]) -> None:
+    def emit(self, rows: Sequence[Row]) -> dict:
+        n_sent = n_failed = 0
+        for start in range(0, len(rows), self.batch_size):
+            batch = [
+                {
+                    "entityUrn": row["entity_urn"],
+                    "aspectName": row["aspect_name"],
+                    "aspect": json.loads(row["payload"]),
+                }
+                for row in rows[start : start + self.batch_size]
+            ]
             try:
-                _post_batch(endpoint, token, batch, timeout)
-                n_sent.add(len(batch))
-            except Exception:
-                # batch-level isolation: count and continue; never let an
-                # HTTP failure fail the task (which would re-POST every
-                # batch this partition already delivered)
-                n_failed.add(len(batch))
-
-        def handle_partition(rows) -> None:
-            batch: list[dict] = []
-            for row in rows:
-                batch.append(
-                    {
-                        "entityUrn": row["entity_urn"],
-                        "aspectName": row["aspect_name"],
-                        "aspect": json.loads(row["payload"]),
-                    }
-                )
-                if len(batch) >= batch_size:
-                    flush(batch)
-                    batch = []
-            if batch:
-                flush(batch)
-
-        emissions.foreachPartition(handle_partition)
+                _post_batch(self.endpoint, self.token, batch, self.timeout)
+                n_sent += len(batch)
+            except (OSError, http.client.HTTPException, RuntimeError):
+                # URLError and timeouts are OSErrors; count, send the next
+                n_failed += len(batch)
         return {
             "mode": "rest",
             "endpoint": self.endpoint,
-            "n_sent": n_sent.value,
-            "n_failed": n_failed.value,
+            "n_sent": n_sent,
+            "n_failed": n_failed,
         }

@@ -9,8 +9,8 @@ applied with coalesce -- so Catalyst prunes unread fields and the same
 code handles arbitrarily many metrics distributed across partitions.
 
 The frames are lazy and hold no Spark storage: each action over them
-re-reads the document, so callers keep their action count low (Layer A
-runs one counting aggregate and the sink's emit) instead of caching.
+re-reads the document, so callers keep their action count low (a Layer
+A ingest runs one collect) instead of caching.
 
 Scale note: a dbt manifest is a single document (MBs, not TBs) -- the
 extracted frames behave as ordinary (small, broadcastable) dimension

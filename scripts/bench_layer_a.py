@@ -8,16 +8,15 @@ Two sink modes per scale, because the reference's numbers are
 network-bound (one synchronous POST per entity):
 
 - dry_run: NoopSink -- parse/guard/hierarchy/term-synthesis/emission
-  build + counting action, the reference's --dry-run counterpart.
-- rest: the batched foreachPartition RestSink against a local
+  build + the one collect, the reference's --dry-run counterpart.
+- rest: the batched RestSink, posting from the driver, against a local
   threaded mock endpoint -- exercises the full emission path
   (serialization, batching, HTTP) without real network latency.
   The reference's ~3-4 entities/s INCLUDES real-network round trips,
   so the honest comparison is architectural: the reference is LINEAR
   in metric count with a per-entity round trip; this pipeline is one
-  Spark job whose cost is dominated by fixed startup, with batched
-  partition-parallel emission (its per-metric marginal cost is what
-  the ladder exposes).
+  Spark action whose cost is dominated by fixed startup, with batched
+  emission (its per-metric marginal cost is what the ladder exposes).
 
 Usage: python scripts/bench_layer_a.py [out.json]
 """
@@ -191,9 +190,9 @@ def main() -> int:
         "notes": (
             "reference numbers are real-network REST (TESTING_GUIDE.md:"
             "317-327, ~3-4 entities/s, linear); rest mode here uses a "
-            "local mock endpoint via the batched foreachPartition sink, "
-            "so the comparison is architectural (batched+parallel vs "
-            "per-entity synchronous), not a network measurement"
+            "local mock endpoint via the batched driver-side sink, so "
+            "the comparison is architectural (batched vs per-entity "
+            "synchronous), not a network measurement"
         ),
     }
     json.dump(doc, open(out_path, "w"), indent=1)

@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+import json
 import os
+import threading
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
@@ -60,3 +63,34 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def mock_server():
+    """A local ingest endpoint that records every POST it receives:
+    yields (url, received)."""
+    received: list[dict] = []
+    lock = threading.Lock()
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_POST(self):
+            n = int(self.headers["Content-Length"])
+            payload = json.loads(self.rfile.read(n))
+            with lock:
+                received.append(
+                    {
+                        "auth": self.headers.get("Authorization"),
+                        "proposals": payload["proposals"],
+                    }
+                )
+            self.send_response(200)
+            self.end_headers()
+
+        def log_message(self, *args):
+            pass
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    t = threading.Thread(target=server.serve_forever, daemon=True)
+    t.start()
+    yield f"http://127.0.0.1:{server.server_address[1]}", received
+    server.shutdown()

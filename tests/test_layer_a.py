@@ -6,11 +6,12 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
 from dbt_metrics_ingestion_script_spark import queries_layer_a as qa
 from dbt_metrics_ingestion_script_spark.pipeline import ingest_metrics
 from dbt_metrics_ingestion_script_spark.registry import REGISTRY
-from dbt_metrics_ingestion_script_spark.sinks import EmissionLogSink, NoopSink
+from dbt_metrics_ingestion_script_spark.sinks import EmissionLogSink, NoopSink, RestSink
 
 from .oracle import assert_matches_oracle
 
@@ -54,13 +55,29 @@ def test_pipeline_emission_log(spark, tmp_path):
     assert '"customer_count"' in payload and '"dbt"' in payload
 
 
+QUARANTINE_MANIFEST = (
+    '{"metrics": {"metric.p.good": {"name": "good", "package_name": "p", "path": "x.yml"},'
+    ' "metric.p.bad": {"name": "", "package_name": "p", "path": "y.yml"}},'
+    ' "nodes": {}, "sources": {}}'
+)
+
+# one dependency resolves through nodes, one through sources, two do not
+UNRESOLVED_MANIFEST = json.dumps({
+    "metrics": {
+        "metric.p.a": {"name": "a", "depends_on": {
+            "nodes": ["model.p.t", "model.p.ghost", "source.p.s.r"]}},
+        "metric.p.b": {"name": "b", "meta": {"datahub_glossary_category": "X/Y"},
+                       "depends_on": {"nodes": ["model.p.ghost2"]}},
+    },
+    "nodes": {"model.p.t": {"name": "t", "database": "d", "schema": "s"}},
+    "sources": {"source.p.s.r": {"name": "r", "database": "d", "schema": "raw",
+                                 "identifier": "r_v2"}},
+})
+
+
 def test_pipeline_quarantine(spark, tmp_path):
     bad = tmp_path / "bad_manifest.json"
-    bad.write_text(
-        '{"metrics": {"metric.p.good": {"name": "good", "package_name": "p", "path": "x.yml"},'
-        ' "metric.p.bad": {"name": "", "package_name": "p", "path": "y.yml"}},'
-        ' "nodes": {}, "sources": {}}'
-    )
+    bad.write_text(QUARANTINE_MANIFEST)
     result = ingest_metrics(spark, str(bad))
     assert result.stats["n_metrics"] == 1
     assert result.stats["n_nodes"] == 2  # root + Uncategorized
@@ -69,7 +86,9 @@ def test_pipeline_quarantine(spark, tmp_path):
     assert result.quarantined.collect()[0]["reason"] == "missing name"
 
 
-def test_pipeline_empty_manifest_guard(spark, tmp_path):
+def test_pipeline_empty_manifest_guard(spark, tmp_path, mock_server):
+    """The guard runs before the sink: an aborted ingest posts nothing."""
+    endpoint, received = mock_server
     empty = tmp_path / "empty_manifest.json"
     empty.write_text('{"metrics": {}, "nodes": {}, "sources": {}}')
     malformed = tmp_path / "malformed_manifest.json"
@@ -78,10 +97,51 @@ def test_pipeline_empty_manifest_guard(spark, tmp_path):
         ' "nodes": {}, "sources": {}}'
     )
     for path, n_quarantined in ((empty, 0), (malformed, 2)):
-        result = ingest_metrics(spark, str(path))
+        result = ingest_metrics(spark, str(path), sink=RestSink(endpoint))
         assert result.stats == {"n_metrics": 0, "aborted": "no metrics"}
         assert result.terms is None
         assert result.quarantined.count() == n_quarantined
+    assert received == []
+
+
+def test_ingest_runs_one_spark_action(spark):
+    """Counts, guard and dry-run sink all read the one collect: a
+    NoopSink ingest adds exactly one SQL execution to the status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = store.executionsCount()
+    result = ingest_metrics(spark, qa.FIXTURE, sink=NoopSink())
+    bus.waitUntilEmpty()
+    assert store.executionsCount() - before == 1
+    assert result.stats["n_metrics"] == 5
+
+
+@pytest.mark.parametrize(
+    "text, n_unresolved",
+    [(None, 3), (QUARANTINE_MANIFEST, 0), (UNRESOLVED_MANIFEST, 2)],
+    ids=["fixture", "quarantine", "unresolved"],
+)
+def test_pipeline_stats_match_result_frames(spark, tmp_path, text, n_unresolved):
+    """The counts taken on the driver from the collected rows equal the
+    same counts computed by Spark over the result's own frames."""
+    path = qa.FIXTURE
+    if text is not None:
+        path = tmp_path / "manifest.json"
+        path.write_text(text)
+    result = ingest_metrics(spark, str(path))
+    assert result.stats == {
+        "n_metrics": result.terms.count(),
+        "n_nodes": result.nodes.count(),
+        "n_quarantined": result.quarantined.count(),
+        "n_unresolved_lineage": result.terms.agg(
+            F.coalesce(F.sum("n_unresolved"), F.lit(0))
+        ).first()[0],
+        "sink": result.stats["sink"],
+    }
+    assert list(result.stats) == [
+        "n_metrics", "n_nodes", "n_quarantined", "n_unresolved_lineage", "sink"]
+    assert result.stats["n_unresolved_lineage"] == n_unresolved
 
 
 def test_pipeline_leaves_nothing_persisted(spark, tmp_path):

@@ -1,6 +1,6 @@
-"""REST sink: batched partition-parallel emission against a local mock
-server (the reference emits one synchronous POST per entity; ours must
-batch and parallelize, /root/reference/TESTING_GUIDE.md:324-327)."""
+"""REST sink: batched emission against a local mock server (the
+reference emits one synchronous POST per entity; ours must batch, as
+the reference's TESTING_GUIDE.md:324-327 recommends)."""
 
 from __future__ import annotations
 
@@ -9,59 +9,39 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
+from pyspark.sql import Row
 
 from dbt_metrics_ingestion_script_spark.sinks.rest import RestSink
 
 
-@pytest.fixture()
-def mock_server():
-    received: list[dict] = []
-    lock = threading.Lock()
-
-    class Handler(BaseHTTPRequestHandler):
-        def do_POST(self):
-            n = int(self.headers["Content-Length"])
-            payload = json.loads(self.rfile.read(n))
-            with lock:
-                received.append(
-                    {
-                        "auth": self.headers.get("Authorization"),
-                        "proposals": payload["proposals"],
-                    }
-                )
-            self.send_response(200)
-            self.end_headers()
-
-        def log_message(self, *args):
-            pass
-
-    server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    t = threading.Thread(target=server.serve_forever, daemon=True)
-    t.start()
-    yield f"http://127.0.0.1:{server.server_address[1]}", received
-    server.shutdown()
-
-
-def test_rest_sink_batches_and_authenticates(spark, mock_server):
-    endpoint, received = mock_server
-    rows = [
-        (f"urn:li:glossaryTerm:m{i}", "glossaryTermInfo", json.dumps({"i": i}))
-        for i in range(25)
+def emission_rows(n: int) -> list[Row]:
+    return [
+        Row(
+            entity_urn=f"urn:li:glossaryTerm:m{i}",
+            entity_kind="glossaryTerm",
+            aspect_name="glossaryTermInfo",
+            payload=json.dumps({"i": i}),
+        )
+        for i in range(n)
     ]
-    emissions = spark.createDataFrame(
-        rows, "entity_urn string, aspect_name string, payload string"
-    ).coalesce(2)
+
+
+def test_rest_sink_batches_and_authenticates(mock_server):
+    endpoint, received = mock_server
+    rows = emission_rows(25)
     sink = RestSink(endpoint, token="tok-123", batch_size=10)
-    stats = sink.emit(emissions)
+    stats = sink.emit(rows)
     assert stats["mode"] == "rest"
     got = [p for r in received for p in r["proposals"]]
-    assert {p["entityUrn"] for p in got} == {r[0] for r in rows}
+    assert {p["entityUrn"] for p in got} == {r["entity_urn"] for r in rows}
     assert all(r["auth"] == "Bearer tok-123" for r in received)
-    # batching: 25 rows over 2 partitions with batch_size=10 -> every
-    # request carries at most 10, and strictly fewer requests than rows
+    # batching: 25 rows with batch_size=10 -> every request carries at
+    # most 10, and the driver fills each batch before it posts: 3
+    # requests, not one partial batch per partition
     sizes = [len(r["proposals"]) for r in received]
     assert max(sizes) <= 10
     assert len(received) < len(rows)
+    assert len(received) == 3
     assert stats["n_sent"] == 25
     assert stats["n_failed"] == 0
 
@@ -92,19 +72,12 @@ def failing_server():
     server.shutdown()
 
 
-def test_rest_sink_isolates_batch_failures(spark, failing_server):
+def test_rest_sink_isolates_batch_failures(failing_server):
     """ADVICE r1 (rest.py): an HTTP failure must be counted, not raised --
-    raising inside foreachPartition fails the task, and Spark's retry
-    would re-POST batches that already landed."""
-    rows = [
-        (f"urn:li:glossaryTerm:m{i}", "glossaryTermInfo", json.dumps({"i": i}))
-        for i in range(40)
-    ]
-    emissions = spark.createDataFrame(
-        rows, "entity_urn string, aspect_name string, payload string"
-    ).coalesce(1)  # single partition -> deterministic request ordering
-    stats = RestSink(failing_server, batch_size=10).emit(emissions)
-    # 4 batches, every other request 500s: the job must still complete
+    a failed batch must not stop the batches after it, nor re-send the
+    ones that already landed."""
+    stats = RestSink(failing_server, batch_size=10).emit(emission_rows(40))
+    # 4 batches, every other request 500s: the emit must still complete
     # with the failures surfaced in the counters
     assert stats["n_sent"] + stats["n_failed"] == 40
     assert stats["n_sent"] == 20
