@@ -6,103 +6,86 @@ on miss) and :292-299 (per-metric depends_on fan-out joined back to a
 CSV string), plus the manifest's parent_map adjacency lists
 (/root/reference/test_manifest.json:414-431) for multi-hop chains.
 
-Spark shape (SURVEY.md J1-J4): the nodes/sources dimensions are unioned
-into one registry and **broadcast** -- at 100 TB of metrics (or facts)
-the dimension side stays tiny, so resolution is a map-side hash join
-with zero shuffle.  depends_on order is preserved deterministically via
-posexplode + array_sort on (pos, urn), not collect_list order (which
-Spark does not guarantee).
+Spark shape (SURVEY.md J1-J4): the manifest is one row whose nodes and
+sources sections are maps keyed by unique_id, so resolution is a lookup
+inside that row, not a join: each section becomes a (unique_id ->
+dataset URN) map once per manifest, and each metric's depends_on ids are
+looked up in place, which keeps their order.  A map lookup scans the
+map's keys, so resolution costs O(metrics x deps x registry entries)
+comparisons in one task, with no shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.strings import coalesce_nonempty
 from ..functions.urns import dataset_urn
 
 
-def dataset_registry(
-    nodes: DataFrame, sources: DataFrame, platform: str = "dbt", env: str = "PROD"
-) -> DataFrame:
-    """Union nodes + sources into one (unique_id, dataset_urn) dimension.
+def dataset_lookup(
+    section: Column | str, table_field: str, platform: str = "dbt", env: str = "PROD"
+) -> Column:
+    """J1: a nodes or sources section map -> (unique_id -> dataset URN) map.
 
-    Name = lower(database.schema.(alias|identifier or name)) -- the
-    `or` fallback skips empty strings (Python-or fidelity).
-    Nodes win on id collisions (reference checks nodes first): enforced
-    with a priority column rather than lookup order.
+    Name = lower(database.schema.(<table_field> or name)) -- the `or`
+    fallback skips empty strings (Python-or fidelity); a missing
+    database or schema reads as ''.
     """
-    n = nodes.select(
-        "unique_id",
-        F.lit(0).alias("prio"),
-        F.lower(
-            F.concat_ws(
-                ".", "database", "schema", coalesce_nonempty("alias", "name")
-            )
-        ).alias("dataset_name"),
-    )
-    s = sources.select(
-        "unique_id",
-        F.lit(1).alias("prio"),
-        F.lower(
-            F.concat_ws(
-                ".", "database", "schema", coalesce_nonempty("identifier", "name")
-            )
-        ).alias("dataset_name"),
-    )
-    unioned = n.unionByName(s)
-    best = unioned.groupBy("unique_id").agg(
-        F.min_by("dataset_name", "prio").alias("dataset_name")
-    )
-    return best.select(
-        "unique_id", dataset_urn("dataset_name", platform, env).alias("dataset_urn")
-    )
+
+    def urn(_, v: Column) -> Column:
+        name = F.concat_ws(
+            ".",
+            F.coalesce(v["database"], F.lit("")),
+            F.coalesce(v["schema"], F.lit("")),
+            coalesce_nonempty(v[table_field], v["name"]),
+        )
+        return dataset_urn(F.lower(name), platform, env)
+
+    return F.transform_values(section, urn)
 
 
-def resolve_upstreams(
-    metrics: DataFrame, registry: DataFrame
-) -> DataFrame:
-    """J2: explode depends_on, broadcast-join the registry, re-aggregate
-    to a deterministic CSV string per metric.
+def with_upstream_urns(
+    metrics: Column | str, platform: str = "dbt", env: str = "PROD"
+) -> Column:
+    """J2: the metrics map with each metric's `urns`: its depends_on ids
+    resolved in order, each to its dataset URN or NULL where neither the
+    nodes nor the sources lookup holds it.  Nodes win on id collisions,
+    as in the reference.
 
-    Output: (unique_id, upstream_datasets, n_unresolved).  Unresolvable
-    node ids are dropped from the CSV but counted (reference WARNs and
-    omits, /root/reference/dbt_metrics_to_datahub.py:253-254).
-    Metrics with empty depends_on keep a row with NULL upstream_datasets.
+    The lookups are bound to a lambda variable (a transform over a
+    one-element array), so each is built once per manifest, not inlined
+    into the lambda and rebuilt per element; resolving before the
+    explode keeps them out of the per-metric rows, which it copies.
     """
-    exploded = metrics.select(
-        "unique_id", F.posexplode_outer("depends_on").alias("pos", "node_id")
+    lookups = F.struct(
+        dataset_lookup("nodes", "alias", platform, env).alias("node_ds"),
+        dataset_lookup("sources", "identifier", platform, env).alias("source_ds"),
     )
-    joined = exploded.join(
-        F.broadcast(registry.withColumnRenamed("unique_id", "node_id")),
-        on="node_id",
-        how="left",
-    )
-    return joined.groupBy("unique_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            F.col("dataset_urn").isNotNull(),
-                            F.struct("pos", "dataset_urn"),
-                        )
-                    )
-                ),
-                lambda x: x["dataset_urn"],
-            ),
-            ", ",
-        ).alias("upstream_datasets"),
-        F.sum(
-            F.when(
-                F.col("node_id").isNotNull() & F.col("dataset_urn").isNull(), 1
-            ).otherwise(0)
-        ).alias("n_unresolved"),
-    ).withColumn(
-        "upstream_datasets",
-        F.when(F.length("upstream_datasets") > 0, F.col("upstream_datasets")),
-    )
+
+    def resolve(lk: Column) -> Column:
+        def urns(_, v: Column) -> Column:
+            deps = F.coalesce(v["depends_on"]["nodes"], F.array().cast("array<string>"))
+            return v.withField("urns", F.transform(
+                deps, lambda d: F.coalesce(lk["node_ds"][d], lk["source_ds"][d])
+            ))
+
+        return F.transform_values(metrics, urns)
+
+    return F.transform(F.array(lookups), resolve)[0]
+
+
+def upstream_columns(depends_on: Column, urns: Column) -> list[Column]:
+    """`upstream_datasets` (the resolved URNs as one CSV in depends_on
+    order, NULL when none resolves) and `n_unresolved` (ids present but
+    held by neither lookup), from a metric's `depends_on` and `urns`."""
+    csv = F.array_join(urns, ", ")  # skips NULL elements
+    missed = F.zip_with(depends_on, urns, lambda d, u: d.isNotNull() & u.isNull())
+    return [
+        F.when(F.length(csv) > 0, csv).alias("upstream_datasets"),
+        F.size(F.filter(missed, lambda m: m)).cast("bigint").alias("n_unresolved"),
+    ]
 
 
 def transitive_closure(edges: DataFrame, max_hops: int = 10) -> DataFrame:

@@ -30,7 +30,8 @@ def _nonempty_arr_csv(name: str) -> Column:
 
 
 def custom_properties_column() -> Column:
-    """The customProperties map for a metrics frame row."""
+    """The customProperties map for a metric row that carries the typed
+    metric fields and `upstream_datasets`."""
     conditional = F.create_map(
         F.lit("metric_type"), _nonempty_str(F.col("type")),
         F.lit("calculation_method"), _nonempty_str(F.col("calculation_method")),
@@ -54,14 +55,6 @@ def custom_properties_column() -> Column:
         base,
         F.map_filter(conditional, lambda k, v: v.isNotNull()),
         meta_props,
-    )
-
-
-def with_custom_properties(metrics_with_upstreams: DataFrame) -> DataFrame:
-    """Append `custom_properties` to a metrics frame that already carries
-    `upstream_datasets` (from lineage.resolve_upstreams)."""
-    return metrics_with_upstreams.withColumn(
-        "custom_properties", custom_properties_column()
     )
 
 

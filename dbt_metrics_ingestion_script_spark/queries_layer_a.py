@@ -8,6 +8,10 @@ strategy (golden fixture + expected transcript,
 manifest (tests/fixtures/manifest.json) is this repo's own authoring,
 shaped like /root/reference/test_manifest.json.
 
+The glossary, lineage and properties queries read the Layer A ingest's
+own projection (pipeline.glossary_metrics) over the valid metrics, so
+each golden pins what an ingest emits.
+
 sf_dir is accepted for driver-contract uniformity but unused.
 """
 
@@ -17,10 +21,9 @@ import os
 
 from pyspark.sql import functions as F
 
-from .operators.glossary import glossary_nodes as _glossary_nodes
-from .operators.glossary import glossary_terms as _glossary_terms
-from .operators.lineage import dataset_registry, resolve_upstreams, transitive_closure
-from .operators.properties import properties_long, with_custom_properties
+from .operators.lineage import transitive_closure
+from .operators.properties import properties_long
+from .pipeline import build_emissions, build_glossary_frames, glossary_metrics
 from .registry import register
 from .sources.manifest import load_manifest
 
@@ -37,6 +40,17 @@ _ORDERS = f"{_DS}warehouse.marts.orders_final,PROD)"
 _CUSTOMERS = f"{_DS}warehouse.marts.dim_customers,PROD)"
 _RAW_ORDERS = f"{_DS}warehouse.landing.orders_raw_v2,PROD)"
 _RAW_CUSTOMERS = f"{_DS}warehouse.landing.raw_customers,PROD)"
+
+
+def _terms(spark):
+    """The fixture's valid metric rows of the ingest projection."""
+    return glossary_metrics(load_manifest(spark, FIXTURE)).filter(F.col("reason").isNull())
+
+
+def _nodes(spark):
+    """The fixture's glossary hierarchy: (urn, name, definition, parent_urn)."""
+    metrics = glossary_metrics(load_manifest(spark, FIXTURE))
+    return metrics.filter("coalesce(pos, 0) = 0").select(F.inline("node_rows"))
 
 
 @register(
@@ -101,9 +115,8 @@ def manifest_semantic_models(spark, sf_dir):
     """,
 )
 def glossary_nodes(spark, sf_dir):
-    """A9 + F1-F4: category distinct -> hierarchy frame."""
-    m = load_manifest(spark, FIXTURE).metrics
-    return _glossary_nodes(spark, m).select("urn", "name", "definition", "parent_urn")
+    """A9 + F1-F4: distinct categories -> hierarchy rows."""
+    return _nodes(spark)
 
 
 @register(
@@ -125,10 +138,7 @@ def glossary_nodes(spark, sf_dir):
 )
 def glossary_terms(spark, sf_dir):
     """Term synthesis incl. Python-or fallbacks for label/description."""
-    m = load_manifest(spark, FIXTURE).metrics
-    return _glossary_terms(m).select(
-        "term_urn", "name", "definition", "parent_urn", "term_source"
-    )
+    return _terms(spark).select("term_urn", "name", "definition", "parent_urn", "term_source")
 
 
 @register(
@@ -144,11 +154,9 @@ def glossary_terms(spark, sf_dir):
     """,
 )
 def lineage_upstream_resolution(spark, sf_dir):
-    """J1+J2: nodes/sources union -> broadcast join -> ordered CSV;
-    unresolvable ids counted, not fatal."""
-    frames = load_manifest(spark, FIXTURE)
-    registry = dataset_registry(frames.nodes, frames.sources)
-    return resolve_upstreams(frames.metrics, registry)
+    """J1+J2: nodes-then-sources map lookups -> ordered CSV;
+    unresolvable ids counted, not fatal.  One scan, no join."""
+    return _terms(spark).select("unique_id", "upstream_datasets", "n_unresolved")
 
 
 @register(
@@ -235,12 +243,10 @@ def lineage_impact_analysis(spark, sf_dir):
     """,
 )
 def pipeline_emissions(spark, sf_dir):
-    """S4/S5 + full Layer A lifecycle: manifest -> glossary frames ->
-    flattened emission frame (the sink-facing contract). Payload JSON is
+    """S4/S5 + full Layer A lifecycle: manifest -> glossary rows ->
+    emission frame (the sink-facing contract). Payload JSON is
     excluded from the golden (struct key order is engine-specific); its
     content is covered by term_custom_properties."""
-    from .pipeline import build_emissions, build_glossary_frames
-
     frames = load_manifest(spark, FIXTURE)
     result = build_glossary_frames(spark, frames)
     return build_emissions(result).select("entity_urn", "entity_kind", "aspect_name")
@@ -308,18 +314,7 @@ def pipeline_emissions(spark, sf_dir):
 def term_custom_properties(spark, sf_dir):
     """P3+P4+F5-F8+F14-F15: conditional customProperties map, exploded to
     long form (map ordering is engine-specific, rows are not)."""
-    frames = load_manifest(spark, FIXTURE)
-    registry = dataset_registry(frames.nodes, frames.sources)
-    upstreams = resolve_upstreams(frames.metrics, registry)
-    enriched = with_custom_properties(
-        frames.metrics.join(F.broadcast(upstreams), "unique_id", "left")
-    )
-    terms = _glossary_terms(frames.metrics).select("unique_id", "term_urn")
-    return properties_long(
-        terms.join(enriched.select("unique_id", "custom_properties"), "unique_id").select(
-            "term_urn", "custom_properties"
-        )
-    )
+    return properties_long(_terms(spark))
 
 
 @register(
@@ -366,11 +361,8 @@ def glossary_subtree_counts(spark, sf_dir):
     flattens nested categories to root children
     (/root/reference/dbt_metrics_to_datahub.py:197-199), so depth is
     2 here, but the closure handles any depth."""
-    from .operators.lineage import transitive_closure
-
-    m = load_manifest(spark, FIXTURE).metrics
-    nodes = _glossary_nodes(spark, m).select("urn", "parent_urn")
-    terms = _glossary_terms(m).select(F.col("parent_urn").alias("node"))
+    nodes = _nodes(spark).select("urn", "parent_urn")
+    terms = _terms(spark).select(F.col("parent_urn").alias("node"))
     edges = nodes.where(F.col("parent_urn").isNotNull()).select(
         F.col("urn").alias("child"), F.col("parent_urn").alias("parent")
     )

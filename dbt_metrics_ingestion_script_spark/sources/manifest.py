@@ -5,21 +5,21 @@ json.load + tolerant per-field `.get(k, default)` extraction
 (/root/reference/dbt_metrics_to_datahub.py:119-150).  Here the manifest
 is read with an explicit permissive StructType (keyed sections as
 MapType), each section exploded into its own DataFrame, and defaults
-applied with coalesce -- so Catalyst prunes unread fields and the same
-code handles arbitrarily many metrics distributed across partitions.
+applied with coalesce -- so Catalyst prunes unread fields.
 
-The frames are lazy and hold no Spark storage: each action over them
-re-reads the document, so callers keep their action count low (a Layer
-A ingest runs one collect) instead of caching.
+The scan yields the whole manifest as ONE row.  The Layer A ingest
+projects that row directly (pipeline.py); the per-section frames are
+built only when a caller reads them.  Nothing holds Spark storage: each
+action re-reads the document, so callers keep their action count low
+(a Layer A ingest runs one collect) instead of caching.
 
-Scale note: a dbt manifest is a single document (MBs, not TBs) -- the
-extracted frames behave as ordinary (small, broadcastable) dimension
-tables for the lineage joins downstream.
+Scale note: a dbt manifest is a single document (MBs, not TBs), parsed
+by one task.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -100,18 +100,6 @@ MANIFEST_SCHEMA = StructType(
 )
 
 
-@dataclass
-class ManifestFrames:
-    """The manifest decomposed into per-section DataFrames."""
-
-    metrics: DataFrame
-    nodes: DataFrame
-    sources: DataFrame
-    semantic_models: DataFrame
-    parent_edges: DataFrame  # (child, parent)
-    child_edges: DataFrame  # (parent, child)
-
-
 def _explode_section(raw: DataFrame, section: str) -> DataFrame:
     return raw.select(
         F.explode_outer(F.col(section)).alias("unique_id", "value")
@@ -127,17 +115,11 @@ def _arr(name: str):
     return F.coalesce(F.col(f"value.{name}"), F.array().cast(ArrayType(S))).alias(name)
 
 
-def load_manifest(spark: SparkSession, path: str) -> ManifestFrames:
-    """Parse a manifest into lazy section frames.
-
-    Nothing is persisted or memoized: every dbt run writes a new
-    manifest, so a per-path memo would not hit, and it would pin Spark
-    storage for the life of the session.  Each action over the frames
-    re-plans and re-reads the multiLine JSON scan."""
-    raw = spark.read.schema(MANIFEST_SCHEMA).option("multiLine", True).json(path)
-
-    metrics = _explode_section(raw, "metrics").select(
-        "unique_id",
+def metric_columns() -> list[F.Column]:
+    """The typed metric fields, read by name from a `(unique_id, value)`
+    row of the `metrics` section, defaults applied."""
+    return [
+        F.col("unique_id"),
         _s("name"),
         _s("label"),
         _s("description"),
@@ -160,51 +142,56 @@ def load_manifest(spark: SparkSession, path: str) -> ManifestFrames:
         _arr("tags"),
         _s("package_name"),
         _s("path"),
-    )
+    ]
 
-    nodes = _explode_section(raw, "nodes").select(
-        "unique_id",
-        _s("name"),
-        _s("resource_type"),
-        _s("package_name"),
-        _s("database"),
-        _s("schema"),
-        F.col("value.alias").alias("alias"),
-        F.col("value.relation_name").alias("relation_name"),
-    )
 
-    sources = _explode_section(raw, "sources").select(
-        "unique_id",
-        _s("name"),
-        _s("resource_type"),
-        _s("database"),
-        _s("schema"),
-        F.col("value.identifier").alias("identifier"),
-    )
+class ManifestFrames:
+    """The manifest as its one-row scan, `raw`, whose sections are maps
+    keyed by `unique_id`.  Each per-section frame is built when first
+    read: the Layer A ingest reads `raw` alone."""
 
-    semantic_models = _explode_section(raw, "semantic_models").select(
-        "unique_id",
-        _s("name"),
-        _s("description"),
-        _s("model"),
-        F.col("value.dimensions").alias("dimensions"),
-        F.col("value.measures").alias("measures"),
-        F.col("value.entities").alias("entities"),
-        F.col("value.meta").alias("meta"),
-    )
+    def __init__(self, raw: DataFrame):
+        self.raw = raw
 
-    parent_edges = raw.select(F.explode_outer("parent_map").alias("child", "parents")).select(
-        "child", F.explode("parents").alias("parent")
-    )
-    child_edges = raw.select(F.explode_outer("child_map").alias("parent", "children")).select(
-        "parent", F.explode("children").alias("child")
-    )
+    @cached_property
+    def metrics(self) -> DataFrame:
+        return _explode_section(self.raw, "metrics").select(*metric_columns())
 
+    @cached_property
+    def semantic_models(self) -> DataFrame:
+        return _explode_section(self.raw, "semantic_models").select(
+            "unique_id",
+            _s("name"),
+            _s("description"),
+            _s("model"),
+            F.col("value.dimensions").alias("dimensions"),
+            F.col("value.measures").alias("measures"),
+            F.col("value.entities").alias("entities"),
+            F.col("value.meta").alias("meta"),
+        )
+
+    @cached_property
+    def parent_edges(self) -> DataFrame:
+        """(child, parent)"""
+        return self.raw.select(
+            F.explode_outer("parent_map").alias("child", "parents")
+        ).select("child", F.explode("parents").alias("parent"))
+
+    @cached_property
+    def child_edges(self) -> DataFrame:
+        """(parent, child)"""
+        return self.raw.select(
+            F.explode_outer("child_map").alias("parent", "children")
+        ).select("parent", F.explode("children").alias("child"))
+
+
+def load_manifest(spark: SparkSession, path: str) -> ManifestFrames:
+    """The manifest's one-row multiLine JSON scan; section frames on demand.
+
+    Nothing is persisted or memoized: every dbt run writes a new
+    manifest, so a per-path memo would not hit, and it would pin Spark
+    storage for the life of the session.  Each action re-plans and
+    re-reads the document."""
     return ManifestFrames(
-        metrics=metrics,
-        nodes=nodes,
-        sources=sources,
-        semantic_models=semantic_models,
-        parent_edges=parent_edges,
-        child_edges=child_edges,
+        spark.read.schema(MANIFEST_SCHEMA).option("multiLine", True).json(path)
     )

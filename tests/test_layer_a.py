@@ -4,10 +4,12 @@ vs hand-computed golden oracles, plus pipeline/sink behavior."""
 from __future__ import annotations
 
 import json
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from dbt_metrics_ingestion_script_spark import pipeline
 from dbt_metrics_ingestion_script_spark import queries_layer_a as qa
 from dbt_metrics_ingestion_script_spark.pipeline import ingest_metrics
 from dbt_metrics_ingestion_script_spark.registry import REGISTRY
@@ -75,6 +77,116 @@ UNRESOLVED_MANIFEST = json.dumps({
 })
 
 
+# Lookup edge cases, each pinned to the rows the join-based pipeline
+# emitted before lineage and the hierarchy became lookups inside the
+# manifest row: a node/source id collision (the node wins), a JSON-null
+# node, NULL and repeated depends_on ids, NULL and '' categories, a ''
+# metric key, a JSON-null metric, and '' label/description fallbacks.
+EDGE_MANIFEST = json.dumps({
+    "metrics": {
+        "": {"name": "keyless", "depends_on": {"nodes": ["model.p.t"]}},
+        "metric.p.collide": {
+            "name": "collide", "label": "", "description": "",
+            "depends_on": {"nodes": ["model.p.shared", None, "model.p.t", "model.p.t",
+                                     "model.p.null_node", "source.p.s.r", "model.p.nowhere"]},
+            "meta": {"datahub_glossary_category": None, "owner": "x"},
+        },
+        "metric.p.empty_cat": {"name": "empty_cat", "label": "Empty Cat",
+                               "meta": {"datahub_glossary_category": ""},
+                               "depends_on": {"nodes": []}},
+        "metric.p.nested": {"name": "nested", "meta": {"datahub_glossary_category": "A/B/"},
+                            "depends_on": {"nodes": None}},
+        "metric.p.nodeps": {"name": "nodeps", "description": "Has a description"},
+        "metric.p.null_metric": None,
+        "metric.p.noname": {"label": "No name", "depends_on": {"nodes": ["model.p.ghost"]}},
+    },
+    "nodes": {
+        "model.p.shared": {"name": "Shared_Model", "database": "WH", "schema": "Marts",
+                           "alias": ""},
+        "model.p.t": {"name": "t", "database": "d", "schema": "s", "alias": "t_final"},
+        "model.p.null_node": None,
+    },
+    "sources": {
+        "model.p.shared": {"name": "shared_src", "database": "raw", "schema": "src",
+                           "identifier": "shared_v2"},
+        "source.p.s.r": {"name": "r", "database": None, "schema": "raw", "identifier": ""},
+    },
+})
+EMPTY_MANIFEST = '{"metrics": {}, "nodes": {}, "sources": {}}'
+MALFORMED_MANIFEST = (
+    '{"metrics": {"metric.p.a": {"name": ""}, "metric.p.b": {"label": "b"}},'
+    ' "nodes": {}, "sources": {}}'
+)
+
+_NODE = ("glossaryNode", "glossaryNodeInfo")
+_TERM = ("glossaryTerm", "glossaryTermInfo")
+_ROOT = ("urn:li:glossaryNode:dbt_metrics", *_NODE,
+         '{"name":"dbt_metrics","definition":"dbt metrics ingested from dbt project"}',
+         None, None)
+_DS = "urn:li:dataset:(urn:li:dataPlatform:dbt,{},PROD)"
+_COLLIDE_UPSTREAMS = ", ".join(_DS.format(n) for n in (
+    "wh.marts.shared_model", "d.s.t_final", "d.s.t_final", ".", ".raw.r"))
+EDGE_ROWS = [
+    _ROOT,
+    ("urn:li:glossaryNode:dbt_metrics.", *_NODE,
+     '{"name":"","definition":"Metrics in category: ",'
+     '"parent_urn":"urn:li:glossaryNode:dbt_metrics"}', None, None),
+    ("urn:li:glossaryNode:dbt_metrics.A.B.", *_NODE,
+     '{"name":"","definition":"Metrics in category: A/B/",'
+     '"parent_urn":"urn:li:glossaryNode:dbt_metrics"}', None, None),
+    ("urn:li:glossaryNode:dbt_metrics.Uncategorized", *_NODE,
+     '{"name":"Uncategorized","definition":"Metrics in category: Uncategorized",'
+     '"parent_urn":"urn:li:glossaryNode:dbt_metrics"}', None, None),
+    ("urn:li:glossaryTerm:dbt_metrics..empty_cat", *_TERM,
+     '{"name":"Empty Cat","definition":"dbt metric: empty_cat",'
+     '"parent_urn":"urn:li:glossaryNode:dbt_metrics.","term_source":"dbt",'
+     '"custom_properties":{"dbt_unique_id":"metric.p.empty_cat","dbt_package":"",'
+     '"dbt_path":""}}', 0, None),
+    ("urn:li:glossaryTerm:dbt_metrics.A.B..nested", *_TERM,
+     '{"name":"nested","definition":"dbt metric: nested",'
+     '"parent_urn":"urn:li:glossaryNode:dbt_metrics.A.B.","term_source":"dbt",'
+     '"custom_properties":{"dbt_unique_id":"metric.p.nested","dbt_package":"",'
+     '"dbt_path":""}}', 0, None),
+    ("urn:li:glossaryTerm:dbt_metrics.Uncategorized.collide", *_TERM,
+     '{"name":"collide","definition":"dbt metric: collide",'
+     '"parent_urn":"urn:li:glossaryNode:dbt_metrics.Uncategorized","term_source":"dbt",'
+     '"custom_properties":{"dbt_unique_id":"metric.p.collide","dbt_package":"",'
+     '"dbt_path":"","upstream_datasets":"' + _COLLIDE_UPSTREAMS + '","meta_owner":"x"}}',
+     1, None),
+    ("urn:li:glossaryTerm:dbt_metrics.Uncategorized.nodeps", *_TERM,
+     '{"name":"nodeps","definition":"Has a description",'
+     '"parent_urn":"urn:li:glossaryNode:dbt_metrics.Uncategorized","term_source":"dbt",'
+     '"custom_properties":{"dbt_unique_id":"metric.p.nodeps","dbt_package":"",'
+     '"dbt_path":""}}', 0, None),
+    (None, None, None, None, None, "missing name"),
+    (None, None, None, None, None, "missing name"),
+    (None, None, None, None, None, "missing unique_id"),
+]
+
+
+@pytest.mark.parametrize(
+    "text, want_rows, want_stats",
+    [
+        (EDGE_MANIFEST, EDGE_ROWS, {"n_metrics": 4, "n_nodes": 4, "n_quarantined": 3,
+                                    "n_unresolved_lineage": 1}),
+        (EMPTY_MANIFEST, [_ROOT], {"n_metrics": 0, "aborted": "no metrics"}),
+        (MALFORMED_MANIFEST, [_ROOT] + [(None,) * 5 + ("missing name",)] * 2,
+         {"n_metrics": 0, "aborted": "no metrics"}),
+    ],
+    ids=["edge", "empty", "malformed"],
+)
+def test_lookup_semantics_golden(spark, tmp_path, text, want_rows, want_stats):
+    """Every collected row, payload strings included, as a multiset."""
+    path = tmp_path / "manifest.json"
+    path.write_text(text)
+    frames = pipeline.load_manifest(spark, str(path))
+    rows = pipeline.build_glossary_frames(spark, frames).rows.collect()
+    assert sorted(map(tuple, rows), key=repr) == sorted(want_rows, key=repr)
+    stats = ingest_metrics(spark, str(path)).stats
+    stats.pop("sink", None)
+    assert stats == want_stats
+
+
 def test_pipeline_quarantine(spark, tmp_path):
     bad = tmp_path / "bad_manifest.json"
     bad.write_text(QUARANTINE_MANIFEST)
@@ -106,15 +218,47 @@ def test_pipeline_empty_manifest_guard(spark, tmp_path, mock_server):
 
 def test_ingest_runs_one_spark_action(spark):
     """Counts, guard and dry-run sink all read the one collect: a
-    NoopSink ingest adds exactly one SQL execution to the status store."""
+    NoopSink ingest adds exactly one SQL execution to the status store,
+    and that execution is one Spark job (one scan, no exchange)."""
+    sc = spark.sparkContext
     store = spark._jsparkSession.sharedState().statusStore()
-    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus = sc._jsc.sc().listenerBus()
     bus.waitUntilEmpty()
     before = store.executionsCount()
-    result = ingest_metrics(spark, qa.FIXTURE, sink=NoopSink())
+    sc.setJobGroup("test-ingest-one-action", "one Layer A ingest")
+    try:
+        result = ingest_metrics(spark, qa.FIXTURE, sink=NoopSink())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     bus.waitUntilEmpty()
     assert store.executionsCount() - before == 1
+    assert len(sc.statusTracker().getJobIdsForGroup("test-ingest-one-action")) == 1
     assert result.stats["n_metrics"] == 5
+
+
+def test_ingest_calls_each_stage_once(spark, monkeypatch):
+    """An ingest builds its scan through `pipeline.load_manifest` and its
+    projection through `pipeline.build_glossary_frames`, once each and
+    looked up on the module, so a caller that wraps them (a tracer)
+    times scan construction and projection separately;
+    `pipeline.build_emissions` stays an attribute for the same callers."""
+    calls = Counter()
+
+    def counting(name):
+        fn = getattr(pipeline, name)
+
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    for name in ("load_manifest", "build_glossary_frames"):
+        monkeypatch.setattr(pipeline, name, counting(name))
+    for n in (1, 2):
+        assert ingest_metrics(spark, qa.FIXTURE).stats["n_metrics"] == 5
+        assert calls == {"load_manifest": n, "build_glossary_frames": n}
+    assert callable(pipeline.build_emissions)
 
 
 @pytest.mark.parametrize(

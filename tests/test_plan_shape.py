@@ -60,11 +60,13 @@ def test_star_join_broadcasts_dimensions(spark):
     assert plan.count("lineitem.parquet") == 1
 
 
-def test_lineage_registry_join_is_broadcast(spark):
-    """Metadata registry resolution is a map-side broadcast join with no
-    shuffle of the metric side (SCALE.md Layer A)."""
-    plan = plan_of(run(spark, "lineage_upstream_resolution"))
-    assert "BroadcastHashJoin" in plan
+def test_lineage_resolution_is_one_scan_no_exchange(spark):
+    """Lineage resolution is a lookup inside the manifest's one row: the
+    document is scanned once and nothing is exchanged, so the metric
+    side is never shuffled (SCALE.md Layer A)."""
+    plan = plan_of(run(spark, "lineage_upstream_resolution"), "simple")
+    assert "Exchange" not in plan, plan
+    assert plan.count("FileScan json") == 1, plan
 
 
 def test_sketch_self_join_reuses_exchange(spark):

@@ -19,9 +19,11 @@ from functools import reduce
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from dbt_metrics_ingestion_script_spark.functions.strings import coalesce_nonempty
-from dbt_metrics_ingestion_script_spark.operators.lineage import dataset_registry
+from dbt_metrics_ingestion_script_spark.operators.lineage import dataset_lookup
+from dbt_metrics_ingestion_script_spark.sources.manifest import MANIFEST_SCHEMA
 
 # values a manifest string field actually takes: absent, empty, or text
 field = st.one_of(
@@ -58,24 +60,29 @@ def test_coalesce_nonempty_matches_python_or(spark, chain):
 
 def test_dataset_registry_empty_string_alias_and_identifier(spark):
     """'' alias/identifier must fall through to `name` exactly like the
-    reference's `alias or name` / `identifier or name` (the fixture
-    covers ''-identifier under the driver; this pins ''-alias too)."""
-    nodes = spark.createDataFrame(
-        [
-            ("model.p.empty_alias", "Stg_Returns", "wh", "marts", ""),
-            ("model.p.null_alias", "Dim_Parts", "wh", "marts", None),
-            ("model.p.real_alias", "stg_x", "wh", "marts", "x_final"),
-        ],
-        "unique_id string, name string, database string, schema string, alias string",
+    reference's `alias or name` / `identifier or name` in the nodes and
+    sources lookups (the fixture covers ''-identifier under the driver;
+    this pins ''-alias too)."""
+    def node(name, alias):
+        return {"name": name, "database": "wh", "schema": "marts", "alias": alias}
+
+    raw = spark.createDataFrame(
+        [(
+            {
+                "model.p.empty_alias": node("Stg_Returns", ""),
+                "model.p.null_alias": node("Dim_Parts", None),
+                "model.p.real_alias": node("stg_x", "x_final"),
+            },
+            {"source.p.s1": {"name": "Raw_Feed", "database": "wh", "schema": "landing",
+                             "identifier": ""}},
+        )],
+        StructType([MANIFEST_SCHEMA["nodes"], MANIFEST_SCHEMA["sources"]]),
     )
-    sources = spark.createDataFrame(
-        [("source.p.s1", "Raw_Feed", "wh", "landing", "")],
-        "unique_id string, name string, database string, schema string, identifier string",
-    )
-    got = {
-        r["unique_id"]: r["dataset_urn"]
-        for r in dataset_registry(nodes, sources).collect()
-    }
+    row = raw.select(
+        dataset_lookup("nodes", "alias").alias("n"),
+        dataset_lookup("sources", "identifier").alias("s"),
+    ).first()
+    got = {**row["n"], **row["s"]}
     ds = "urn:li:dataset:(urn:li:dataPlatform:dbt,{},PROD)"
     assert got == {
         "model.p.empty_alias": ds.format("wh.marts.stg_returns"),
