@@ -137,7 +137,6 @@ HEADLINE = [
     "events_funnel_conversion_window",
     "events_asof_last_order",
     "events_asof_last_order_bucketed",
-    "events_asof_last_order_lookup",
     "events_range_join_sessions",
     "events_cohort_retention",
     "events_rolling_retention",
@@ -242,7 +241,6 @@ HEADLINE = [
     "corpus_substring_extents",
     "corpus_substring_dedup_clean",
     "events_snapshot_at_time",
-    "events_snapshot_diff",
     "events_snapshot_diff_single_scan",
     "events_kmv_daily_users",
     "events_kmv_merge_rollup",

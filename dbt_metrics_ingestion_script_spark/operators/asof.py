@@ -168,67 +168,6 @@ def asof_join_backward(
     )
 
 
-def asof_lookup_static(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-) -> DataFrame:
-    """As-of against a STATIC right side via a per-key sorted-history
-    lookup: the right side collapses to one row per key holding the
-    time-sorted array of (right_ts, values) structs; each left row
-    equi-joins its key's history and selects the last element at-or-
-    before its timestamp with array functions -- completely STATELESS
-    per left row.
-
-    That statelessness is the point: the same code runs on a STREAMING
-    left side (stream-static equi-join + map-side array lookup needs no
-    watermark, no state store, no output-mode restrictions), giving the
-    streaming as-of enrichment shape -- each event picks up the latest
-    prior dimension version -- where the union+window form cannot
-    stream (a window over a stream needs event-time aggregation
-    machinery).  Identical
-    results to `asof_join_backward`; the registered query shares its
-    DuckDB native-ASOF oracle, making this the third oracle-checked
-    physical strategy for the one contract.
-
-    Scale trade vs the window forms: the whole history of a key lives
-    in ONE array row (bounded by that key's right-side cardinality --
-    right for dimension-version histories, wrong for unbounded event
-    histories, which is the bucketized variant's territory), and the
-    history frame joins the left side by key (broadcast when it fits,
-    shuffled otherwise -- AQE decides).
-
-    NULL semantics match the other variants: NULL right_ts rows are
-    dropped by the prep; a NULL left_ts compares NULL to every element,
-    the filter keeps none, and the NULL fill falls out; a key with no
-    history NULL-fills through the left join.
-    """
-    l_tagged, r_tagged, left_only, carried = _asof_prep(
-        left, right, on, left_ts, right_ts, value_cols
-    )
-    hist = (
-        r_tagged.select(on, F.struct(F.col("__ts"), F.col("__r")).alias("__e"))
-        .groupBy(on)
-        .agg(F.sort_array(F.collect_list("__e")).alias("__hist"))
-    )
-    joined = l_tagged.drop("__r", "__side").join(hist, on, "left")
-    matches = F.filter(
-        "__hist", lambda e: e["__ts"] <= F.col("__ts")
-    )
-    # F.get (not element_at): out-of-bounds yields NULL under ANSI too,
-    # so an empty match list is the NULL fill, never an error
-    last = F.get(matches, F.size(matches) - 1)
-    return joined.select(
-        on,
-        F.col("__ts").alias(left_ts),
-        *left_only,
-        *[last["__r"][c].alias(c) for c in carried],
-    )
-
-
 def asof_join_backward_bucketed(
     left: DataFrame,
     right: DataFrame,

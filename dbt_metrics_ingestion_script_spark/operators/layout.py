@@ -141,14 +141,6 @@ def write_zordered(
     )
 
 
-# The bucketed co-located-join writer lives in sources/bucketed.py
-# (write_bucketed): same pay-the-shuffle-once discipline as
-# write_zordered, applied to hash equi-joins instead of range scans.
-# Plan locks: tests/test_bucketed.py (zero-Exchange join) and
-# tests/test_ext_operators.py::test_bucketed_join_is_shuffle_free_and_
-# prunes_buckets (bucket pruning, SelectedBucketsCount).
-
-
 # ---------------------------------------------------------------------------
 # Hilbert-curve layout keys (the better-locality sibling of Z-order)
 # ---------------------------------------------------------------------------

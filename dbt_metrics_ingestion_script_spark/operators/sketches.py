@@ -13,7 +13,7 @@ directly testable:
 
 - **mergeable**: the sketch of a union is the cell-wise SUM of the
   sketches, so daily sketches roll up to monthly/all-time exactly
-  (same algebra the metric store uses for partial states);
+  (the same algebra as any partial-aggregate rollup);
 - **deterministic**: cells are picked by the portable 31-bit universal
   hash family (functions/hashing.py), so a DuckDB oracle replays
   every counter and every estimate bit-identically, INCLUDING the

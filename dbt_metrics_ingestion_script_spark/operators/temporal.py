@@ -1,12 +1,13 @@
-"""Changelog replay: point-in-time snapshots and snapshot diffs (EXT).
+"""Changelog replay: point-in-time snapshots (EXT).
 
 The lakehouse temporal primitives on top of an append-only changelog:
 given a stream of keyed upsert/delete records, reconstruct the table
-state AS OF any timestamp, and diff two reconstructed states.  The
-same replay semantics power the SCD2 builder (operators/sessions.py's
-interval frames) and the metric-store MERGE loop (operators/merge.py)
--- this module is the read side: no mutable store needed, any
-historical state is a query over the log.
+state AS OF any timestamp.  The same replay semantics power the SCD2
+builder (operators/sessions.py's interval frames) and the metric-store
+MERGE loop (operators/merge.py) -- this module is the read side: no
+mutable store needed, any historical state is a query over the log.
+The registered snapshot diff (``events_snapshot_diff_single_scan``)
+folds both states into one aggregate instead of joining two snapshots.
 
 Scale shape (100 TB changelog):
 
@@ -16,16 +17,12 @@ Scale shape (100 TB changelog):
   reduce side keeps one row per key.  No window sort, no per-key
   re-scan.  (A window row_number formulation would shuffle every log
   row to sort it; the aggregate form ships only per-partition winners.)
-- ``snapshot_diff`` joins two snapshot frames on the key.  Both sides
-  are outputs of the same aggregate, so at scale they are key-
-  partitioned identically and AQE plans a co-partitioned join; the
-  diff never touches the log again.
 - Time-travel pruning: a changelog laid out by date (the usual
   ingestion partitioning) lets the ``ts <= as_of`` predicate prune
   whole partitions before the aggregate -- pinned by the pushdown
   lock in tests/test_plan_shape.py.
 
-Replay semantics (one definition, used by snapshot and diff):
+Replay semantics (one definition, used by every snapshot):
 
 - records are keyed by ``key_col``; the latest record per key wins,
   "latest" ordered by (ts, seq) so co-timestamped records resolve
@@ -124,49 +121,4 @@ def snapshot_at(
             as_of=as_of,
         ),
         delete_op=delete_op,
-    )
-
-
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    *,
-    key_col: str,
-    value_cols: list[str],
-) -> DataFrame:
-    """Classify every key across two snapshots: added / removed /
-    changed / unchanged.
-
-    ``old`` and ``new`` must be snapshot frames (one row per key, the
-    same value columns).  "changed" compares the value columns only --
-    state_ts/seq advancing without a value change is "unchanged"
-    (compaction produces exactly such records).  NULL-safe comparison
-    throughout (<=> semantics), so NULL payloads diff correctly.
-    """
-    o = old.select(
-        F.col(key_col), *[F.col(c).alias(f"old_{c}") for c in value_cols]
-    )
-    n = new.select(
-        F.col(key_col), *[F.col(c).alias(f"new_{c}") for c in value_cols]
-    )
-    # presence markers: value columns may be legitimately NULL, so carry
-    # an explicit per-side flag through the full-outer join instead of
-    # probing a payload column for NULL
-    o = o.withColumn("__in_old", F.lit(True))
-    n = n.withColumn("__in_new", F.lit(True))
-    joined = o.join(n, on=key_col, how="full_outer")
-    same = F.lit(True)
-    for c in value_cols:
-        same = same & F.col(f"old_{c}").eqNullSafe(F.col(f"new_{c}"))
-    status = (
-        F.when(F.col("__in_old").isNull(), F.lit("added"))
-        .when(F.col("__in_new").isNull(), F.lit("removed"))
-        .when(same, F.lit("unchanged"))
-        .otherwise(F.lit("changed"))
-    )
-    return joined.select(
-        key_col,
-        status.alias("status"),
-        *[F.col(f"old_{c}") for c in value_cols],
-        *[F.col(f"new_{c}") for c in value_cols],
     )

@@ -4752,55 +4752,6 @@ def dedup_near_incremental_vs_corpus(spark, sf_dir):
 
 
 @register(
-    "events_asof_last_order_lookup",
-    # THIRD physical strategy for the one as-of contract, same DuckDB
-    # native ASOF JOIN oracle as the union+window and bucketized forms
-    """
-    WITH daily AS (
-      SELECT o_custkey AS user_id, CAST(o_orderdate AS TIMESTAMP) AS last_order_ts,
-             COUNT(*) AS last_day_orders,
-             ROUND(SUM(o_totalprice), 4) AS last_day_total
-      FROM orders WHERE o_orderdate IS NOT NULL GROUP BY 1, 2
-    )
-    SELECT e.event_id, e.user_id, e.ts,
-           d.last_order_ts, d.last_day_orders, d.last_day_total
-    FROM (SELECT * FROM events WHERE ts IS NOT NULL) e
-    ASOF LEFT JOIN daily d
-      ON e.user_id = d.user_id AND e.ts >= d.last_order_ts
-    UNION ALL
-    SELECT event_id, user_id, ts, NULL, NULL, NULL
-    FROM events WHERE ts IS NULL
-    """,
-)
-def events_asof_last_order_lookup(spark, sf_dir):
-    """Sorted-history-lookup as-of: stateless per event, the shape that
-    also runs on a STREAMING left side (stream-static equi-join +
-    map-side array pick; no watermark, no state store)."""
-    from .operators.asof import asof_lookup_static
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(
-            F.col("o_custkey").alias("user_id"),
-            F.col("o_orderdate").cast("timestamp").alias("last_order_ts"),
-        )
-        .agg(
-            F.count("*").alias("last_day_orders"),
-            F.round(F.sum("o_totalprice"), 4).alias("last_day_total"),
-        )
-    )
-    return asof_lookup_static(
-        ev,
-        daily,
-        on="user_id",
-        left_ts="ts",
-        right_ts="last_order_ts",
-        value_cols=["last_day_orders", "last_day_total"],
-    )
-
-
-@register(
     "events_user_sketch_rollup",
     # self-verifying oracle (the metric_approx_customer_count pattern):
     # the DataSketches HLL estimate is not SQL-reproducible, so the

@@ -32,7 +32,7 @@ from .operators.sketches import (
     kmv_merge,
     kmv_sketch,
 )
-from .operators.temporal import snapshot_at, snapshot_diff
+from .operators.temporal import snapshot_at
 from .registry import register
 from .sources.tables import load_table
 
@@ -126,30 +126,16 @@ _SNAPSHOT_DIFF_ORACLE = f"""
     """
 
 
-@register("events_snapshot_diff", _SNAPSHOT_DIFF_ORACLE)
-def events_snapshot_diff(spark, sf_dir):
-    """Diff two point-in-time states of the changelog-reconstructed
-    table: added / removed / changed / unchanged per key, NULL-safe on
-    the payload.  Both snapshots are outputs of the same keyed
-    aggregate, so at scale they arrive identically partitioned and the
-    diff join never re-shuffles the log.  'removed' is a key whose T2
-    state is a tombstone; 'added' first appeared after T1."""
-    s1 = _events_snapshot(spark, sf_dir, _SNAP_T1)
-    s2 = _events_snapshot(spark, sf_dir, _SNAP_T2)
-    return snapshot_diff(
-        s1, s2, key_col="user_id", value_cols=["state_op", "value"]
-    )
-
-
 @register("events_snapshot_diff_single_scan", _SNAPSHOT_DIFF_ORACLE)
 def events_snapshot_diff_single_scan(spark, sf_dir):
-    """The single-scan form of events_snapshot_diff (VERDICT r8 item
-    6): both point-in-time states as conditional max_by aggregates
-    (ts<=T1 / ts<=T2) in ONE pass over the T2-pruned changelog -- one
-    scan, one partial-aggregated shuffle, no join at all, vs the
-    two-snapshot FULL-OUTER form (kept registered above as the
-    cross-check; both share the window-formulation oracle, so three
-    formulations must agree).  The ts<=T2 predicate pushes to the
+    """Diff two point-in-time states of the changelog-reconstructed
+    table: added / removed / changed / unchanged per key, NULL-safe on
+    the payload.  'removed' is a key whose T2 state is a tombstone;
+    'added' first appeared after T1.  Both states are conditional
+    max_by aggregates (ts<=T1 / ts<=T2) in ONE pass over the T2-pruned
+    changelog -- one scan, one partial-aggregated shuffle, no join at
+    all, checked against the window-formulation oracle (two snapshots
+    and a FULL OUTER JOIN).  The ts<=T2 predicate pushes to the
     parquet scan, which at 100 TB is the date-partition pruning that
     skips every file after the newer snapshot.
 

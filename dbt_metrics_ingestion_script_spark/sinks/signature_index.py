@@ -1,27 +1,22 @@
-"""Materialized dedup signature indexes (the production incremental
-form).
+"""Materialized MinHash dedup index (the production incremental form).
 
-The incremental dedup operators (`near_dedup_against_corpus`,
-`embedding_dedup_against_corpus`) document that at scale the corpus
-side is a PRECOMPUTED index -- history signatured once, every crawl
-batch joining it instead of re-deriving signatures for 100 TB of
-already-ingested text.  This module is that materialization:
+`near_dedup_against_corpus` documents that at scale the corpus side is
+a PRECOMPUTED index -- history signatured once, every crawl batch
+joining it instead of re-deriving signatures for 100 TB of
+already-ingested text.  This module is that materialization: the
+(id, band, bucket) banded-signature frame, written partitioned by
+`band` (band-key joins prune to the band's files), plus the
+(id, shingles) hashed-shingle frame the exact Jaccard verify reads.
 
-- MinHash text index: the (id, band, bucket) banded-signature frame,
-  written partitioned by `band` (band-key joins prune to the band's
-  files), plus the (id, shingles) hashed-shingle frame the exact
-  Jaccard verify reads.
-- Embedding index: the (id, unit, bucket) hyperplane-signature frame.
-
-Each index carries a `_geometry.json` sidecar recording the build
-parameters (n/k/bands, n_planes/dim).  The readers REQUIRE the caller's
-expected geometry and fail loudly on mismatch: a batch signatured with
+The index carries a `_geometry.json` sidecar recording the build
+parameters (n/k/bands).  The reader REQUIRES the caller's expected
+geometry and fails loudly on mismatch: a batch signatured with
 different geometry silently finds zero candidates -- the worst failure
 mode for a dedup gate is passing everything -- so geometry drift must
 be an error, never a quiet recall collapse.
 
 Growing the index: append each batch's surviving rows' signature frames
-(same writers, mode="append") -- signatures are pure row-local
+(same writer, mode="append") -- signatures are pure row-local
 functions of content, so appends never invalidate existing entries.
 """
 
@@ -32,11 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.dedup import (
-    _banded_minhash,
-    embedding_signature_index,
-    shingle_frame,
-)
+from ..operators.dedup import _banded_minhash, shingle_frame
 
 _GEOMETRY_FILE = "_geometry.json"
 
@@ -101,30 +92,3 @@ def read_minhash_index(
         spark.read.parquet(os.path.join(out_dir, "shingles")),
     )
 
-
-def write_embedding_index(
-    corpus: DataFrame,
-    out_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    dim: int = 64,
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the (id, unit, bucket) hyperplane-signature index
-    for `embedding_dedup_against_index`."""
-    geometry = {"type": "embedding", "n_planes": n_planes, "dim": dim}
-    embedding_signature_index(corpus, id_col, vec_col, n_planes, dim).write.mode(
-        mode
-    ).parquet(os.path.join(out_dir, "vectors"))
-    _write_geometry(out_dir, geometry)
-
-
-def read_embedding_index(
-    spark: SparkSession,
-    out_dir: str,
-    n_planes: int = 8,
-    dim: int = 64,
-) -> DataFrame:
-    _check_geometry(out_dir, {"type": "embedding", "n_planes": n_planes, "dim": dim})
-    return spark.read.parquet(os.path.join(out_dir, "vectors"))

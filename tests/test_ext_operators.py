@@ -2912,70 +2912,6 @@ def test_training_set_assembly_null_fill_before_history(spark):
     assert row["n_1h"] is None and row["value_7d"] is None
 
 
-def test_bucketed_join_is_shuffle_free_and_prunes_buckets(spark, sf_dir):
-    """Bucketing pays the join shuffle once at WRITE time: two tables
-    bucketed on the same key/count sort-merge-join with ZERO Exchange
-    (Spark 3+ still adds a partition-local Sort unless the legacy
-    bucketedTableScan.outputOrdering flag is on -- an in-memory pass,
-    not a shuffle), an equality filter on the bucket key scans
-    1/n_buckets of the files, and the co-located join returns exactly
-    the plain join's rows."""
-    from pyspark.sql import functions as F
-
-    from dbt_metrics_ingestion_script_spark.sources.bucketed import (
-        write_bucketed,
-    )
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        F.col("c_custkey").alias("o_custkey"), "c_acctbal"
-    )
-    t_o, t_c = "bktest_orders", "bktest_customer"
-    try:
-        # repartition(1): one writer task -> one file per bucket, the
-        # layout that lets the join reuse the write-time sort order
-        write_bucketed(orders.repartition(1), t_o, ["o_custkey"], n_buckets=4)
-        write_bucketed(customer.repartition(1), t_c, ["o_custkey"], n_buckets=4)
-        bo, bc = spark.table(t_o), spark.table(t_c)
-        j = bo.hint("merge").join(bc, "o_custkey")
-        from .conftest import SF_DIR  # noqa: F401  (plan_of lives in plan tests)
-
-        plan = j._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "simple"
-            )
-        )
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-        # co-located result == plain shuffled join result
-        want = orders.join(customer, "o_custkey").count()
-        assert j.count() == want
-        # bucket pruning: equality on the bucket key touches 1 of 4.
-        # autoBucketedScan (default on) disables bucketed reading for
-        # scan-only plans where no operator consumes the distribution,
-        # which also forfeits pruning -- pin it off for the probe, as a
-        # pruning-reliant production job would
-        auto = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-        prev = spark.conf.get(auto)
-        try:
-            spark.conf.set(auto, "false")
-            some_key = bo.select("o_custkey").first()[0]
-            pruned = bo.where(F.col("o_custkey") == some_key)
-            pplan = pruned._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
-            assert "SelectedBucketsCount: 1 out of 4" in pplan, pplan
-        finally:
-            spark.conf.set(auto, prev)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {t_o}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_c}")
-
-
 def test_ann_probe_sweep_monotone_and_ends_at_one(spark, sf_dir):
     """The IVF tuning curve: recall is nondecreasing in n_probe, and
     probing every list IS brute force, so the curve ends at exactly

@@ -1,16 +1,12 @@
 """EXT source/sink breadth: JSONL document ingestion with quarantine,
-bounded-size training-shard writing."""
+materialized MinHash signature indexes."""
 
 from __future__ import annotations
-
-import glob
-import os
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from dbt_metrics_ingestion_script_spark.sinks.shards import write_corpus_shards
 from dbt_metrics_ingestion_script_spark.sources.documents import (
     DOCUMENTS_SCHEMA,
     read_documents_jsonl,
@@ -88,33 +84,6 @@ def test_jsonl_round_trip_matches_parquet_table(spark, sf_dir, tmp_path):
     assert a == b
 
 
-def test_shard_writer_bounds_file_sizes(spark, sf_dir, tmp_path):
-    """Shard directories per lang; every parquet file holds at most
-    max_records_per_file rows; the written data round-trips."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang"
-    )
-    out = str(tmp_path / "shards")
-    write_corpus_shards(docs, out, shard_col="lang", max_records_per_file=40)
-    langs = {r["lang"] for r in docs.select("lang").distinct().collect()}
-    dirs = {
-        os.path.basename(d).split("=", 1)[1]
-        for d in glob.glob(f"{out}/lang=*")
-    }
-    assert dirs == langs
-    import pyarrow.parquet as pq
-
-    for f in glob.glob(f"{out}/lang=*/*.parquet"):
-        assert pq.read_metadata(f).num_rows <= 40, f
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-    assert sorted(tuple(r) for r in back.select("doc_id", "text", "lang").collect()) == sorted(
-        tuple(r) for r in docs.collect()
-    )
-    with pytest.raises(ValueError, match="max_records_per_file"):
-        write_corpus_shards(docs, out, max_records_per_file=0)
-
-
 # ---------------------------------------------------------------------------
 # materialized signature indexes
 # ---------------------------------------------------------------------------
@@ -147,30 +116,6 @@ def test_minhash_index_roundtrip_matches_inline(spark, sf_dir, tmp_path):
         for r in dedup.near_dedup_against_corpus(
             batch, corpus, k=16, bands=4, threshold=0.8
         ).collect()
-    )
-    assert got == expected and 0 < len(got) <= batch.count()
-
-
-def test_embedding_index_roundtrip_matches_inline(spark, sf_dir, tmp_path):
-    from pyspark.sql import functions as F
-
-    from dbt_metrics_ingestion_script_spark.operators import dedup
-    from dbt_metrics_ingestion_script_spark.sinks import signature_index as si
-    from dbt_metrics_ingestion_script_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.where(F.col("vec_id") % 3 == 0)
-    batch = emb.where(F.col("vec_id") % 3 != 0)
-    d = str(tmp_path / "emb_index")
-    si.write_embedding_index(corpus, d)
-    index = si.read_embedding_index(spark, d)
-    got = sorted(
-        r["vec_id"]
-        for r in dedup.embedding_dedup_against_index(batch, index, 0.4).collect()
-    )
-    expected = sorted(
-        r["vec_id"]
-        for r in dedup.embedding_dedup_against_corpus(batch, corpus, 0.4).collect()
     )
     assert got == expected and 0 < len(got) <= batch.count()
 

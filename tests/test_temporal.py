@@ -3,7 +3,7 @@
 
 Operator-level pins on synthetic frames -- the driver queries cover the
 oracle differentials; these pin the SEMANTICS edge cases: tombstone
-resolution, co-timestamped tie-breaks, NULL-payload diffs, the KMV
+resolution, co-timestamped tie-breaks, the KMV
 merge law on adversarial splits, and negative-sampling invariants.
 """
 
@@ -19,10 +19,7 @@ from dbt_metrics_ingestion_script_spark.operators.sketches import (
     kmv_merge,
     kmv_sketch,
 )
-from dbt_metrics_ingestion_script_spark.operators.temporal import (
-    snapshot_at,
-    snapshot_diff,
-)
+from dbt_metrics_ingestion_script_spark.operators.temporal import snapshot_at
 
 
 def _ts(day: int, sec: int = 0) -> datetime.datetime:
@@ -79,27 +76,6 @@ def test_snapshot_as_of_is_inclusive_and_historical(spark):
     assert got == {2: 5.0, 3: 2.0}
     # before any record: empty state
     assert _snap(spark, "2023-12-31 00:00:00").count() == 0
-
-
-def test_snapshot_diff_classifies_all_statuses(spark):
-    old = spark.createDataFrame(
-        [(1, 10.0), (2, 5.0), (3, None), (5, 7.0)], "k bigint, v double"
-    )
-    new = spark.createDataFrame(
-        [(1, 10.0), (3, None), (4, 4.0), (5, 8.0)], "k bigint, v double"
-    )
-    got = {
-        r["k"]: r["status"]
-        for r in snapshot_diff(old, new, key_col="k", value_cols=["v"]).collect()
-    }
-    # NULL payloads compare null-safely: key 3 is unchanged, not changed
-    assert got == {
-        1: "unchanged",
-        2: "removed",
-        3: "unchanged",
-        4: "added",
-        5: "changed",
-    }
 
 
 def test_kmv_merge_law_on_adversarial_split(spark):

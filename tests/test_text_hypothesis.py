@@ -289,7 +289,6 @@ EVENT_ANALYTICS_QUERIES = [
     "events_rolling_retention",
     "events_asof_last_order",
     "events_asof_last_order_bucketed",
-    "events_asof_last_order_lookup",
     "events_hopping_window_agg",
     "events_hopping_window_agg_daily6h",
     "events_interarrival_profile",
@@ -443,7 +442,6 @@ def test_event_analytics_agree_on_null_timestamps(spark, tmp_path_factory):
         "events_rolling_retention",
         "events_asof_last_order",
         "events_asof_last_order_bucketed",
-        "events_asof_last_order_lookup",
         # hopping windows: Spark's F.window drops NULL-ts rows; the
         # oracle's WHERE ts IS NOT NULL must match (a bare offset
         # unnest would count each NULL-ts event window/hop times)

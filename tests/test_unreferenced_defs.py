@@ -1,4 +1,4 @@
-"""Every top-level function of the package is referenced somewhere.
+"""Every top-level function and every module of the package is used.
 
 A def whose name no Python file of the repository references in code --
 as a name, an attribute or an imported name -- is dead code.  Mentions
@@ -6,6 +6,11 @@ in docstrings, comments and other strings do not count, and neither do
 a function's references to itself.  Functions decorated with
 `@register(...)` are reached through the query registry, so they count
 as used.
+
+A package module that only tests import is dead code too: it must be
+imported, itself or through one of its submodules, by a file outside
+`tests/` (the package, `perfbench/`, `scripts/`, `bench.py`,
+`__spark_entry__.py`).
 """
 
 from __future__ import annotations
@@ -15,6 +20,7 @@ import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, "dbt_metrics_ingestion_script_spark")
+TESTS = os.path.join(ROOT, "tests")
 
 
 def _py_files(top: str):
@@ -61,3 +67,53 @@ def test_no_unreferenced_top_level_defs():
         and node.name not in refs
     ]
     assert unreferenced == []
+
+
+def _module_name(path: str) -> str:
+    parts = os.path.relpath(path, ROOT)[: -len(".py")].split(os.sep)
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _imported_modules(path: str, tree: ast.AST) -> set[str]:
+    """Dotted names `path` imports: each `import` target, each `from`
+    module, and each `from` module joined with its imported names (which
+    may be submodules); relative imports resolved against the file's
+    package."""
+    package = _module_name(path)
+    if not path.endswith("__init__.py"):
+        package = package.rpartition(".")[0]
+    out = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            out |= {a.name for a in n.names}
+        elif isinstance(n, ast.ImportFrom):
+            base = n.module or ""
+            if n.level:
+                anchor = package.split(".")[: len(package.split(".")) - n.level + 1]
+                base = ".".join(anchor + ([base] if base else []))
+            out.add(base)
+            out |= {f"{base}.{a.name}" for a in n.names}
+    return out
+
+
+def test_every_package_module_is_imported_outside_tests():
+    imported: set[str] = set()
+    modules = {}
+    for path in _py_files(ROOT):
+        if path.startswith(TESTS + os.sep):
+            continue
+        name = _module_name(path)
+        imports = _imported_modules(path, ast.parse(open(path).read()))
+        # a file does not reach itself
+        imported |= imports - {name}
+        if path.startswith(PACKAGE + os.sep):
+            modules[name] = path
+    pkg = os.path.basename(PACKAGE)
+    unreached = sorted(
+        name[len(pkg) + 1 :]
+        for name in modules
+        if name != pkg
+        and name != f"{pkg}.__main__"
+        and not any(i == name or i.startswith(name + ".") for i in imported)
+    )
+    assert unreached == []
