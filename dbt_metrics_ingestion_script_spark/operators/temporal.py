@@ -7,7 +7,7 @@ builder (operators/sessions.py's interval frames) and the metric-store
 MERGE loop (operators/merge.py) -- this module is the read side: no
 mutable store needed, any historical state is a query over the log.
 The registered snapshot diff (``events_snapshot_diff_single_scan``)
-folds both states into one aggregate instead of joining two snapshots.
+folds both states into one aggregate over the same log.
 
 Scale shape (100 TB changelog):
 
