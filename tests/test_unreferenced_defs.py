@@ -89,8 +89,8 @@ def _imported_modules(path: str, tree: ast.AST) -> set[str]:
         elif isinstance(n, ast.ImportFrom):
             base = n.module or ""
             if n.level:
-                anchor = package.split(".")[: len(package.split(".")) - n.level + 1]
-                base = ".".join(anchor + ([base] if base else []))
+                anchor = package.rsplit(".", n.level - 1)[0]
+                base = f"{anchor}.{base}" if base else anchor
             out.add(base)
             out |= {f"{base}.{a.name}" for a in n.names}
     return out
@@ -98,22 +98,18 @@ def _imported_modules(path: str, tree: ast.AST) -> set[str]:
 
 def test_every_package_module_is_imported_outside_tests():
     imported: set[str] = set()
-    modules = {}
+    modules = set()
     for path in _py_files(ROOT):
         if path.startswith(TESTS + os.sep):
             continue
-        name = _module_name(path)
-        imports = _imported_modules(path, ast.parse(open(path).read()))
-        # a file does not reach itself
-        imported |= imports - {name}
+        imported |= _imported_modules(path, ast.parse(open(path).read()))
         if path.startswith(PACKAGE + os.sep):
-            modules[name] = path
+            modules.add(_module_name(path))
     pkg = os.path.basename(PACKAGE)
     unreached = sorted(
         name[len(pkg) + 1 :]
         for name in modules
-        if name != pkg
-        and name != f"{pkg}.__main__"
+        if name != f"{pkg}.__main__"
         and not any(i == name or i.startswith(name + ".") for i in imported)
     )
     assert unreached == []
